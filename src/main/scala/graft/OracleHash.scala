@@ -8,8 +8,9 @@ package graft
   * DuckDB oracle recomputes the signatures INDEPENDENTLY of the Spark side —
   * no materialized intermediates, a genuinely adversarial check.
   *
-  * Validated cell-by-cell against the reference kernel semantics
-  * (reference: internal/dedupe/dedupe.go:120-257) in tools/duck_simhash_proto.py.
+  * Validated against the reference kernel semantics (reference:
+  * internal/dedupe/dedupe.go:120-257) by the DuckDB oracle parity of the
+  * hash-bearing queries.
   */
 object OracleHash {
 

@@ -169,7 +169,7 @@ object OracleSql {
     */
   val ChunkCteRec: String = "WITH RECURSIVE " + ChunkCte.stripPrefix("WITH ")
 
-  /** Dialect twin of the within-doc dedup chain (DedupeOps.perDocDedupe with
+  /** Dialect twin of the within-doc dedup chain (ExtractionJob.dedup with
     * method "simhash"/"both"): SimHash signatures over the input chunks'
     * norms (exact-dedup survivors by default; the FULL filtered set for
     * method "both"), then the reference's greedy windowed scan. Appends to

@@ -91,7 +91,7 @@ object Queries {
           floor(col("n_chrome_dropped") * 10000.0 / col("n_chunks")).as("boilerplate_ratio_bp"))
     }),
 
-    // ---- sequential dedup (kernel inside flatMapGroups) — rows-only ----
+    // ---- sequential dedup (kernel inside each doc's row) — rows-only ----
     "q15_d1_dedup_kept" -> ((s, dir) =>
       ExtractionJob.dedup(corpus(s, dir))(s).filter(col("kept"))
         .select("doc_id", "id", "text", "norm", "idx")),

@@ -1,8 +1,8 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.kernel.DedupeConfig
+import graft.kernel.{Chunk, DedupeConfig, DedupeKernel, DedupeResult, TextKernel}
 import graft.ops._
 
 /** The flagship end-to-end pipeline — the graft of the reference's
@@ -10,17 +10,27 @@ import graft.ops._
   * interleaved docs table:
   *
   *   docs(doc_id, spans)
-  *     -> assemble   (per-row span fold + OCR map; ZERO shuffle)
-  *     -> chunk      (posexplode + ONE window exchange on doc_id)
-  *     -> chrome     (map-side filter, single combined regex)
-  *     -> dedupe     (per-doc sequential kernel via groupByKey(doc_id) —
-  *                    reuses the chunker's doc_id partitioning)
+  *     -> assemble   (per-row span fold + OCR map, Catalyst)
+  *     -> chunk -> chrome -> dedupe
+  *                   (the sequential kernel, run on each document inside
+  *                    its own row by one typed flatMap)
   *     -> spans out  (kept chunks as ordered text spans per doc)
   *
-  * Shuffle budget: one exchange on doc_id end-to-end (plus the tiny
-  * fallback anti-join). Large-document skew is bounded because per-doc
-  * work is O(chunks · window); doc PLACEMENT is what gets salted at the
-  * table-write level, not the scan (SURVEY.md §7.4.2).
+  * The reference runs chunk -> chrome -> dedup as one sequential pass over
+  * one document (main.go:214-284), and here a document already is one row,
+  * so [[dedup]], [[outputSpans]] and [[metrics]] plan with no exchange at
+  * all. Large-document skew is bounded because per-doc work is
+  * O(chunks · window); doc PLACEMENT is what gets salted at the table-write
+  * level, not the scan (SURVEY.md §7.4.2).
+  *
+  * Contract: each input ROW is one document. Two rows that share a doc_id
+  * are two documents: each is deduped on its own, and both rows' output
+  * carries that doc_id. A row whose assembled text is null (null `spans`)
+  * yields no output rows.
+  *
+  * [[chunks]] and [[filteredChunks]] are the Catalyst form of the first two
+  * stages; they serve the chunk-level queries, and PipelineSpec pins them
+  * to the kernel.
   */
 object ExtractionJob {
 
@@ -40,6 +50,10 @@ object ExtractionJob {
       // reference default is TRUE (cmd/pipeline/main.go:75)
       emitChunksJsonl: Boolean = true)
 
+  /** One kept chunk as an output text span. */
+  final case class OutSpan(
+      doc_id: String, kind: String, text: String, media_ref: String, order: Long)
+
   def chunks(docs: DataFrame, minChunkChars: Int = Corpus.MinChunkChars): DataFrame = {
     val assembled = Corpus.assemble(docs)
     Chunker.chunk(assembled, col("raw"), minChunkChars)
@@ -51,15 +65,72 @@ object ExtractionJob {
     chunks(docs, cfg.minChunkChars).filter(
       Exprs.chromeKeep(col("norm"), cfg.chromePatterns, Corpus.ChromeMaxLength))
 
+  /** One document after the per-doc pipeline: `nSpans` input spans, `nChunks`
+    * chunks, of which `filtered` survived the chrome filter and went into
+    * the dedup kernel.
+    */
+  private final case class DocResult(
+      nSpans: Long, nChunks: Int, filtered: Vector[Chunk], dedupe: DedupeResult)
+
+  /** The one per-document path: chunkText -> chrome -> dedupe on each row of
+    * `docs`, then only `emit`'s rows are exploded. The chrome patterns are
+    * compiled once per job here, not once per document.
+    */
+  private def perDoc[T: Encoder](docs: DataFrame, cfg: PipelineConfig)(
+      emit: (String, DocResult) => Iterator[T])(implicit spark: SparkSession): Dataset[T] = {
+    import spark.implicits._
+    val isChrome = TextKernel.chromePredicate(cfg.chromePatterns, Corpus.ChromeMaxLength)
+    val minChars = cfg.minChunkChars
+    val dedupe = cfg.dedupe.validated
+    Corpus.assembleWith(docs, size(col("spans")).cast("long").as("n_spans"))
+      .filter(col("raw").isNotNull)
+      .as[(String, Long, String)]
+      .flatMap { case (docId, nSpans, raw) =>
+        val chunks = TextKernel.chunkText(raw, minChars)
+        val filtered = chunks.filterNot(isChrome)
+        emit(docId, DocResult(nSpans, chunks.length, filtered,
+          DedupeKernel.dedupe(filtered, dedupe)))
+      }
+  }
+
   /** Full dedup output (kept + dropped audit in one frame). */
   def dedup(docs: DataFrame, config: DedupeConfig = DedupeConfig())(
       implicit spark: SparkSession): DataFrame =
-    DedupeOps.perDocDedupe(filteredChunks(docs), config).toDF()
+    dedupWith(docs, PipelineConfig(dedupe = config))
 
-  /** Full dedup output under a complete [[PipelineConfig]]. */
+  /** Full dedup output under a complete [[PipelineConfig]]: [[DedupRow]]s,
+    * the doc's kept chunks in kept order, then its dropped chunks.
+    */
   def dedupWith(docs: DataFrame, cfg: PipelineConfig)(
-      implicit spark: SparkSession): DataFrame =
-    DedupeOps.perDocDedupe(filteredChunks(docs, cfg), cfg.dedupe).toDF()
+      implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    perDoc(docs, cfg) { (docId, d) =>
+      val kept = d.dedupe.kept.iterator.zipWithIndex.map { case (c, ord) =>
+        DedupRow(docId, c.id, c.text, c.norm, c.index.toLong, kept = true, "", "", 0, "",
+          ord.toLong)
+      }
+      lazy val byId = d.filtered.iterator.map(c => c.id -> c).toMap
+      val dropped = d.dedupe.dropped.iterator.map { x =>
+        val c = byId(x.chunkId)
+        DedupRow(docId, c.id, c.text, c.norm, c.index.toLong, kept = false,
+          x.reason, x.matchedChunkId, x.distance, x.preview, -1L)
+      }
+      kept ++ dropped
+    }.toDF()
+  }
+
+  /** Kept chunks as ordered text spans — the path [[outputSpans]] and
+    * graft.streaming.StreamingExtraction share.
+    */
+  private[graft] def keptSpans(docs: DataFrame, cfg: PipelineConfig)(
+      implicit spark: SparkSession): Dataset[OutSpan] = {
+    import spark.implicits._
+    perDoc(docs, cfg) { (docId, d) =>
+      d.dedupe.kept.iterator.zipWithIndex.map { case (c, i) =>
+        OutSpan(docId, "text", c.text, "", i.toLong)
+      }
+    }
+  }
 
   /** The output span sequence per doc: kept chunks as ordered text spans
     * (kind, text, media_ref="", order) — the BASELINE.json per-row
@@ -67,47 +138,22 @@ object ExtractionJob {
     */
   def outputSpans(docs: DataFrame, config: DedupeConfig = DedupeConfig())(
       implicit spark: SparkSession): DataFrame =
-    dedup(docs, config)
-      .filter(col("kept"))
-      .select(
-        col("doc_id"),
-        lit("text").as("kind"),
-        col("text"),
-        lit("").as("media_ref"),
-        // kept order is emitted by the per-doc kernel — no window needed
-        col("kept_order").as("order"))
+    keptSpans(docs, PipelineConfig(dedupe = config)).toDF()
 
   /** A4 — per-doc extraction metrics (north_star: spans/doc, boilerplate
-    * ratio, dedup rate) in ONE pass: `size(spans)` rides through assemble
-    * and the chunker as a carried column, chrome verdicts are a map-side
-    * flag, and one `groupByKey(doc_id)` computes chunk counts AND runs the
-    * dedup kernel on the keepers — one chunker subtree, one exchange, no
-    * joins (the former shape built the chunk pipeline twice and joined
-    * three frames). Emits one row per doc that produced >= 1 chunk.
+    * ratio, dedup rate), one row per doc that produced >= 1 chunk,
+    * chrome-dropped or not; zero-CHUNK docs emit no row.
     */
   def metrics(docs: DataFrame, config: DedupeConfig = DedupeConfig())(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val assembled = Corpus.assembleWith(docs, size(col("spans")).cast("long").as("n_spans"))
-    val ch = Chunker.chunk(assembled, col("raw"), Corpus.MinChunkChars,
-      passThrough = Seq("n_spans"))
-    val keep = Exprs.chromeKeep(col("norm"), ChromePatterns, Corpus.ChromeMaxLength)
-    val cfg = config.validated
-    ch.select(col("doc_id"), col("id"), col("text"), col("norm"), col("idx"),
-        keep.as("keep"), col("n_spans"))
-      .as[(String, String, String, String, Long, Boolean, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (docId, it) =>
-        val rows = it.toArray.sortBy(_._5)
-        val nChunks = rows.length.toLong
-        val nChromeDropped = rows.count(!_._6).toLong
-        val keepers = rows.iterator.filter(_._6)
-          .map(r => graft.kernel.Chunk(r._2, r._3, r._4, r._5.toInt)).toSeq
-        val st = graft.kernel.DedupeKernel.dedupe(keepers, cfg).stats
-        (docId, rows.head._7, nChunks, nChromeDropped,
-          st.inputCount.toLong, st.keptCount.toLong, st.droppedCount.toLong,
-          st.exactDups.toLong, st.nearDups.toLong)
-      }
+    perDoc(docs, PipelineConfig(dedupe = config)) { (docId, d) =>
+      val st = d.dedupe.stats
+      if (d.nChunks == 0) Iterator.empty
+      else Iterator.single((docId, d.nSpans, d.nChunks.toLong,
+        (d.nChunks - d.filtered.length).toLong, st.inputCount.toLong, st.keptCount.toLong,
+        st.droppedCount.toLong, st.exactDups.toLong, st.nearDups.toLong))
+    }
       .toDF("doc_id", "n_spans", "n_chunks", "n_chrome_dropped",
         "input_count", "kept_count", "dropped_count", "exact_dups", "near_dups")
       .select(
@@ -117,8 +163,6 @@ object ExtractionJob {
         // integer-quantized ratios (floor(x*10000)) keep the metrics
         // deterministic across engines; a doc whose chunks were ALL
         // chrome-dropped has input_count=0 — its dedup rate is 0, not null
-        // (the contract is one metrics row per doc that produced >= 1
-        // chunk, chrome-dropped or not; zero-CHUNK docs emit no row)
         floor(col("n_chrome_dropped") * 10000.0 / col("n_chunks")).as("boilerplate_ratio_bp"),
         when(col("input_count") > 0,
           floor(col("dropped_count") * 10000.0 / col("input_count")))

@@ -49,9 +49,10 @@ final case class DedupeConfig(
 
 /** Pure sequential dedup kernel — the reference's semantics exactly
   * (reference: internal/dedupe/dedupe.go:74-359). This is both the test
-  * oracle and the per-document engine run inside one Spark task via
-  * `flatMapGroups` (a document's greedy scan is inherently order-dependent
-  * and must never be parallelized within the doc — SURVEY.md §7.4.2).
+  * oracle and the per-document engine run inside each document's own row
+  * (graft.jobs.ExtractionJob; a document's greedy scan is inherently
+  * order-dependent and must never be parallelized within the doc —
+  * SURVEY.md §7.4.2).
   */
 object DedupeKernel {
 

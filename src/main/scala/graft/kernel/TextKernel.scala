@@ -19,11 +19,12 @@ final case class Chunk(id: String, text: String, norm: String, index: Int)
   * mirrors; the ScalaTest suite locks the reference's own unit-test vectors
   * (reference: internal/text/text_test.go).
   *
-  * This kernel is used (a) as the sequential oracle in tests, and (b) inside
-  * per-document `flatMapGroups` tasks where the semantics are inherently
-  * sequential (greedy windowed dedup). The distributed column layer in
-  * `graft.ops` re-expresses the SQL-expressible subset with Catalyst
-  * built-ins and is fixture-tested against this kernel.
+  * This kernel is used (a) as the sequential oracle in tests, and (b) as the
+  * per-document engine of the flagship pipeline, run inside each document's
+  * own row (graft.jobs.ExtractionJob) because the greedy windowed dedup is
+  * inherently sequential. The distributed column layer in `graft.ops`
+  * re-expresses the SQL-expressible subset with Catalyst built-ins and is
+  * fixture-tested against this kernel.
   */
 object TextKernel {
 
@@ -93,28 +94,20 @@ object TextKernel {
     * post-filter (survivor position). Fallback: if nothing survived but the
     * whole trimmed text is >= minChars bytes, emit it as the single chunk.
     */
-  /** Surviving trimmed segments in document order, including the whole-text
-    * fallback — chunkText minus id/norm assignment. Shared by the kernel and
-    * the distributed chunker's per-document UDF (graft.ops.Chunker).
-    */
-  def chunkSegments(text: String, minChars: Int): Array[String] = {
-    if (text.isEmpty) return Array.empty
+  def chunkText(text: String, minChars: Int): Vector[Chunk] = {
+    if (text.isEmpty) return Vector.empty
     // Go regexp.Split(-1) == Java split(regex, -1) (keeps trailing empties).
-    val segments = blankLinePattern.split(text, -1)
-    val out = segments.iterator
+    val survivors = blankLinePattern.split(text, -1).iterator
       .map(goTrimSpace)
       .filter(byteLen(_) >= minChars)
-      .toArray
-    if (out.isEmpty) {
-      val trimmed = goTrimSpace(text)
-      if (byteLen(trimmed) >= minChars) Array(trimmed) else Array.empty
-    } else out
-  }
-
-  def chunkText(text: String, minChars: Int): Vector[Chunk] =
-    chunkSegments(text, minChars).iterator.zipWithIndex.map { case (t, idx) =>
+      .toVector
+    val segments =
+      if (survivors.nonEmpty) survivors
+      else Vector(goTrimSpace(text)).filter(byteLen(_) >= minChars)
+    segments.zipWithIndex.map { case (t, idx) =>
       Chunk(f"c${idx + 1}%04d", t, normalize(t), idx)
-    }.toVector
+    }
+  }
 
   /** Default chrome patterns, applied to NORMALIZED text
     * (reference: internal/text/text.go:23-30).
@@ -132,12 +125,16 @@ object TextKernel {
     * patterns are silently skipped (text.go:132-139). `maxLength` is
     * hardcoded to 100 at the reference call site (cmd/pipeline/main.go:226).
     */
-  def filterChrome(chunks: Seq[Chunk], patterns: Seq[String], maxLength: Int): Vector[Chunk] = {
-    if (patterns.isEmpty) return chunks.toVector
-    val compiled = patterns.flatMap(p => Try(Pattern.compile(p)).toOption)
-    chunks.iterator.filterNot { c =>
-      byteLen(c.norm) < maxLength && compiled.exists(_.matcher(c.norm).find())
-    }.toVector
+  def filterChrome(chunks: Seq[Chunk], patterns: Seq[String], maxLength: Int): Vector[Chunk] =
+    chunks.iterator.filterNot(chromePredicate(patterns, maxLength)).toVector
+
+  /** The [[filterChrome]] drop test with its patterns compiled once: true iff
+    * the chunk is chrome. Build it once per job (the function and its
+    * compiled patterns are serializable), not once per document.
+    */
+  def chromePredicate(patterns: Seq[String], maxLength: Int): Chunk => Boolean = {
+    val compiled = patterns.flatMap(p => Try(Pattern.compile(p)).toOption).toVector
+    c => byteLen(c.norm) < maxLength && compiled.exists(_.matcher(c.norm).find())
   }
 
   /** Truncate to `max` BYTES then append "..." (reference preview/JSONL

@@ -13,49 +13,15 @@ import org.apache.spark.sql.functions._
   * per-row array fold — split/trim/filter inside array lambdas, fallback as
   * a `when` on the empty array, then ONE posexplode whose position IS the
   * survivor index (the array filter already removed non-survivors, so no
-  * re-rank window, no anti-join, no shuffle at all). The first exchange in
-  * the pipeline is whatever the next operator needs (per-doc dedup), not
-  * chunking.
+  * re-rank window, no anti-join, no shuffle at all). The semantics are
+  * pinned to TextKernel.chunkText by PipelineSpec.
   */
 object Chunker {
 
-  /** Split raw text into surviving trimmed segments — the kernel's chunkText
-    * minus id/norm assignment (reference: internal/text/text.go:69-121), as
-    * ONE compiled UDF call per doc. A/B-benchmarked against the declarative
-    * HOF form at 480k docs / local[32]: equal within VM noise (~31k vs ~30k
-    * docs/s, swings ±20% from co-tenant steal) — the chunker is NOT the
-    * pipeline bottleneck (the per-doc dedup kernel + the one exchange are),
-    * so the no-UDF declarative form stays the default and this twin is kept
-    * for the A/B knob (SPARK_GRAFT_CHUNKER=udf).
-    */
-  private val survivorsU = udf { (raw: String, minChars: Int) =>
-    if (raw == null) Array.empty[String]
-    else graft.kernel.TextKernel.chunkSegments(raw, minChars)
-  }
-
   /** Chunk `rawCol` of `docs` (one row per doc) into
     * (doc_id, id, text, norm, idx) rows. Zero-shuffle.
-    * (SPARK_GRAFT_CHUNKER=udf selects the kernel-UDF twin — bench A/B knob.)
     */
-  def chunk(docs: DataFrame, rawCol: Column, minChars: Int = Corpus.MinChunkChars,
-      passThrough: Seq[String] = Nil): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_CHUNKER").contains("udf"))
-      chunkKernelUdf(docs, rawCol, minChars, passThrough)
-    else chunkDeclarative(docs, rawCol, minChars, passThrough)
-
-  /** The kernel-UDF formulation (one compiled call per doc); row-identical
-    * to [[chunkDeclarative]] (PipelineSpec locks it).
-    */
-  def chunkKernelUdf(docs: DataFrame, rawCol: Column, minChars: Int = Corpus.MinChunkChars,
-      passThrough: Seq[String] = Nil): DataFrame =
-    explodeChunks(docs, survivorsU(rawCol, lit(minChars)), passThrough)
-
-  /** The declarative (built-in HOF) formulation of [[chunk]] — semantically
-    * identical to the kernel-UDF twin (both derive from
-    * TextKernel.chunkSegments semantics); the default.
-    */
-  def chunkDeclarative(docs: DataFrame, rawCol: Column, minChars: Int = Corpus.MinChunkChars,
-      passThrough: Seq[String] = Nil): DataFrame = {
+  def chunk(docs: DataFrame, rawCol: Column, minChars: Int = Corpus.MinChunkChars): DataFrame = {
     val survivors = filter(
       transform(split(rawCol, Exprs.blankLineSplit, -1), s => Exprs.trimGoWs(s)),
       s => octet_length(s) >= minChars)
@@ -65,20 +31,13 @@ object Chunker {
     val chunksArr = when(
       size(survivors) === 0 && octet_length(whole) >= minChars,
       array(whole)).otherwise(survivors)
-    explodeChunks(docs, chunksArr, passThrough)
-  }
-
-  private def explodeChunks(docs: DataFrame, chunksArr: Column,
-      passThrough: Seq[String]): DataFrame = {
-    val carried = passThrough.map(col)
     docs
-      .select((col("doc_id") +: carried) :+ posexplode(chunksArr).as(Seq("pos", "text")): _*)
+      .select(col("doc_id"), posexplode(chunksArr).as(Seq("pos", "text")))
       .select(
-        (col("doc_id") +:
-          concat(lit("c"), lpad((col("pos") + 1).cast("string"), 4, "0")).as("id") +:
-          col("text") +:
-          Exprs.normCol(col("text")).as("norm") +:
-          col("pos").cast("long").as("idx") +:
-          carried): _*)
+        col("doc_id"),
+        concat(lit("c"), lpad((col("pos") + 1).cast("string"), 4, "0")).as("id"),
+        col("text"),
+        Exprs.normCol(col("text")).as("norm"),
+        col("pos").cast("long").as("idx"))
   }
 }

@@ -199,17 +199,15 @@ object Corpus {
       // production table gets from its scan. EXPLICIT count: AQE sizes
       // coalescing by the exchange's bytes, which are tiny BEFORE the
       // corpus expansion — it coalesced this to 1 task (observed);
-      // user-specified counts are exempt. The oversubscription factor is
-      // parameterised (SPARK_GRAFT_INPUT_SPREAD, default x2): oversubscribing
-      // smooths doc-length skew across the scaling legs, but every extra map
+      // user-specified counts are exempt. Oversubscribing x2 smooths
+      // doc-length skew across the scaling legs, but every extra map
       // partition is an extra shuffle file per downstream exchange, and the
       // r6 pipeline profile showed FileOutputStream.open0 as the top
       // non-idle executor frame at x4 (jstack, 142/~500 samples). Measured
       // at sf0.1 replicate=8 on 32 cores: x1 ~1.00 s, x2 ~1.09 s, x4
       // ~1.3 s per pipeline pass — x2 keeps half the smoothing headroom at
       // ~3/4 of the x1 win (OPTIMIZATION_r06.md).
-      .repartition(spark.sparkContext.defaultParallelism *
-        sys.env.getOrElse("SPARK_GRAFT_INPUT_SPREAD", "2").toInt, col("src_id"))
+      .repartition(spark.sparkContext.defaultParallelism * 2, col("src_id"))
     val base =
       if (replicate <= 1) base0.withColumn("doc_id", col("src_id"))
       else base0

@@ -1,15 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.kernel.{Chunk, DedupeConfig, DedupeKernel}
 
-/** Chunk row as it flows through the distributed pipeline. */
-final case class ChunkRow(doc_id: String, id: String, text: String, norm: String, idx: Long)
-
-/** Output row of the per-doc dedup: kept chunks and dropped-audit rows in
-  * one frame, discriminated by `kept`.
+/** Output row of the per-doc dedup (graft.jobs.ExtractionJob.dedup): kept
+  * chunks and dropped-audit rows in one frame, discriminated by `kept`.
   */
 final case class DedupRow(
     doc_id: String, id: String, text: String, norm: String, idx: Long,
@@ -22,9 +18,9 @@ final case class DedupRow(
   *   - WITHIN a document: the reference's sequential semantics (exact SHA1
   *     pre-pass + greedy windowed SimHash). Exact dedup alone is expressible
   *     as a window function ([[exactKept]]/[[exactDropped]]); the greedy
-  *     scan is order-dependent and runs as the kernel inside ONE task per
-  *     doc via groupByKey+flatMapGroups ([[perDocDedupe]]) — per-doc state
-  *     is bounded (chunks/doc), so tasks stay small at any corpus scale.
+  *     scan is order-dependent and runs as the kernel inside each
+  *     document's own row (graft.jobs.ExtractionJob.dedup) — no shuffle,
+  *     and per-doc state is bounded (chunks/doc).
   *   - ACROSS documents: banded LSH self-join over (doc_id, simhash64)
   *     projections only ([[LshDedup]]) — flags near-duplicate documents
   *     without shuffling span payloads (north_star).
@@ -82,32 +78,4 @@ object DedupeOps {
       sum(when(!col("kept"), 1L).otherwise(0L)).as("dropped_count"),
       sum(when(col("reason") === "exact_duplicate", 1L).otherwise(0L)).as("exact_dups"),
       sum(when(col("reason") === "near_duplicate", 1L).otherwise(0L)).as("near_dups"))
-
-  /** D1+D2 within-doc dedup with full reference semantics. One shuffle on
-    * doc_id (usually reusing the chunker's window partitioning), then the
-    * sequential kernel per group. NEVER parallelize inside a doc — the
-    * greedy scan is order-dependent (SURVEY.md §7.4.2).
-    */
-  def perDocDedupe(chunks: DataFrame, config: DedupeConfig)(implicit spark: SparkSession): Dataset[DedupRow] = {
-    import spark.implicits._
-    val cfg = config.validated
-    chunks.select("doc_id", "id", "text", "norm", "idx").as[ChunkRow]
-      .groupByKey(_.doc_id)
-      .flatMapGroups { (docId, it) =>
-        val rows = it.toArray.sortBy(_.idx)
-        val kernelChunks = rows.map(r => Chunk(r.id, r.text, r.norm, r.idx.toInt)).toSeq
-        val result = DedupeKernel.dedupe(kernelChunks, cfg)
-        val byId = rows.map(r => r.id -> r).toMap
-        val keptRows = result.kept.iterator.zipWithIndex.map { case (c, ord) =>
-          val r = byId(c.id)
-          DedupRow(docId, r.id, r.text, r.norm, r.idx, kept = true, "", "", 0, "", ord.toLong)
-        }
-        val droppedRows = result.dropped.iterator.map { d =>
-          val r = byId(d.chunkId)
-          DedupRow(docId, r.id, r.text, r.norm, r.idx, kept = false,
-            d.reason, d.matchedChunkId, d.distance, d.preview, -1L)
-        }
-        keptRows ++ droppedRows
-      }
-  }
 }

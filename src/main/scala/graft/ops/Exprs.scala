@@ -46,10 +46,6 @@ object Exprs {
     */
   val blankLineSplit: String = TextKernel.blankLineSplit
 
-  /** Go-TrimSpace for ASCII whitespace — covers this corpus exactly; the
-    * byte-exact general form lives in the kernel and runs in the
-    * flatMapGroups pipeline.
-    */
   /** Go `strings.TrimSpace` trim set — the FULL Unicode White_Space property
     * (TextKernel.isGoSpace), not just ASCII: tab, LF, VT, FF, CR, space,
     * NEL, NBSP, OGHAM SPACE MARK, U+2000-200A, LINE/PARA SEPARATOR,

@@ -29,6 +29,7 @@ object LshDedup {
     * (doc_a, doc_b, distance) with distance <= threshold and doc_a < doc_b.
     */
   def nearDupPairs(sigs: DataFrame, threshold: Int): DataFrame = {
+    require(threshold >= 0, s"Hamming threshold must be >= 0, got $threshold")
     require(threshold < Bands, s"banded LSH with $Bands bands has exact recall only for threshold < $Bands")
     // Materialize the signature table ONCE (lazy localCheckpoint — no eager
     // job; first action fills the blocks): the join sides below otherwise
@@ -225,18 +226,15 @@ object LshDedup {
         .join(delta.withColumnRenamed("doc_id", "y"), Seq("y"))
         .groupBy(col("x").as("doc_id"))
         .agg(min(col("winner")).as("msg"), count(lit(1)).as("n_msgs"))
-      val updPlan = labels.join(msgs, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("prev"),
-          least(col("prev"), coalesce(col("msg"), col("prev"))).as("w1"),
-          coalesce(col("n_msgs"), lit(0L)).as("n_msgs"))
       // Lazily truncate upd once per round: the jump step below references
       // upd FIVE times (changed filter, stale semi-join, lookup side, and
       // the final join); unmaterialized, each reference re-evaluated the
       // labels⋈msgs join subtree within the round's job.
-      // (SPARK_GRAFT_CC_UPD=plain disables the truncation — dev A/B knob.)
-      val upd =
-        if (sys.env.get("SPARK_GRAFT_CC_UPD").contains("plain")) updPlan
-        else updPlan.localCheckpoint(eager = false)
+      val upd = labels.join(msgs, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("prev"),
+          least(col("prev"), coalesce(col("msg"), col("prev"))).as("w1"),
+          coalesce(col("n_msgs"), lit(0L)).as("n_msgs"))
+        .localCheckpoint(eager = false)
       // (2) pointer jump for the live set: rows that changed this round,
       //     plus rows whose pointer TARGET changed this round (their
       //     w1(w1(x)) just dropped) — staleness never accumulates, and the

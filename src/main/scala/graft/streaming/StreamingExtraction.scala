@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import graft.kernel.{DedupeConfig, DedupeKernel, TextKernel}
+import graft.jobs.ExtractionJob
+import graft.jobs.ExtractionJob.{OutSpan, PipelineConfig}
+import graft.kernel.{DedupeConfig, TextKernel}
 import graft.ops.Corpus
 
 /** Incremental (Structured Streaming) extraction over the interleaved docs
@@ -9,20 +11,16 @@ import graft.ops.Corpus
   * but the graft's data model makes incremental ingestion natural: ONE input
   * row carries a COMPLETE document `(doc_id, spans)`, so the whole reference
   * pipeline — assemble (offset-ordered span fold + OCR map), chunk, chrome
-  * filter, and the order-dependent greedy dedup — is per-row and runs inside
-  * one STATELESS flatMap via the sequential kernel.
+  * filter, and the order-dependent greedy dedup — is per-row. The stream
+  * therefore runs the batch pipeline's own per-document path
+  * (ExtractionJob's one stateless flatMap).
   *
   * Scale shape: no streaming state, no watermark, no shuffle — every
   * micro-batch is a map-only job, so throughput scales linearly with
   * executors exactly like the batch map stages, and a `foreachBatch` sink
   * can append into the SnapshotTable layout for unified batch/stream output.
-  * Semantics are locked to the batch pipeline by StreamingSpec (same rows in
-  * => same spans out, streamed vs batch).
   */
 object StreamingExtraction {
-
-  final case class OutSpan(
-      doc_id: String, kind: String, text: String, media_ref: String, order: Long)
 
   /** docs stream (doc_id, spans) -> kept output spans, append-mode safe. */
   def outputSpans(
@@ -30,19 +28,8 @@ object StreamingExtraction {
       config: DedupeConfig = DedupeConfig(),
       minChunkChars: Int = Corpus.MinChunkChars,
       chromePatterns: Seq[String] = TextKernel.defaultChromePatterns)(
-      implicit spark: SparkSession): Dataset[OutSpan] = {
-    import spark.implicits._
-    val cfg = config.validated
-    // assemble is a pure per-row Column fold (zero shuffle), valid on
-    // streaming DataFrames; the kernel does the rest per document
-    Corpus.assemble(docsStream).as[(String, String)].flatMap { case (docId, raw) =>
-      val chunks = TextKernel.chunkText(raw, minChunkChars)
-      val filtered =
-        TextKernel.filterChrome(chunks, chromePatterns, Corpus.ChromeMaxLength)
-      val kept = DedupeKernel.dedupe(filtered, cfg).kept
-      kept.iterator.zipWithIndex.map { case (c, i) =>
-        OutSpan(docId, "text", c.text, "", i.toLong)
-      }
-    }
-  }
+      implicit spark: SparkSession): Dataset[OutSpan] =
+    ExtractionJob.keptSpans(docsStream,
+      PipelineConfig(minChunkChars = minChunkChars, chromePatterns = chromePatterns,
+        dedupe = config))
 }

@@ -88,16 +88,6 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("chunker kernel-UDF twin == declarative chunker (row-identical)") {
-    val docs = Corpus.assemble(Corpus.docsTable(spark, sfDir))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-      .toSet
-    val hof = rows(Chunker.chunkDeclarative(docs, col("raw")))
-    val udfRows = rows(Chunker.chunkKernelUdf(docs, col("raw")))
-    assert(udfRows == hof)
-  }
-
   test("exact-dedup window transform == kernel exactHashDedupe per doc") {
     val docs = Corpus.docsTable(spark, sfDir)
     val filtered = ExtractionJob.filteredChunks(docs)
@@ -149,6 +139,13 @@ class PipelineSpec extends AnyFunSuite {
     val got = LshDedup.nearDupPairs(sigs, threshold).collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
     assert(got == expected, s"LSH pairs != brute force (got ${got.size}, want ${expected.size})")
+  }
+
+  test("nearDupPairs rejects a negative threshold") {
+    import spark.implicits._
+    val sigs = Seq(("a", 0L), ("b", 1L)).toDF("doc_id", "sig")
+    val e = intercept[IllegalArgumentException](LshDedup.nearDupPairs(sigs, -1))
+    assert(e.getMessage.contains(">= 0"))
   }
 
   test("natural-sort key column reproduces kernel naturalSort ordering") {
@@ -327,12 +324,31 @@ class PipelineSpec extends AnyFunSuite {
 
   test("stats invariants hold per doc: kept+dropped=input, exact+near=dropped") {
     val docs = Corpus.docsTable(spark, sfDir)
-    val st = DedupeOps.stats(
-      graft.ops.DedupeOps.perDocDedupe(
-        ExtractionJob.filteredChunks(docs), DedupeConfig())(spark))
+    import spark.implicits._
+    val st = DedupeOps.stats(ExtractionJob.dedup(docs)(spark).as[DedupRow])
     val bad = st.filter(
       col("kept_count") + col("dropped_count") =!= col("input_count") ||
         col("exact_dups") + col("near_dups") =!= col("dropped_count")).count()
     assert(bad == 0)
+  }
+
+  test("per-doc pipeline plans have no exchange: dedup, outputSpans, metrics") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val helper = new AdaptiveSparkPlanHelper {}
+    // a plain scan, so every exchange in the plan is one the pipeline adds
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id").cast("string").as("doc_id"), array(struct(
+        lit("text").as("kind"), col("text"), lit("").as("media_ref"),
+        lit(0).as("offset"))).as("spans"))
+    for ((name, df) <- Seq(
+        "dedup" -> ExtractionJob.dedup(docs)(spark),
+        "outputSpans" -> ExtractionJob.outputSpans(docs)(spark),
+        "metrics" -> ExtractionJob.metrics(docs)(spark))) {
+      assert(df.collect().nonEmpty)
+      val plan = df.queryExecution.executedPlan
+      val exchanges = helper.collect(plan) { case e: Exchange => e }
+      assert(exchanges.isEmpty, s"$name plans an exchange:\n$plan")
+    }
   }
 }

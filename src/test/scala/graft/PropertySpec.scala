@@ -10,8 +10,9 @@ import graft.ops.Corpus
 
 /** Property-based span-sequence equality: RANDOM adversarial documents
   * (unicode whitespace, CRLF, chrome lines, near-duplicate paragraphs,
-  * empty/short spans) through the full distributed pipeline must equal the
-  * sequential kernel, row for row. The round-2 Unicode-TrimSpace divergence
+  * empty/short spans) and hand-picked adversarial rows (null/empty spans,
+  * null span text, all-chrome docs, duplicate doc_ids) through the full
+  * distributed pipeline must equal the sequential kernel, row for row. The round-2 Unicode-TrimSpace divergence
   * was exactly the class of bug a generator finds and example tests miss.
   */
 class PropertySpec extends AnyFunSuite {
@@ -74,6 +75,64 @@ class PropertySpec extends AnyFunSuite {
           s"seed $seed: mismatch for generated doc $docId: ${t.take(120).replace("\n", "\\n")}")
       }
     }
+  }
+
+  test("adversarial rows: each input row equals the per-row kernel oracle") {
+    import spark.implicits._
+    import graft.streaming.{TestDoc, TestSpan}
+    val para = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo"
+    val chrome = "wifi battery charging wifi battery charging wifi battery charging"
+    def text(t: String, offset: Int) = TestSpan("text", t, "", offset)
+    val rows = Seq(
+      TestDoc("null-spans", null),
+      TestDoc("empty-spans", Seq.empty),
+      TestDoc("null-text", Seq(text(para, 2), TestSpan("text", null, "", 1),
+        text(s"$para lima mike", 0), text(para, 3))),
+      TestDoc("all-chrome", Seq(text(chrome, 0), text(chrome.toUpperCase, 1))),
+      // one doc_id, two rows: two documents, each deduped on its own (a
+      // regroup on doc_id would merge them under colliding chunk ids)
+      TestDoc("dup-id", Seq(text(para, 0), text(chrome, 1))),
+      TestDoc("dup-id", Seq(text(para, 0), text(para.toUpperCase, 1))))
+    val frame = rows.toDF()
+
+    // per row: offset-ordered span texts (null texts skipped) joined by
+    // blank lines, then the kernel; null spans are no document at all
+    val oracle = rows.flatMap { d =>
+      Option(d.spans).map { spans =>
+        val raw = spans.sortBy(_.offset).flatMap(s => Option(s.text)).mkString("\n\n")
+        val chunks = TextKernel.chunkText(raw, Corpus.MinChunkChars)
+        val filtered = TextKernel.filterChrome(
+          chunks, TextKernel.defaultChromePatterns, Corpus.ChromeMaxLength)
+        (d.doc_id, chunks.size, DedupeKernel.dedupe(filtered, DedupeConfig()))
+      }
+    }
+
+    val spans = jobs.ExtractionJob.outputSpans(frame)(spark)
+      .select("doc_id", "text", "order").as[(String, String, Long)].collect().sorted.toSeq
+    assert(spans == oracle.flatMap { case (id, _, r) =>
+      r.kept.zipWithIndex.map { case (c, i) => (id, c.text, i.toLong) }
+    }.sorted)
+
+    val dedup = jobs.ExtractionJob.dedup(frame)(spark)
+      .select("doc_id", "id", "kept", "reason", "matched_id")
+      .as[(String, String, Boolean, String, String)].collect().sorted.toSeq
+    assert(dedup == oracle.flatMap { case (id, _, r) =>
+      r.kept.map(c => (id, c.id, true, "", "")) ++
+        r.dropped.map(x => (id, x.chunkId, false, x.reason, x.matchedChunkId))
+    }.sorted)
+
+    val metrics = jobs.ExtractionJob.metrics(frame)(spark)
+      .select("doc_id", "n_chunks", "n_chrome_dropped", "input_count", "kept_count",
+        "dropped_count")
+      .as[(String, Long, Long, Long, Long, Long)].collect().sorted.toSeq
+    assert(metrics == oracle.collect { case (id, n, r) if n > 0 =>
+      val st = r.stats
+      (id, n.toLong, (n - st.inputCount).toLong, st.inputCount.toLong, st.keptCount.toLong,
+        st.droppedCount.toLong)
+    }.sorted)
+    // premises: the cases above are really exercised
+    assert(spans.count(_._1 == "dup-id") == 2 && metrics.exists(_._1 == "all-chrome"))
+    assert(!spans.exists(_._1.endsWith("-spans")))
   }
 
   test("property: fused normalize == regex chain on random strings") {
