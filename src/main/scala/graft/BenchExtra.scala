@@ -65,13 +65,17 @@ object BenchExtra {
           }
           rep.withColumn("text", shifted.otherwise(col("text")))
         } else if (table == "embeddings") {
-          val dims = 64 // >= actual dim; zip_with stops at the shorter side
+          // zip_with pads the SHORTER side with nulls, so the sign row is
+          // sliced to the embedding's length and a longer embedding fails
+          val dims = 64
           val signs = array((0 until mult).map(r => array((0 until dims).map(d =>
             lit(if (((graft.kernel.Hashing.fnv1a64(s"$r:$d:be") >>> 32) & 1L) == 0L)
               -1.0f else 1.0f)): _*)): _*)
+          val n = size(col("embedding"))
           rep.withColumn("embedding",
-            zip_with(col("embedding"), element_at(signs, col("__rep") + 1),
-              (x, s) => x * s))
+            when(n > dims, raise_error(lit(s"BenchExtra: embedding dim > $dims")))
+              .otherwise(zip_with(col("embedding"),
+                slice(element_at(signs, col("__rep") + 1), lit(1), n), (x, s) => x * s)))
         } else rep
       decor.drop("__rep")
     }

@@ -1,7 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.reflect.ClassTag
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** D1 cross-document level — banded LSH self-join over 64-bit SimHash
   * signatures (SURVEY.md §2.7 "across 10^12 docs"; north_star: "flags
@@ -16,9 +23,11 @@ import org.apache.spark.sql.functions._
   * b bands untouched when d < b (pigeonhole), so recall is exact for
   * d <= threshold when bands > threshold... strictly: with 8 bands of 8
   * bits, any pair with d <= 7 collides in >= 1 band, so threshold <= 7 has
-  * perfect recall; the default threshold 6 qualifies. Join fan-out is
-  * bounded by band-bucket sizes; a hot bucket (common boilerplate) is
-  * handled by AQE skew-join splitting since the join is a plain equi-join.
+  * perfect recall; the default threshold 6 qualifies. In [[nearDupPairs]]
+  * join fan-out is bounded by band-bucket sizes; a hot bucket (common
+  * boilerplate) is handled by AQE skew-join splitting since the band join
+  * is a plain equi-join. ([[clusterWinners]] runs as RDD joins, outside
+  * AQE.)
   */
 object LshDedup {
 
@@ -27,6 +36,14 @@ object LshDedup {
 
   /** (doc_id, sig) -> distinct near-duplicate candidate pairs
     * (doc_a, doc_b, distance) with distance <= threshold and doc_a < doc_b.
+    *
+    * Precondition, NOT checked (checking costs an aggregate over the whole
+    * corpus): `sigs` holds one row per doc_id. A doc_id on several rows
+    * can emit the same pair once per row, and a self-pair (d, d) when two
+    * of its sigs are within the threshold. [[clusterWinners]] gives the
+    * same components either way (repeated edges change none, self-pairs
+    * add no edge), but pair counts and distances are then per row, not
+    * per document.
     */
   def nearDupPairs(sigs: DataFrame, threshold: Int): DataFrame = {
     require(threshold >= 0, s"Hamming threshold must be >= 0, got $threshold")
@@ -125,25 +142,32 @@ object LshDedup {
   final case class CcRoundStat(round: Int, changed: Long, processedEdges: Long)
 
   /** Winner selection: TRUE connected components — map every doc in a
-    * near-dup cluster to the minimum doc_id in its component.
+    * near-dup cluster to the minimum doc_id in its component, where
+    * "minimum" is Spark SQL's order for the id type (for strings UTF-8
+    * binary order, which differs from `String.compareTo` on supplementary
+    * characters). Returns (doc_id, winner) typed as the input ids, one row
+    * per doc that has at least one edge.
+    *
+    * Preconditions, checked: doc_a and doc_b share one id type — string
+    * (UTF8_BINARY collation), long or int; no id is null (rejected by the
+    * same pass that builds the edges). A self-pair (doc_a == doc_b) adds no
+    * edge, so a doc that only pairs with itself gets no row.
     *
     * Algorithm: FRONTIER-PRUNED min-label propagation with pointer jumping,
-    * run to a verified fixpoint. Each round does
+    * run to a verified fixpoint. Round 0 labels every doc with
+    * least(self, min neighbor); each later round does
     *   (1) edge step:  msg(x)  = min over edges (y -> x) with y in DELTA
     *                   (only labels that CHANGED last round send messages);
     *                   w1(x) = least(prev(x), msg(x))
-    *   (2) jump step:  for rows whose label changed this round OR whose
-    *                   current pointer target changed this round,
+    *   (2) jump step:  for every x with w1(x) != x,
     *                   winner(x) = least(w1(x), w1(w1(x)))  (path halving)
-    * so label information still travels ~2^r hops after r rounds, but a
-    * round's join cost is proportional to the FRONTIER (edges incident to
+    * so label information still travels ~2^r hops after r rounds, while the
+    * edge step's cost is proportional to the FRONTIER (edges incident to
     * last round's changes), not to the full edge set: at web scale most
     * components are stars that converge in round 1, while a few deep chains
-    * drive 20+ rounds — without the frontier every such round re-joined all
-    * 10^12 edges for a vanishing number of live labels. The full edge set
-    * is touched only as the persisted build-side scan of the delta join
-    * (pre-partitioned on the message key `y`, so only the small delta side
-    * ever shuffles); per-round processed-edge counts land in `stats`.
+    * drive 20+ rounds. The jump step reads one label per non-root doc,
+    * O(labels) per round like the labels-messages join; per-round
+    * processed-edge counts land in `stats`.
     *
     * Correctness argument (delta completeness): labels are monotone
     * non-increasing and every value a node ever takes is broadcast to its
@@ -161,112 +185,110 @@ object LshDedup {
     * bound, not a semantic knob; hitting it throws rather than silently
     * returning partial components.
     *
-    * Durability: by default lineage is truncated with `localCheckpoint`,
-    * whose blocks live on EXECUTORS — cheap and right for local mode, but
-    * an executor lost mid-iteration takes blocks with it whose lineage no
-    * longer exists, killing the whole job. Passing `checkpointDir` makes
-    * each round durable as `<dir>/labels_r<N>` parquet (HDFS/S3-backed on a
-    * real cluster): an executor loss costs a recompute from the last
-    * durable round instead of the job. Round N's file is deleted as soon as
-    * round N+1 is committed, so the directory holds at most two rounds; the
-    * final round's file backs the RETURNED DataFrame and stays for the
-    * caller to clean up with the job output. The SparkContext-global
-    * checkpoint dir is never touched (the previous Dataset.checkpoint()
-    * implementation silently re-pointed it on every call, clobbering any
-    * application-configured dir — and leaked every round's files).
+    * Execution shape: the rounds run as RDD joins that all share one
+    * `HashPartitioner(spark.sql.shuffle.partitions)`, outside AQE. The
+    * symmetric edges, keyed by their message source, are partitioned once
+    * and persisted, and the labels (doc -> (winner, prev, n_msgs)) stay
+    * co-partitioned with them, so round 0 and the edges-delta and
+    * labels-messages joins are narrow. A round is ONE job with 3 shuffles:
+    * the message reduce, the jump requests to their targets, and the jump
+    * answers back; its single aggregate yields (changed, processedEdges).
+    *
+    * Durability: by default each round's labels are truncated with RDD
+    * `localCheckpoint`, whose blocks live on EXECUTORS — cheap and right for
+    * local mode, but an executor lost mid-iteration takes blocks with it
+    * whose lineage no longer exists, killing the whole job. Passing
+    * `checkpointDir` makes each round durable as `<dir>/labels_r<N>`
+    * parquet (HDFS/S3-backed on a real cluster): an executor loss costs a
+    * recompute from the last durable round instead of the job. Round N's
+    * file is deleted as soon as round N+1 is committed, so the directory
+    * holds at most two rounds; the final round's file backs the RETURNED
+    * DataFrame and stays for the caller to clean up with the job output.
+    * The SparkContext-global checkpoint dir is never touched.
     */
   def clusterWinners(pairs: DataFrame, maxRounds: Int = 20,
       checkpointDir: Option[String] = None,
       stats: Option[scala.collection.mutable.Buffer[CcRoundStat]] = None): DataFrame = {
+    val (idType, tb) = (pairs.schema("doc_a").dataType, pairs.schema("doc_b").dataType)
+    require(idType == tb,
+      s"clusterWinners: doc_a and doc_b must share one id type, got $idType and $tb")
     val spark = pairs.sparkSession
-    def ckpt(df: DataFrame, round: Int): DataFrame = checkpointDir match {
-      case Some(d) =>
-        val path = s"$d/labels_r$round"
-        df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-        val back = spark.read.parquet(path)
-        if (round >= 2) deletePath(spark, s"$d/labels_r${round - 2}")
-        back
-      case None =>
-        // LAZY localCheckpoint: the same lineage truncation + internal-row
-        // block caching as the former eager call, minus its dedicated job —
-        // the round's single stats action below materializes the blocks, so
-        // a round costs ONE job where the former localCheckpoint + count +
-        // sum structure ran three. Blocks are reclaimed by the
-        // ContextCleaner as each round's frame is dropped.
-        df.localCheckpoint(eager = false)
+    // ids read as K, whose Ordering is Spark SQL's for the id type
+    // (UTF8String compares UTF-8 bytes); `out` converts back for Rows
+    def run[K: ClassTag: Ordering](id: (Row, Int) => K, out: K => Any): DataFrame = {
+      val least = implicitly[Ordering[K]].min(_: K, _: K)
+      val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      val labelSchema = StructType(
+        Seq("doc_id", "winner", "prev").map(StructField(_, idType, nullable = false)) :+
+          StructField("n_msgs", LongType, nullable = false))
+      // doc -> (winner, prev, n_msgs), partitioned by `part`
+      type Labels = RDD[(K, (K, K, Long))]
+      def ckpt(labels: Labels, round: Int): Labels = checkpointDir match {
+        case Some(d) =>
+          val path = s"$d/labels_r$round"
+          val rows = labels.map { case (x, (w, p, n)) => Row(out(x), out(w), out(p), n) }
+          spark.createDataFrame(rows, labelSchema).write.mode(SaveMode.Overwrite).parquet(path)
+          if (round >= 2) deletePath(spark, s"$d/labels_r${round - 2}")
+          spark.read.parquet(path).rdd
+            .map(r => id(r, 0) -> ((id(r, 1), id(r, 2), r.getLong(3)))).partitionBy(part)
+        case None => labels.localCheckpoint()
+      }
+      // symmetric edges keyed by their message source y (value: receiver x)
+      val edges = pairs.select(col("doc_a"), col("doc_b")).rdd.flatMap { r =>
+        require(!r.isNullAt(0) && !r.isNullAt(1), s"clusterWinners: null doc id in pair $r")
+        val (a, b) = (id(r, 0), id(r, 1))
+        if (a == b) Nil else Seq(a -> b, b -> a)
+      }.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+      // round 0 = one full edge step, least(self, min neighbor); edges are
+      // already partitioned by key, so this reduce does not shuffle
+      var labels = ckpt(edges.reduceByKey(part, least).mapPartitions(
+        _.map { case (x, m) => x -> ((least(x, m), x, 0L)) }, preservesPartitioning = true), 0)
+      var delta = labels.mapValues(_._1) // everyone "changed"
+      var round = 0
+      var changed = -1L
+      while (changed != 0L) {
+        round += 1
+        require(round <= maxRounds,
+          s"clusterWinners did not converge within $maxRounds rounds (component diameter > 2^$maxRounds?)")
+        // (1) messages from last round's changed labels only, along edges
+        val msgs = edges.join(delta, part).values.mapValues(w => (w, 1L))
+          .reduceByKey(part, (a, b) => (least(a._1, b._1), a._2 + b._2))
+        val upd = labels.leftOuterJoin(msgs, part).mapValues { case ((w, _, _), m) =>
+          m.fold((w, w, 0L)) { case (mw, n) => (least(w, mw), w, n) }
+        }
+        // (2) pointer jump: each non-root x asks its target t = w1(x) for
+        //     w1(t), and the answer is shuffled back to x
+        val requests = upd.flatMap { case (x, (w1, _, _)) =>
+          if (w1 == x) None else Some(w1 -> x)
+        }
+        val answers = upd.join(requests, part).values.map { case ((tw, _, _), x) => x -> tw }
+        val next = ckpt(upd.leftOuterJoin(answers, part).mapValues { case ((w1, p, n), j) =>
+          (j.fold(w1)(least(w1, _)), p, n)
+        }, round)
+        // ONE action for both round statistics
+        val (c, processed) = next.aggregate((0L, 0L))(
+          { case ((c, e), (_, (w, p, n))) => (if (w == p) c else c + 1, e + n) },
+          { case ((c1, e1), (c2, e2)) => (c1 + c2, e1 + e2) })
+        stats.foreach(_ += CcRoundStat(round, c, processed))
+        delta = next.filter { case (_, (w, p, _)) => w != p }.mapValues(_._1)
+        labels = next
+        changed = c
+      }
+      edges.unpersist(blocking = false)
+      checkpointDir match {
+        case Some(d) => spark.read.parquet(s"$d/labels_r$round").select(col("doc_id"), col("winner"))
+        case None => spark.createDataFrame(labels.map { case (x, (w, _, _)) => Row(out(x), out(w)) },
+          StructType(labelSchema.fields.take(2)))
+      }
     }
-    // symmetric edge list, pre-partitioned on the message key: every round
-    // joins edges with the delta on y, and the persisted hash partitioning
-    // means only the (shrinking) delta side is ever exchanged
-    val edges = pairs.select(col("doc_a").as("x"), col("doc_b").as("y"))
-      .union(pairs.select(col("doc_b").as("x"), col("doc_a").as("y")))
-      .repartition(col("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // round 0 = one full edge step: least(self, min neighbor). (An extra
-    // pointer-halving jump here was tried in r6 and reverted: it cut zero
-    // rounds at sf0.1 AND on the 10x probe — the convergence tail is the
-    // late jump-staleness waves, not initial chain depth — so it was one
-    // join of pure overhead.)
-    var full = ckpt(
-      edges.groupBy(col("x").as("doc_id"))
-        .agg(least(min(col("y")), first(col("x"))).as("winner"))
-        .withColumn("prev", lit(null).cast(pairs.schema("doc_a").dataType))
-        .withColumn("n_msgs", lit(0L)),
-      0)
-    var delta = full.select(col("doc_id"), col("winner")) // everyone "changed"
-    var round = 0
-    var converged = false
-    while (!converged) {
-      round += 1
-      require(round <= maxRounds,
-        s"clusterWinners did not converge within $maxRounds rounds (component diameter > 2^$maxRounds?)")
-      val labels = full.select(col("doc_id"), col("winner").as("prev"))
-      // (1) messages from last round's changed labels only, along edges
-      val msgs = edges
-        .join(delta.withColumnRenamed("doc_id", "y"), Seq("y"))
-        .groupBy(col("x").as("doc_id"))
-        .agg(min(col("winner")).as("msg"), count(lit(1)).as("n_msgs"))
-      // Lazily truncate upd once per round: the jump step below references
-      // upd FIVE times (changed filter, stale semi-join, lookup side, and
-      // the final join); unmaterialized, each reference re-evaluated the
-      // labels⋈msgs join subtree within the round's job.
-      val upd = labels.join(msgs, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("prev"),
-          least(col("prev"), coalesce(col("msg"), col("prev"))).as("w1"),
-          coalesce(col("n_msgs"), lit(0L)).as("n_msgs"))
-        .localCheckpoint(eager = false)
-      // (2) pointer jump for the live set: rows that changed this round,
-      //     plus rows whose pointer TARGET changed this round (their
-      //     w1(w1(x)) just dropped) — staleness never accumulates, and the
-      //     jump joins are keyed with the small live side driving them
-      val changedRows = upd.filter(col("w1") =!= col("prev"))
-      val stale = upd.join(changedRows.select(col("doc_id").as("tgt")),
-        upd("w1") === col("tgt"), "leftsemi")
-      val live = changedRows.unionByName(stale).dropDuplicates("doc_id")
-      val lookup = upd.select(col("doc_id").as("j"), col("w1").as("jw"))
-      val jumped = live.join(lookup, live("w1") === lookup("j"), "left")
-        .select(live("doc_id").as("doc_id"),
-          least(live("w1"), coalesce(col("jw"), live("w1"))).as("jumpw"))
-      val next = ckpt(
-        upd.join(jumped, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("jumpw"), col("w1")).as("winner"),
-            col("prev"), col("n_msgs")),
-        round)
-      // ONE action for both round statistics (formerly a count job PLUS a
-      // sum job — two full passes over the checkpointed labels per round)
-      val statRow = next.agg(
-        coalesce(sum(when(col("winner") =!= col("prev"), 1L).otherwise(0L)), lit(0L)),
-        coalesce(sum(col("n_msgs")), lit(0L))).head
-      val changed = statRow.getLong(0)
-      val processed = statRow.getLong(1)
-      stats.foreach(_ += CcRoundStat(round, changed, processed))
-      delta = next.filter(col("winner") =!= col("prev")).select(col("doc_id"), col("winner"))
-      full = next
-      converged = changed == 0L
+    idType match {
+      case StringType => // equals only the default UTF8_BINARY collation
+        run[UTF8String]((r, i) => UTF8String.fromString(r.getString(i)), _.toString)
+      case LongType => run[Long](_.getLong(_), identity)
+      case IntegerType => run[Int](_.getInt(_), identity)
+      case t => throw new IllegalArgumentException(
+        s"clusterWinners: doc ids must be string (UTF8_BINARY), long or int, got ${t.sql}")
     }
-    edges.unpersist(blocking = false)
-    full.select(col("doc_id"), col("winner"))
   }
 
   /** Recursive delete through the Hadoop FileSystem of the path's scheme —

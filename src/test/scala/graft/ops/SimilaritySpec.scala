@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernel.Hashing
 
@@ -328,16 +329,20 @@ class SimilaritySpec extends AnyFunSuite {
     assert(roundDirs.length <= 2, s"stale checkpoint rounds not cleaned: ${roundDirs.mkString(", ")}")
   }
 
-  test("clusterWinners: frontier pruning — converged stars stop paying edge cost") {
+  // 200 star components (hub + 5 leaves — converge in round 1, the web
+  // scale common case) + one deep chain of 33 (drives many rounds)
+  private val stars = (0 until 200).flatMap(i => (1 to 5).map(l => (f"s$i%03d_0", f"s$i%03d_$l")))
+  private val chain = (0 until 32).map(i => (f"c$i%03d", f"c${i + 1}%03d"))
+  private def frontierPairs: DataFrame = {
     import spark.implicits._
-    // 200 star components (hub + 5 leaves — converge in round 1, the web
-    // scale common case) + one deep chain of 33 (drives many rounds). The
-    // frontier version must (a) produce labels identical to full
+    (stars ++ chain).toDF("doc_a", "doc_b")
+  }
+
+  test("clusterWinners: frontier pruning — converged stars stop paying edge cost") {
+    // The frontier version must (a) produce labels identical to full
     // propagation semantics and (b) collapse the per-round processed-edge
     // count after round 1 instead of re-joining all edges every round.
-    val stars = (0 until 200).flatMap(i => (1 to 5).map(l => (f"s$i%03d_0", f"s$i%03d_$l")))
-    val chain = (0 until 32).map(i => (f"c$i%03d", f"c${i + 1}%03d"))
-    val pairs = (stars ++ chain).toDF("doc_a", "doc_b")
+    val pairs = frontierPairs
     val st = scala.collection.mutable.Buffer.empty[LshDedup.CcRoundStat]
     val got = LshDedup.clusterWinners(pairs, stats = Some(st))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
@@ -353,6 +358,93 @@ class SimilaritySpec extends AnyFunSuite {
     assert(st.length >= 2 && st(1).processedEdges < st.head.processedEdges / 4,
       s"round-2 frontier did not collapse: $st")
     assert(st.last.changed == 0L, s"final round must certify convergence: $st")
+  }
+
+  test("clusterWinners: one Spark job per round plus the result action") {
+    // counted by job group, with a marker job after the measured section:
+    // listener events arrive in order, so once the marker's start is seen
+    // every measured job's start has been seen too
+    val sc = spark.sparkContext
+    val group = "cc-shape"
+    @volatile var jobs = 0
+    @volatile var markerSeen = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs += 1
+          case Some("cc-shape-marker") => markerSeen = true
+          case _ =>
+        }
+    }
+    val st = scala.collection.mutable.Buffer.empty[LshDedup.CcRoundStat]
+    val pairs = frontierPairs
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "clusterWinners shape")
+      LshDedup.clusterWinners(pairs, stats = Some(st)).collect()
+      sc.setJobGroup("cc-shape-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen, "listener never saw the marker job")
+      assert(st.length >= 2 && jobs <= st.length + 1,
+        s"$jobs jobs for ${st.length} rounds + 1 result action")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("clusterWinners: string winner is Spark SQL's UTF-8 binary min, not String.compareTo") {
+    import spark.implicits._
+    // U+FFFD sorts before U+1F600 in UTF-8 (EF.. < F0..) but after it in
+    // UTF-16 (FFFD > D83D), so compareTo would pick the emoji
+    val (rep, emoji) = ("\uFFFD", "\uD83D\uDE00")
+    val pairs = Seq((emoji, rep)).toDF("doc_a", "doc_b")
+    val sparkMin = Seq(rep, emoji).toDF("id").agg(min(col("id"))).head().getString(0)
+    assert(sparkMin == rep && emoji.compareTo(rep) < 0)
+    val got = LshDedup.clusterWinners(pairs)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == Map(rep -> rep, emoji -> rep), got.toString)
+  }
+
+  test("clusterWinners: long and int ids give the component min, typed as the input") {
+    import spark.implicits._
+    val longs = Seq((5L, 3L), (3L, 9L), (100L, 7L), (-2L, 100L)).toDF("doc_a", "doc_b")
+    val w = LshDedup.clusterWinners(longs)
+    assert(w.schema.map(_.dataType) == Seq(LongType, LongType), w.schema.toString)
+    assert(w.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 7L -> -2L, 100L -> -2L, -2L -> -2L))
+    val ints = LshDedup.clusterWinners(Seq((2, 1), (4, 3)).toDF("doc_a", "doc_b"))
+    assert(ints.schema.map(_.dataType) == Seq(IntegerType, IntegerType), ints.schema.toString)
+    assert(ints.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ==
+      Map(1 -> 1, 2 -> 1, 3 -> 3, 4 -> 3))
+  }
+
+  test("clusterWinners: unsupported id types are rejected with a clear message") {
+    import spark.implicits._
+    val e = intercept[IllegalArgumentException](
+      LshDedup.clusterWinners(Seq((1.0, 2.0)).toDF("doc_a", "doc_b")))
+    assert(e.getMessage.contains("string (UTF8_BINARY), long or int"), e.getMessage)
+    val mixed = intercept[IllegalArgumentException](
+      LshDedup.clusterWinners(Seq((1L, "a")).toDF("doc_a", "doc_b")))
+    assert(mixed.getMessage.contains("share one id type"), mixed.getMessage)
+  }
+
+  test("clusterWinners: a null id fails the job instead of joining a component") {
+    import spark.implicits._
+    val pairs = Seq(("a", "b"), ("b", null)).toDF("doc_a", "doc_b")
+    val e = intercept[Exception](LshDedup.clusterWinners(pairs).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("null doc id")), e.toString)
+  }
+
+  test("clusterWinners: a self-pair is a no-op") {
+    import spark.implicits._
+    val pairs = Seq(("b", "c"), ("a", "a"), ("c", "c"), ("c", "d"), ("z", "z")).toDF("doc_a", "doc_b")
+    val got = LshDedup.clusterWinners(pairs)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == Map("b" -> "b", "c" -> "b", "d" -> "b"), got.toString)
   }
 
   test("commonParagraphFilter: drops every occurrence of cross-doc boilerplate, keeps unique and lightly-shared") {
