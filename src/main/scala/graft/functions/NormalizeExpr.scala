@@ -4,58 +4,18 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.kernel.TextKernel
 
 /** Static eval target for the fused N1 normalize (reference:
-  * internal/text/text.go:37-64). Replicates the 4-pass Column formulation
-  *
-  *   trim(regexp_replace(regexp_replace(regexp_replace(lower(c),
-  *     "[ \t]+", " "), "\n+", "\n"), "[^\p{L}\p{Nd} \n]", ""), " \n")
-  *
-  * in ONE character pass after the lowercase — the byte-identical contract
-  * is pinned by ExprSpec against the regex chain on the full corpus plus
-  * adversarial fixtures. Order sensitivity that must be preserved: run
-  * collapsing happens BEFORE the character filter, so a run-breaking char
-  * that is itself later removed still leaves two separate spaces
-  * ("a . b" -> "a  b"); the pass tracks the previous INPUT char's class,
-  * not the previous EMITTED char's.
+  * internal/text/text.go:37-64): the same single pass as
+  * `TextKernel.normalize` after the built-in lower()'s own lowercase
+  * (`UTF8String.toLowerCase`), so the expression can never diverge from
+  * `lower` on case mapping. It replaces the 4-pass Column formulation
+  * `Exprs.normColRegex`; ExprSpec pins the two byte for byte.
   */
 object NormalizeEval {
-
-  private final val ClassOther = 0
-  private final val ClassSpaceTab = 1
-  private final val ClassNewline = 2
-
-  def eval(in: UTF8String): UTF8String = {
-    // same lowercase as the built-in lower() (UTF8String.toLowerCase),
-    // so the fused form can never diverge on case mapping
-    val s = in.toLowerCase.toString
-    val n = s.length
-    val sb = new java.lang.StringBuilder(n)
-    var prev = ClassOther
-    var i = 0
-    while (i < n) {
-      val cp = s.codePointAt(i)
-      if (cp == ' ' || cp == '\t') {
-        if (prev != ClassSpaceTab) sb.append(' ')
-        prev = ClassSpaceTab
-      } else if (cp == '\n') {
-        if (prev != ClassNewline) sb.append('\n')
-        prev = ClassNewline
-      } else {
-        prev = ClassOther
-        // \p{L} == Character.isLetter (general categories L*);
-        // \p{Nd} == Character.isDigit (DECIMAL_DIGIT_NUMBER) — the Go
-        // unicode.IsDigit twin the regex chain also uses
-        if (Character.isLetter(cp) || Character.isDigit(cp)) sb.appendCodePoint(cp)
-      }
-      i += Character.charCount(cp)
-    }
-    var b = 0
-    var e = sb.length
-    while (b < e && { val c = sb.charAt(b); c == ' ' || c == '\n' }) b += 1
-    while (e > b && { val c = sb.charAt(e - 1); c == ' ' || c == '\n' }) e -= 1
-    UTF8String.fromString(sb.substring(b, e))
-  }
+  def eval(in: UTF8String): UTF8String =
+    UTF8String.fromString(TextKernel.collapseFilterTrim(in.toLowerCase.toString))
 }
 
 /** Static eval target for the fused HTML visible-text extraction — the

@@ -51,30 +51,57 @@ object TextKernel {
     s.substring(start, end)
   }
 
-  // Reference: internal/text/text.go:44 — RE2 `[ \t]+`.
-  private val spaceRegex = Pattern.compile("[ \\t]+")
-  // Reference: internal/text/text.go:48 — RE2 `\n+`.
-  private val newlineRegex = Pattern.compile("\\n+")
-
   /** Normalize text for hashing (reference: internal/text/text.go:34-65):
     * lowercase, collapse runs of space/tab to one space, collapse newline
     * runs to one newline, keep only letters/digits/space/newline (rune-wise),
-    * trim Unicode whitespace. Empty input stays empty.
+    * trim. Empty input stays empty.
+    *
+    * Everything after the lowercase is ONE character pass
+    * ([[collapseFilterTrim]]), byte-identical to the reference's (and
+    * `Exprs.normColRegex`'s) chain `[ \t]+` -> " ", `\n+` -> "\n", drop
+    * `[^\p{L}\p{Nd} \n]`, trim — pinned by ExprSpec and PropertySpec
+    * against that chain. Order sensitivity that must be preserved: run
+    * collapsing happens BEFORE the character filter, so a run-breaking char
+    * that is itself later removed still leaves two separate spaces
+    * ("a . b" -> "a  b"); the pass tracks the previous INPUT char's class,
+    * not the previous EMITTED char's. Only ' ' and '\n' can survive the
+    * filter as whitespace, so trimming those two is Go's TrimSpace here.
     */
-  def normalize(raw: String): String = {
-    if (raw.isEmpty) return raw
-    var s = raw.toLowerCase(Locale.ROOT)
-    s = spaceRegex.matcher(s).replaceAll(" ")
-    s = newlineRegex.matcher(s).replaceAll("\n")
-    val sb = new java.lang.StringBuilder(s.length)
+  def normalize(raw: String): String = collapseFilterTrim(raw.toLowerCase(Locale.ROOT))
+
+  private final val ClassOther = 0
+  private final val ClassSpaceTab = 1
+  private final val ClassNewline = 2
+
+  /** The [[normalize]] pass after the lowercase. `NormalizeEval` (the
+    * Catalyst expression) runs it after Spark's own lowercase.
+    */
+  def collapseFilterTrim(s: String): String = {
+    val n = s.length
+    val sb = new java.lang.StringBuilder(n)
+    var prev = ClassOther
     var i = 0
-    while (i < s.length) {
+    while (i < n) {
       val cp = s.codePointAt(i)
-      if (Character.isLetter(cp) || Character.isDigit(cp) || cp == ' ' || cp == '\n')
-        sb.appendCodePoint(cp)
+      if (cp == ' ' || cp == '\t') {
+        if (prev != ClassSpaceTab) sb.append(' ')
+        prev = ClassSpaceTab
+      } else if (cp == '\n') {
+        if (prev != ClassNewline) sb.append('\n')
+        prev = ClassNewline
+      } else {
+        prev = ClassOther
+        // \p{L} == Character.isLetter (general categories L*); \p{Nd} ==
+        // Character.isDigit (DECIMAL_DIGIT_NUMBER), Go's unicode.IsDigit
+        if (Character.isLetter(cp) || Character.isDigit(cp)) sb.appendCodePoint(cp)
+      }
       i += Character.charCount(cp)
     }
-    goTrimSpace(sb.toString)
+    var b = 0
+    var e = sb.length
+    while (b < e && { val c = sb.charAt(b); c == ' ' || c == '\n' }) b += 1
+    while (e > b && { val c = sb.charAt(e - 1); c == ' ' || c == '\n' }) e -= 1
+    sb.substring(b, e)
   }
 
   /** Blank-line splitter (reference: internal/text/text.go:75). The
@@ -85,8 +112,33 @@ object TextKernel {
   val blankLineSplit: String = "\\n[\\t\\n\\f\\r ]*\\n+"
   private val blankLinePattern = Pattern.compile(blankLineSplit)
 
-  /** Go `len(s)` — UTF-8 byte length. */
-  def byteLen(s: String): Int = s.getBytes(UTF_8).length
+  /** Go `len(s)` — UTF-8 byte length, counted without encoding. An
+    * unpaired surrogate counts 1 byte: `getBytes(UTF_8)` writes it as '?'.
+    */
+  def byteLen(s: String): Int = {
+    val n = s.length
+    var bytes = 0
+    var i = 0
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c < 0x80) bytes += 1
+      else if (c < 0x800) bytes += 2
+      else if (Character.isHighSurrogate(c) && i + 1 < n &&
+          Character.isLowSurrogate(s.charAt(i + 1))) { bytes += 4; i += 1 }
+      else if (Character.isSurrogate(c)) bytes += 1
+      else bytes += 3
+      i += 1
+    }
+    bytes
+  }
+
+  /** Chunk id `c%04d` for a 1-based survivor position, without a
+    * per-chunk `Formatter` or the default locale's digits.
+    */
+  private def chunkId(pos: Int): String = {
+    val digits = Integer.toString(pos)
+    "c" + "0" * (4 - digits.length) + digits
+  }
 
   /** Split text into chunks at blank lines (reference: internal/text/
     * text.go:69-121). Segments are Go-TrimSpace'd; segments shorter than
@@ -105,7 +157,7 @@ object TextKernel {
       if (survivors.nonEmpty) survivors
       else Vector(goTrimSpace(text)).filter(byteLen(_) >= minChars)
     segments.zipWithIndex.map { case (t, idx) =>
-      Chunk(f"c${idx + 1}%04d", t, normalize(t), idx)
+      Chunk(chunkId(idx + 1), t, normalize(t), idx)
     }
   }
 

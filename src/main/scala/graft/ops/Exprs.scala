@@ -29,8 +29,9 @@ object Exprs {
         org.apache.spark.sql.graftbridge.Bridge.expression(c)))
 
   /** The original 4-pass built-in formulation of [[normCol]] — kept as the
-    * in-engine reference the fused expression is spec-tested against
-    * (ExprSpec: byte equality on the full corpus + adversarial fixtures).
+    * in-engine reference the fused expression and `TextKernel.normalize`
+    * are spec-tested against (ExprSpec: byte equality on the full corpus +
+    * adversarial fixtures; PropertySpec: random strings).
     */
   def normColRegex(c: Column): Column =
     trim(

@@ -143,9 +143,13 @@ class PropertySpec extends AnyFunSuite {
       .map(_.mkString)
     for (seed <- 1L to 8L) {
       val ss = sample(Gen.listOfN(60, junkGen), seed)
-      val bad = ss.toDF("s")
-        .select(ops.Exprs.normCol(col("s")).as("a"), ops.Exprs.normColRegex(col("s")).as("b"))
-        .filter(col("a") =!= col("b")).collect()
+      val rows = ss.toDF("s")
+        .select(col("s"), ops.Exprs.normCol(col("s")).as("a"),
+          ops.Exprs.normColRegex(col("s")).as("b"))
+        .as[(String, String, String)].collect()
+      val bad = rows.filter { case (s, fused, chain) =>
+        fused != chain || TextKernel.normalize(s) != chain }
+      assert(rows.length == ss.length)
       assert(bad.isEmpty, s"seed $seed: " + bad.take(3).mkString("; "))
     }
   }

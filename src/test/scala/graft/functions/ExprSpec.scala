@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.kernel.Hashing
+import graft.kernel.{Hashing, TextKernel}
 import graft.ops.Exprs
 
 /** Native-expression vs kernel parity, including codegen and SQL paths. */
@@ -44,29 +44,41 @@ class ExprSpec extends AnyFunSuite {
     // adversarial fixtures for the order-sensitive semantics: run collapse
     // happens BEFORE the char filter ("a . b" keeps TWO spaces), newline
     // runs vs space-separated newlines, CRLF (\r is filtered, not ws),
-    // Unicode letters/digits, astral-plane letters, all-strippable input
+    // Unicode letters/digits, astral-plane letters, all-strippable input,
+    // final sigma, the dotted capital I, NEL and NBSP (Go whitespace that
+    // the filter drops)
     val fixtures = Seq(
       "", " ", "a . b", "a \t b", "a\t.\tb", "tab\there",
       "line1\r\nline2\r\rline3", "\n\n\nx\n\n", "\n \n", "\t\n\t",
       "MiXeD CaSe 123 !@#", "café ÜBER naïve", "७ ٣ ½ ⅔ Ⅸ", // Nd vs No/Nl
       "𝔘nicode astral 😀 emoji", "İstanbul ıı",
-      "...---...", "  leading and trailing  ", "a  .  b") ++
+      "...---...", "  leading and trailing  ", "a  .  b",
+      "ΟΔΟΣ ΣΑΣ", "İstanbul", "x\u0085y", "a\u00A0b") ++
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select("text").as[String].take(50)
     val rows = fixtures.toDF("s")
-      .select(Exprs.normCol(col("s")).as("fused"),
+      .select(col("s"), Exprs.normCol(col("s")).as("fused"),
         Exprs.normColRegex(col("s")).as("chain"))
       .collect()
-    for (r <- rows)
-      assert(r.getString(0) == r.getString(1),
-        s"fused='${r.getString(0)}' chain='${r.getString(1)}'")
+    for (r <- rows) {
+      assert(r.getString(1) == r.getString(2),
+        s"fused='${r.getString(1)}' chain='${r.getString(2)}'")
+      assert(TextKernel.normalize(r.getString(0)) == r.getString(2),
+        s"kernel='${TextKernel.normalize(r.getString(0))}' chain='${r.getString(2)}'")
+    }
     // and on the full assembled corpus (every doc's raw text)
     val corpus = graft.ops.Corpus.assemble(
         graft.ops.Corpus.docsTable(spark, "/root/testdata/sf0.001"))
-      .select(Exprs.normCol(col("raw")).as("fused"),
+      .select(col("raw"), Exprs.normCol(col("raw")).as("fused"),
         Exprs.normColRegex(col("raw")).as("chain"))
-      .filter(col("fused") =!= col("chain")).count()
-    assert(corpus == 0L, "fused normalize must equal the regex chain corpus-wide")
+      .filter(col("raw").isNotNull)
+      .as[(String, String, String)].collect()
+    assert(corpus.nonEmpty)
+    for ((raw, fused, chain) <- corpus) {
+      assert(fused == chain, "fused normalize must equal the regex chain corpus-wide")
+      assert(TextKernel.normalize(raw) == chain,
+        "kernel normalize must equal the regex chain corpus-wide")
+    }
   }
 
   test("RollingHashExpr == interpreted HOF fold (code points, incl. astral plane)") {

@@ -77,6 +77,22 @@ class TextKernelSpec extends AnyFunSuite {
     assert(chunkText("a" * 59, 60).isEmpty)
     assert(chunkText("a" * 60, 60).length == 1)
   }
+  test("byteLen == UTF-8 encoded length, unpaired surrogates as '?'") {
+    // 1-, 2-, 3- and 4-byte characters, then unpaired surrogates, which
+    // getBytes writes as one '?' byte (kernel-only: Spark strings never
+    // carry them, its UTF-8 conversion already rewrote them to '?')
+    for (s <- Seq("", "a", "é", "€", "中", "😀", "aé€😀", "a\ud800b", "\udc00x", "x\ud83d"))
+      assert(byteLen(s) == s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length,
+        s.map(c => f"\\u${c.toInt}%04x").mkString) // escaped: the report cannot encode a lone surrogate
+  }
+  test("chunk: ids are c%04d, widening past 9999") {
+    val para = "p" * 60
+    val ids = chunkText(Seq.fill(10000)(para).mkString("\n\n"), 60).map(_.id)
+    assert(ids.length == 10000)
+    assert(ids.take(2) == Seq("c0001", "c0002") && ids(9998) == "c9999" && ids.last == "c10000")
+    val wrong = ids.indices.filter(i => ids(i) != f"c${i + 1}%04d")
+    assert(wrong.isEmpty, wrong.take(3).map(ids))
+  }
 
   // ---- FilterChrome (text_test.go:186-269) ----
   private def mk(norms: String*): Vector[Chunk] =
