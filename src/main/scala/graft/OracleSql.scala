@@ -4,8 +4,8 @@ import graft.ops.Corpus
 
 /** DuckDB-dialect SQL builders mirroring the Spark-side transforms, used as
   * the driver's correctness oracle (`SparkEntry.oracleSql`). Each helper is
-  * the dialect twin of an expression in `graft.ops.Exprs` / `graft.ops.*` —
-  * keep them in lock-step. Regex character classes are spelled out so RE2
+  * the dialect twin of an expression in `graft.ops.Exprs` / `graft.ops.*`
+  * or of a `graft.kernel` function — keep them in lock-step. Regex character classes are spelled out so RE2
   * (DuckDB) and Java regex (Spark) agree.
   */
 object OracleSql {
@@ -26,13 +26,15 @@ object OracleSql {
 
   def trimWs(x: String): String = s"trim($x, $GoWsChrs)"
 
-  /** Dialect twin of Exprs.blankLineSplit (RE2). */
+  /** Dialect twin of TextKernel.blankLineSplit (RE2). */
   val BlankSplit: String = raw"'\n[\t\n\f\r ]*\n+'"
 
   /** The corpus raw text from the documents table. */
   val Raw: String = Corpus.rawTextSql("CAST(doc_id AS VARCHAR)", "text")
 
-  /** Reference chrome patterns OR-combined (dialect twin of Exprs.chromeKeep). */
+  /** Reference chrome patterns OR-combined (dialect twin of
+    * TextKernel.chromePredicate's pattern list).
+    */
   val ChromeCombined: String =
     graft.kernel.TextKernel.defaultChromePatterns.map(p => s"($p)").mkString("|")
 
@@ -82,7 +84,9 @@ object OracleSql {
   }
 
   /** CTE prefix `WITH base, segs, surv, ranked, fallback, chunks` — the
-    * dialect twin of Chunker.chunk over the corpus raw text.
+    * dialect twin of TextKernel.chunkText over the corpus raw text —
+    * followed by the chrome filter (`filtered`) and the exact-dedup ranking
+    * (`keyed`, `exact_ranked`).
     */
   val ChunkCte: String = {
     val min = Corpus.MinChunkChars
@@ -97,7 +101,7 @@ object OracleSql {
   WHERE strlen(${trimWs("seg")}) >= $min
 ), ranked AS (
   SELECT doc_id,
-         'c' || lpad(CAST(row_number() OVER w AS VARCHAR), 4, '0') AS id,
+         printf('c%04d', row_number() OVER w) AS id,
          t AS text, ${norm("t")} AS norm,
          CAST(row_number() OVER w - 1 AS BIGINT) AS idx
   FROM surv WINDOW w AS (PARTITION BY doc_id ORDER BY pos)

@@ -23,6 +23,22 @@ object Queries {
   private def corpus(s: SparkSession, dir: String): DataFrame =
     Corpus.docsTable(s, dir)
 
+  /** P1 — per-doc staged media names (reference: internal/ingest/
+    * ingest.go:187-196): natural-sort rank as `%04d`, which widens past
+    * 9999, plus the lowercased extension.
+    */
+  private[graft] def stagedNames(docs: DataFrame): DataFrame = {
+    val media = Corpus.spanRows(docs).filter(col("kind") === "media")
+    val w = Window.partitionBy(col("doc_id")).orderBy(Exprs.naturalKey(col("media_ref")))
+    media.withColumn("rn", row_number().over(w))
+      .select(col("doc_id"), col("media_ref"),
+        concat(format_string("%04d", col("rn")),
+          lower(regexp_extract(col("media_ref"), "(\\.[A-Za-z]+)$", 1))).as("staged"))
+  }
+
+  /** The A1 queries' dedup: the kernel's exact SHA1 pass alone. */
+  private val ExactDedup = DedupeConfig(method = "exact")
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- reference operators over the interleaved corpus ----
     "q01_n1_normalize" -> ((s, dir) =>
@@ -36,31 +52,28 @@ object Queries {
     "q04_p3_chrome" -> ((s, dir) => ExtractionJob.filteredChunks(corpus(s, dir))),
 
     "q05_a1_exact_kept" -> ((s, dir) =>
-      DedupeOps.exactKept(ExtractionJob.filteredChunks(corpus(s, dir)))),
+      ExtractionJob.dedup(corpus(s, dir), ExactDedup)(s).filter(col("kept"))
+        .select("doc_id", "id", "text", "norm", "idx")),
 
     "q06_a1_exact_dropped" -> ((s, dir) =>
-      DedupeOps.exactDropped(ExtractionJob.filteredChunks(corpus(s, dir)))),
+      ExtractionJob.dedup(corpus(s, dir), ExactDedup)(s).filter(!col("kept"))
+        .select(col("doc_id"), col("id").as("chunk_id"), col("reason"),
+          col("matched_id").as("matched_chunk_id"), col("distance"), col("preview"))),
 
+    // only docs with >= 1 chunk past the chrome filter, as the oracle's
+    // GROUP BY over the filtered chunks has
     "q07_a2_stats_exact" -> ((s, dir) =>
-      DedupeOps.exactStats(ExtractionJob.filteredChunks(corpus(s, dir)))
+      ExtractionJob.metrics(corpus(s, dir), ExactDedup)(s).filter(col("input_count") > 0)
         .select("doc_id", "kept_count", "dropped_count", "input_count")),
 
     "q08_a3_markdown" -> ((s, dir) =>
-      Render.markdown(
-        DedupeOps.exactKept(ExtractionJob.filteredChunks(corpus(s, dir))),
-        lit(""), includeChunkIds = true)),
+      ExtractionJob.markdown(corpus(s, dir),
+        ExtractionJob.PipelineConfig(dedupe = ExactDedup, includeChunkIds = true))),
 
     "q09_s3_jsonl" -> ((s, dir) =>
       Render.jsonlProjection(ExtractionJob.filteredChunks(corpus(s, dir)))),
 
-    "q10_p1_stage_names" -> ((s, dir) => {
-      val media = Corpus.spanRows(corpus(s, dir)).filter(col("kind") === "media")
-      val w = Window.partitionBy(col("doc_id")).orderBy(Exprs.naturalKey(col("media_ref")))
-      media.withColumn("rn", row_number().over(w))
-        .select(col("doc_id"), col("media_ref"),
-          concat(lpad(col("rn").cast("string"), 4, "0"),
-            lower(regexp_extract(col("media_ref"), "(\\.[A-Za-z]+)$", 1))).as("staged"))
-    }),
+    "q10_p1_stage_names" -> ((s, dir) => stagedNames(corpus(s, dir))),
 
     "q11_o1_natural_rank" -> ((s, dir) => {
       val names = s.read.parquet(s"$dir/part.parquet")
@@ -80,16 +93,9 @@ object Queries {
       Corpus.assemble(corpus(s, dir)).select(col("doc_id"),
         (octet_length(Exprs.trimGoWs(col("raw"))) >= 20).as("valid"))),
 
-    "q14_extract_metrics" -> ((s, dir) => {
-      val ch = ExtractionJob.chunks(corpus(s, dir))
-      val keep = Exprs.chromeKeep(col("norm"), ExtractionJob.ChromePatterns, Corpus.ChromeMaxLength)
-      ch.withColumn("keep", keep)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_chunks"),
-          sum(when(col("keep"), 0L).otherwise(1L)).as("n_chrome_dropped"))
-        .select(col("doc_id"), col("n_chunks"), col("n_chrome_dropped"),
-          floor(col("n_chrome_dropped") * 10000.0 / col("n_chunks")).as("boilerplate_ratio_bp"))
-    }),
+    "q14_extract_metrics" -> ((s, dir) =>
+      ExtractionJob.metrics(corpus(s, dir), ExactDedup)(s)
+        .select("doc_id", "n_chunks", "n_chrome_dropped", "boilerplate_ratio_bp")),
 
     // ---- sequential dedup (kernel inside each doc's row) — rows-only ----
     "q15_d1_dedup_kept" -> ((s, dir) =>
@@ -504,7 +510,7 @@ object Queries {
          |         unnest([1, 2]) AS n
          |  FROM documents)
          |SELECT doc_id, media_ref,
-         |       lpad(CAST(row_number() OVER (PARTITION BY doc_id ORDER BY n) AS VARCHAR), 4, '0')
+         |       printf('%04d', row_number() OVER (PARTITION BY doc_id ORDER BY n))
          |         || lower(regexp_extract(media_ref, '(\.[A-Za-z]+)$', 1)) AS staged
          |FROM media""").stripMargin,
 

@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kernel.{Chunk, DedupeConfig, DedupeKernel, DedupeResult, TextKernel}
-import graft.ops._
+import graft.ops.Corpus
 
 /** The flagship end-to-end pipeline — the graft of the reference's
   * `pipeline run` dataflow (cmd/pipeline/main.go:115-285) onto the
@@ -28,13 +28,11 @@ import graft.ops._
   * carries that doc_id. A row whose assembled text is null (null `spans`)
   * yields no output rows.
   *
-  * [[chunks]] and [[filteredChunks]] are the Catalyst form of the first two
-  * stages; they serve the chunk-level queries, and PipelineSpec pins them
-  * to the kernel.
+  * The chunk-level views ([[chunks]], [[filteredChunks]], [[markdown]]) are
+  * emitted from the same per-row path, so every stage has one
+  * implementation.
   */
 object ExtractionJob {
-
-  val ChromePatterns: Seq[String] = graft.kernel.TextKernel.defaultChromePatterns
 
   /** The reference CLI's pipeline knobs (cmd/pipeline/main.go:64-96):
     * min-chunk-chars, chrome patterns (defaults + optional custom regex
@@ -54,30 +52,51 @@ object ExtractionJob {
   final case class OutSpan(
       doc_id: String, kind: String, text: String, media_ref: String, order: Long)
 
-  def chunks(docs: DataFrame, minChunkChars: Int = Corpus.MinChunkChars): DataFrame = {
-    val assembled = Corpus.assemble(docs)
-    Chunker.chunk(assembled, col("raw"), minChunkChars)
-  }
+  /** Output row of [[dedup]]: kept chunks and dropped-audit rows in one
+    * frame, discriminated by `kept`.
+    */
+  final case class DedupRow(
+      doc_id: String, id: String, text: String, norm: String, idx: Long,
+      kept: Boolean, reason: String, matched_id: String, distance: Int, preview: String,
+      kept_order: Long) // position among the doc's kept chunks; -1 for dropped
+
+  /** Every chunk of every doc as (doc_id, id, text, norm, idx). */
+  def chunks(docs: DataFrame, minChunkChars: Int = Corpus.MinChunkChars): DataFrame =
+    chunkRows(docs, PipelineConfig(minChunkChars = minChunkChars))(_.chunks)
 
   def filteredChunks(docs: DataFrame): DataFrame = filteredChunks(docs, PipelineConfig())
 
+  /** The chunks that survive the chrome filter, in [[chunks]]' schema. */
   def filteredChunks(docs: DataFrame, cfg: PipelineConfig): DataFrame =
-    chunks(docs, cfg.minChunkChars).filter(
-      Exprs.chromeKeep(col("norm"), cfg.chromePatterns, Corpus.ChromeMaxLength))
+    chunkRows(docs, cfg)(_.filtered)
 
-  /** One document after the per-doc pipeline: `nSpans` input spans, `nChunks`
-    * chunks, of which `filtered` survived the chrome filter and went into
-    * the dedup kernel.
+  private def chunkRows(docs: DataFrame, cfg: PipelineConfig)(
+      pick: DocResult => Vector[Chunk]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    perDoc(docs, cfg) { (docId, d) =>
+      pick(d).iterator.map(c => (docId, c.id, c.text, c.norm, c.index.toLong))
+    }.toDF("doc_id", "id", "text", "norm", "idx")
+  }
+
+  /** One document after the per-doc pipeline: `nSpans` input spans and its
+    * `chunks`; `filtered` (the chunks that survive the chrome filter) and
+    * `dedupe` (the kernel's verdict on them) are computed on first use, so
+    * a chunk-only caller never runs the dedup kernel.
     */
-  private final case class DocResult(
-      nSpans: Long, nChunks: Int, filtered: Vector[Chunk], dedupe: DedupeResult)
+  private final class DocResult(val nSpans: Long, val chunks: Vector[Chunk],
+      isChrome: Chunk => Boolean, config: DedupeConfig) {
+    lazy val filtered: Vector[Chunk] = chunks.filterNot(isChrome)
+    lazy val dedupe: DedupeResult = DedupeKernel.dedupe(filtered, config)
+  }
 
   /** The one per-document path: chunkText -> chrome -> dedupe on each row of
     * `docs`, then only `emit`'s rows are exploded. The chrome patterns are
     * compiled once per job here, not once per document.
     */
   private def perDoc[T: Encoder](docs: DataFrame, cfg: PipelineConfig)(
-      emit: (String, DocResult) => Iterator[T])(implicit spark: SparkSession): Dataset[T] = {
+      emit: (String, DocResult) => Iterator[T]): Dataset[T] = {
+    val spark = docs.sparkSession
     import spark.implicits._
     val isChrome = TextKernel.chromePredicate(cfg.chromePatterns, Corpus.ChromeMaxLength)
     val minChars = cfg.minChunkChars
@@ -86,10 +105,7 @@ object ExtractionJob {
       .filter(col("raw").isNotNull)
       .as[(String, Long, String)]
       .flatMap { case (docId, nSpans, raw) =>
-        val chunks = TextKernel.chunkText(raw, minChars)
-        val filtered = chunks.filterNot(isChrome)
-        emit(docId, DocResult(nSpans, chunks.length, filtered,
-          DedupeKernel.dedupe(filtered, dedupe)))
+        emit(docId, new DocResult(nSpans, TextKernel.chunkText(raw, minChars), isChrome, dedupe))
       }
   }
 
@@ -140,6 +156,22 @@ object ExtractionJob {
       implicit spark: SparkSession): DataFrame =
     keptSpans(docs, PipelineConfig(dedupe = config)).toDF()
 
+  /** (doc_id, markdown) per doc with at least one kept chunk: the kernel's
+    * Markdown render of the kept chunks under `cfg`'s title and chunk-id
+    * option, sink-normalized (`TextKernel.finalizeMarkdown`).
+    */
+  def markdown(docs: DataFrame, cfg: PipelineConfig): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val title = cfg.markdownTitle
+    val withIds = cfg.includeChunkIds
+    perDoc(docs, cfg) { (docId, d) =>
+      if (d.dedupe.kept.isEmpty) Iterator.empty
+      else Iterator.single(docId -> TextKernel.finalizeMarkdown(
+        TextKernel.renderMarkdown(title, d.dedupe.kept, withIds)))
+    }.toDF("doc_id", "markdown")
+  }
+
   /** A4 — per-doc extraction metrics (north_star: spans/doc, boilerplate
     * ratio, dedup rate), one row per doc that produced >= 1 chunk,
     * chrome-dropped or not; zero-CHUNK docs emit no row.
@@ -149,9 +181,9 @@ object ExtractionJob {
     import spark.implicits._
     perDoc(docs, PipelineConfig(dedupe = config)) { (docId, d) =>
       val st = d.dedupe.stats
-      if (d.nChunks == 0) Iterator.empty
-      else Iterator.single((docId, d.nSpans, d.nChunks.toLong,
-        (d.nChunks - d.filtered.length).toLong, st.inputCount.toLong, st.keptCount.toLong,
+      if (d.chunks.isEmpty) Iterator.empty
+      else Iterator.single((docId, d.nSpans, d.chunks.length.toLong,
+        (d.chunks.length - d.filtered.length).toLong, st.inputCount.toLong, st.keptCount.toLong,
         st.droppedCount.toLong, st.exactDups.toLong, st.nearDups.toLong))
     }
       .toDF("doc_id", "n_spans", "n_chunks", "n_chrome_dropped",

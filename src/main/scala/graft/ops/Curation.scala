@@ -88,7 +88,7 @@ object Curation {
     // 3. exact dedup: min-doc_id winner per normalized text (q05/A1 shape,
     // INCLUDING A1's empty-norm guard: a whitespace-only doc normalizes to
     // "", and two such docs are different documents, not duplicates — each
-    // gets a per-doc unique key, mirroring DedupeOps.exactKey /
+    // gets a per-doc unique key, mirroring DedupeKernel.exactHashDedupe /
     // dedupe.go:86-90). n_tokens is computed HERE, map-side where the text
     // is, and the text column is dropped before the window — the dedup
     // exchange carries (hash, doc_id, n_tokens); no document text enters

@@ -6,7 +6,9 @@ import graft.kernel.{Hashing, TextKernel}
 
 /** Shared Catalyst column expressions for the SQL-expressible reference
   * operators, plus the few UDFs whose semantics the built-ins cannot express
-  * (byte-exact truncation, SimHash, natural-sort key).
+  * (byte-exact truncation, SimHash, natural-sort key). Chunking, the chrome
+  * filter and within-doc dedup are not here: they run as the kernel inside
+  * each document's row (graft.jobs.ExtractionJob).
   *
   * Every expression here stays inside whole-stage codegen except the UDFs;
   * the UDFs are deterministic and marked so, keeping Catalyst free to reorder
@@ -16,12 +18,12 @@ import graft.kernel.{Hashing, TextKernel}
   */
 object Exprs {
 
-  /** N1 — Normalize (reference: internal/text/text.go:34-65) as pure
-    * Catalyst built-ins: lower, collapse space/tab runs, collapse newline
-    * runs, strip everything but letters / decimal digits / space / newline,
-    * trim. `\p{Nd}` (not `\p{N}`) mirrors Go `unicode.IsDigit`; the final
-    * trim only needs ' ' and '\n' because no other whitespace survives the
-    * character filter.
+  /** N1 — Normalize (reference: internal/text/text.go:34-65) as one codegen
+    * expression (graft.functions.NormalizeExpr): lower, collapse space/tab
+    * runs, collapse newline runs, strip everything but letters / decimal
+    * digits / space / newline, trim. Decimal digits (not all numerals)
+    * mirror Go `unicode.IsDigit`; the final trim only needs ' ' and '\n'
+    * because no other whitespace survives the character filter.
     */
   def normCol(c: Column): Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
@@ -42,11 +44,6 @@ object Exprs {
         "[^\\p{L}\\p{Nd} \\n]", ""),
       " \n")
 
-  /** Blank-line split pattern (reference: internal/text/text.go:75), with
-    * RE2's ASCII `\s` spelled out for dialect parity.
-    */
-  val blankLineSplit: String = TextKernel.blankLineSplit
-
   /** Go `strings.TrimSpace` trim set — the FULL Unicode White_Space property
     * (TextKernel.isGoSpace), not just ASCII: tab, LF, VT, FF, CR, space,
     * NEL, NBSP, OGHAM SPACE MARK, U+2000-200A, LINE/PARA SEPARATOR,
@@ -61,27 +58,9 @@ object Exprs {
 
   /** Go-TrimSpace as a Catalyst expression (trims the full Unicode
     * White_Space set from both ends — reference: strings.TrimSpace used at
-    * internal/text/text.go:84, 111). Replaces the former ASCII-only trim in
-    * the distributed chunker, which diverged from the kernel on NBSP/U+2007
-    * etc. at paragraph edges.
+    * internal/text/text.go:84, 111), the same set as `TextKernel.goTrimSpace`.
     */
   def trimGoWs(c: Column): Column = trim(c, GoWhitespace)
-
-  /** P3 — chrome-filter KEEP predicate (reference: internal/text/
-    * text.go:126-163): drop iff norm is shorter than `maxLength` BYTES and
-    * matches any pattern. Invalid patterns are skipped driver-side,
-    * mirroring the reference's silent skip (text.go:132-139); patterns are
-    * OR-combined into one `rlike` so codegen sees a single regex.
-    */
-  def chromeKeep(norm: Column, patterns: Seq[String], maxLength: Int): Column = {
-    val valid = patterns.filter(p =>
-      scala.util.Try(java.util.regex.Pattern.compile(p)).isSuccess)
-    if (valid.isEmpty) lit(true)
-    else {
-      val combined = valid.map(p => s"($p)").mkString("|")
-      !(octet_length(norm) < maxLength && norm.rlike(combined))
-    }
-  }
 
   /** H3 — simhash64 over byte k-grams (reference: internal/dedupe/
     * dedupe.go:150-185) as a native codegen Catalyst expression

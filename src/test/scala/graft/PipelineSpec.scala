@@ -89,9 +89,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("exact-dedup window transform == kernel exactHashDedupe per doc") {
-    val docs = Corpus.docsTable(spark, sfDir)
-    val filtered = ExtractionJob.filteredChunks(docs)
-    val gotKept = DedupeOps.exactKept(filtered).collect()
+    val gotKept = Queries.queries("q05_a1_exact_kept")(spark, sfDir)
+      .select("doc_id", "id").collect()
       .map(r => (r.getString(0), r.getString(1)))
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
     for ((docId, text) <- sourceDocs.take(100)) {
@@ -106,9 +105,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("markdown render == kernel renderMarkdown + finalize per doc") {
-    val docs = Corpus.docsTable(spark, sfDir)
-    val kept = DedupeOps.exactKept(ExtractionJob.filteredChunks(docs))
-    val got = Render.markdown(kept, lit(""), includeChunkIds = true)
+    val got = Queries.queries("q08_a3_markdown")(spark, sfDir)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     for ((docId, text) <- sourceDocs.take(100)) {
       val raw = Corpus.rawTextLocal(docId, text)
@@ -219,6 +216,36 @@ class PipelineSpec extends AnyFunSuite {
     assert(accent.count() == sourceDocs.size.toLong)
   }
 
+  test("chunk ids widen past 9,999 like the kernel's c%04d") {
+    import spark.implicits._
+    val n = 10001
+    val text = (1 to n)
+      .map(i => f"paragraph $i%05d of one long document, padded past the sixty-byte minimum")
+      .mkString("\n\n")
+    val docs = Seq(("wide", text)).toDF("doc_id", "t")
+      .select(col("doc_id"), array(struct(
+        lit("text").as("kind"), col("t").as("text"),
+        lit("").as("media_ref"), lit(0).as("offset"))).as("spans"))
+    val got = ExtractionJob.chunks(docs).orderBy("idx").select("id").as[String].collect().toSeq
+    val expected = TextKernel.chunkText(text, Corpus.MinChunkChars).map(_.id)
+    assert(expected.length == n && expected.last == "c10001")
+    assert(got.distinct.length == n, "every chunk keeps its own id")
+    assert(got == expected)
+  }
+
+  test("q10 staged names widen past 9,999 like the reference's %04d") {
+    import spark.implicits._
+    val refs = (1 to 10001).map(i => s"img_$i.png")
+    val docs = Seq(streaming.TestDoc("many",
+      refs.zipWithIndex.map { case (r, i) => streaming.TestSpan("media", "", r, i) })).toDF()
+    val got = Queries.stagedNames(docs).select("media_ref", "staged")
+      .as[(String, String)].collect().toMap
+    val expected = TextKernel.naturalSort(refs).zipWithIndex
+      .map { case (r, i) => r -> TextKernel.stagedName(r, i) }.toMap
+    assert(got.values.toSet.size == refs.size, "every media span keeps its own name")
+    assert(got == expected)
+  }
+
   test("large-document skew: a 100x doc stays correct (north_rule skew surface)") {
     import spark.implicits._
     // one pathological doc with 300 paragraphs next to two 3-paragraph docs
@@ -324,8 +351,12 @@ class PipelineSpec extends AnyFunSuite {
 
   test("stats invariants hold per doc: kept+dropped=input, exact+near=dropped") {
     val docs = Corpus.docsTable(spark, sfDir)
-    import spark.implicits._
-    val st = DedupeOps.stats(ExtractionJob.dedup(docs)(spark).as[DedupRow])
+    val st = ExtractionJob.dedup(docs)(spark).groupBy(col("doc_id")).agg(
+      count(lit(1)).as("input_count"),
+      sum(when(col("kept"), 1L).otherwise(0L)).as("kept_count"),
+      sum(when(!col("kept"), 1L).otherwise(0L)).as("dropped_count"),
+      sum(when(col("reason") === "exact_duplicate", 1L).otherwise(0L)).as("exact_dups"),
+      sum(when(col("reason") === "near_duplicate", 1L).otherwise(0L)).as("near_dups"))
     val bad = st.filter(
       col("kept_count") + col("dropped_count") =!= col("input_count") ||
         col("exact_dups") + col("near_dups") =!= col("dropped_count")).count()
@@ -344,7 +375,10 @@ class PipelineSpec extends AnyFunSuite {
     for ((name, df) <- Seq(
         "dedup" -> ExtractionJob.dedup(docs)(spark),
         "outputSpans" -> ExtractionJob.outputSpans(docs)(spark),
-        "metrics" -> ExtractionJob.metrics(docs)(spark))) {
+        "metrics" -> ExtractionJob.metrics(docs)(spark),
+        "chunks" -> ExtractionJob.chunks(docs),
+        "filteredChunks" -> ExtractionJob.filteredChunks(docs),
+        "markdown" -> ExtractionJob.markdown(docs, ExtractionJob.PipelineConfig()))) {
       assert(df.collect().nonEmpty)
       val plan = df.queryExecution.executedPlan
       val exchanges = helper.collect(plan) { case e: Exchange => e }
