@@ -6,12 +6,13 @@ import graft.kernel.DedupeConfig
 import graft.ops.{Corpus, Render}
 import graft.table.SnapshotTable
 
-/** spark-submit entry point (north_star: "runs via spark-submit with
-  * explicit doc_id-salted repartitioning, Iceberg snapshot-based
-  * checkpointing so a killed run resumes at partition granularity, and
-  * per-partition lineage + extraction metrics written to a metrics table"),
-  * carrying the reference CLI's full knob surface
-  * (cmd/pipeline/main.go:64-96).
+/** spark-submit entry point: explicit doc_id-salted repartitioning,
+  * Iceberg snapshot-based checkpointing so a killed run resumes at
+  * partition granularity, and per-partition lineage recorded in the
+  * snapshot manifests (each commit's per-bucket doc/row counts and task
+  * time, counted by the write itself; [[SnapshotTable.metrics]] reads them
+  * back from the manifest chain). Carries the reference CLI's full knob
+  * surface (cmd/pipeline/main.go:64-96).
   *
   * Usage:
   *   spark-submit --class graft.jobs.SubmitMain <jar> \
@@ -124,10 +125,10 @@ object SubmitMain {
     if (done.size == args.buckets) {
       writeSinks(args)
       writeArtifacts(args)
-      val m = SnapshotTable.metrics(args.out)
-      val rows = m.agg(sum("n_rows")).head.getLong(0)
-      val nDocs = m.agg(sum("n_docs")).head.getLong(0)
-      println(s"[graft] table complete: $nDocs docs, $rows audit rows")
+      import spark.implicits._
+      val m = SnapshotTable.metrics(args.out).as[SnapshotTable.BucketLineage].collect()
+      println(s"[graft] table complete: ${m.map(_.n_docs).sum} docs, " +
+        s"${m.map(_.n_rows).sum} audit rows")
     }
     spark.stop()
   }

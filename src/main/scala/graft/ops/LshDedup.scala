@@ -66,13 +66,7 @@ object LshDedup {
     // once, in the output-sized expansion join (measured on the 10x
     // identical-replica probe: the doc-level band join was the dominant
     // cost at 58 s; see OPTIMIZATION_r06.md).
-    val distinctSigs = snap.select(col("sig")).distinct()
-    val banded = distinctSigs.select(
-      col("sig"),
-      explode(sequence(lit(0), lit(Bands - 1))).as("band"))
-      .withColumn("band_key",
-        expr(s"shiftrightunsigned(sig, band * $BandBits)")
-          .bitwiseAND(lit((1L << BandBits) - 1)))
+    val banded = bandedSigs(snap.select(col("sig")).distinct(), "sig")
     val a = banded.select(col("band"), col("band_key"), col("sig").as("sig_a"))
     val b = banded.select(col("band"), col("band_key"), col("sig").as("sig_b"))
     // distinct unordered sig pairs within Hamming range (a pair is found
@@ -100,6 +94,17 @@ object LshDedup {
     // disjoint by construction (same sig vs different sigs) — no distinct
     cross.unionByName(within)
   }
+
+  /** The band layout: one row per (input row, band) carrying `band` and
+    * `band_key`, the band's [[BandBits]]-bit slice of the 64-bit signature
+    * in `sigCol`. The single owner of the banding that [[nearDupPairs]],
+    * [[Splits.incrementalNearDups]] and `StreamingScreen` join on.
+    */
+  private[graft] def bandedSigs(df: DataFrame, sigCol: String): DataFrame =
+    df.withColumn("band", explode(sequence(lit(0), lit(Bands - 1))))
+      .withColumn("band_key",
+        expr(s"shiftrightunsigned($sigCol, band * $BandBits)")
+          .bitwiseAND(lit((1L << BandBits) - 1)))
 
   /** Per-doc whole-document signatures from assembled raw text. */
   def docSignatures(assembled: DataFrame, k: Int): DataFrame =
@@ -193,6 +198,11 @@ object LshDedup {
     * labels-messages joins are narrow. A round is ONE job with 3 shuffles:
     * the message reduce, the jump requests to their targets, and the jump
     * answers back; its single aggregate yields (changed, processedEdges).
+    * RDDs are forced here, against the "no RDD unless forced" default: a
+    * DataFrame join cannot be told that both sides already share a
+    * partitioner across loop iterations, so every round would re-shuffle
+    * the full edge and label sets (and AQE may re-coalesce each side
+    * differently); co-partitioned RDD joins keep those joins narrow.
     *
     * Durability: by default each round's labels are truncated with RDD
     * `localCheckpoint`, whose blocks live on EXECUTORS — cheap and right for

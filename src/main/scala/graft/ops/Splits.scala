@@ -192,16 +192,6 @@ object Splits {
       Exprs.simhash64(nrm, k).as("sig"))
   }
 
-  /** Band-key explosion shared by the incremental screen and its streaming
-    * twin: one row per (doc, band) carrying the band's bit-slice of the
-    * signature (same banding as [[LshDedup.nearDupPairs]]).
-    */
-  private[graft] def bandedSigs(df: DataFrame, sigCol: String): DataFrame =
-    df.withColumn("band", explode(sequence(lit(0), lit(LshDedup.Bands - 1))))
-      .withColumn("band_key",
-        expr(s"shiftrightunsigned($sigCol, band * ${LshDedup.BandBits})")
-          .bitwiseAND(lit((1L << LshDedup.BandBits) - 1)))
-
   /** Incremental dedup screen: classify each INCOMING doc against an
     * existing BASE corpus as `exact` (identical normalized text — matched
     * to the minimum base doc_id), `near` (Hamming(simhash) <= threshold —
@@ -227,7 +217,6 @@ object Splits {
     val bs = sigTable(base, k).select(
       col("doc_id").as("base_id"), col("xhash").as("base_xhash"),
       col("sig").as("base_sig"))
-    def banded(df: DataFrame, sigCol: String): DataFrame = bandedSigs(df, sigCol)
 
     // ONE candidate stream, classification folded into the aggregation
     // ordering: min(struct(not_exact, distance, base_id)) makes an exact
@@ -240,8 +229,8 @@ object Splits {
     val exactC = in.join(bs, col("xhash") === col("base_xhash"))
       .select(col("doc_id"), lit(0).as("not_exact"),
         lit(0).cast("int").as("distance"), col("base_id"))
-    val nearC = banded(in, "sig")
-      .join(banded(bs, "base_sig"), Seq("band", "band_key"))
+    val nearC = LshDedup.bandedSigs(in, "sig")
+      .join(LshDedup.bandedSigs(bs, "base_sig"), Seq("band", "band_key"))
       .filter(Exprs.hamming(col("sig"), col("base_sig")) <= threshold)
       .select(col("doc_id"), lit(1).as("not_exact"),
         Exprs.hamming(col("sig"), col("base_sig")).cast("int").as("distance"),

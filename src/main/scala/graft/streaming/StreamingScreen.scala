@@ -62,8 +62,8 @@ object StreamingScreen {
         lit(if (fromBatch) 1 else 0).as("from_batch"), col("m_id"))
     }
     def nearC(base: DataFrame, fromBatch: Boolean): DataFrame =
-      Splits.bandedSigs(sigs, "sig")
-        .join(Splits.bandedSigs(base, "m_sig"), Seq("band", "band_key"))
+      LshDedup.bandedSigs(sigs, "sig")
+        .join(LshDedup.bandedSigs(base, "m_sig"), Seq("band", "band_key"))
         .filter(Exprs.hamming(col("sig"), col("m_sig")) <= threshold &&
           (if (fromBatch) col("m_id") < col("doc_id") else lit(true)))
         .select(col("doc_id"), lit(1).as("not_exact"),

@@ -1,9 +1,11 @@
 package graft.table
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.CollectionAccumulator
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-STYLE snapshot layout on plain Parquet (no Iceberg runtime jar is
@@ -12,34 +14,45 @@ import scala.jdk.CollectionConverters._
   *   <root>/data/bucket=N/ parquet files      bucketed output data
   *   <root>/_snapshots/v<k>.json           one manifest per committed run
   *   <root>/_snapshots/current             pointer to the latest manifest
-  *   <root>/_metrics/ parquet files             per-bucket lineage + metrics rows
+  *
+  * The manifest is the only record of a commit: its parent, the cumulative
+  * completed-bucket set, the output schema (DDL and its md5), and per-bucket
+  * lineage (input docs, output rows, wall ms, and the DATA FILES the bucket
+  * committed). There is no separate metrics table: the parquet metrics
+  * directory that older builds appended next to `_snapshots` is ignored.
   *
   * Semantics matched to Iceberg snapshots at partition granularity:
   * a killed run resumes from the last committed manifest — completed
-  * buckets are never recomputed; each manifest records its parent, the
-  * cumulative completed-bucket set, and per-bucket lineage (input docs,
-  * output rows, wall ms, and the DATA FILES the bucket committed).
-  * [[read]] consumes only manifest-listed files, the real Iceberg reader
-  * contract — uncommitted/stray files in a committed bucket dir are
-  * invisible on read-back, not silently mixed in.
+  * buckets are never recomputed. [[read]] consumes only manifest-listed
+  * files, the real Iceberg reader contract — uncommitted/stray files in a
+  * committed bucket dir are invisible on read-back, not silently mixed in.
   *
   * Scale notes: buckets are hash partitions of doc_id (`pmod(xxhash64)`),
   * which salts document PLACEMENT uniformly — the defense against
   * large-document skew the north_rule asks for (a doc's sequential dedup
   * can never be split, so placement is the only knob; AQE handles residual
   * size skew within the run). One run processes ALL missing buckets in ONE
-  * Spark job (`partitionBy(bucket)` write), so resume granularity costs no
-  * extra jobs.
+  * Spark job (`partitionBy(bucket)` write) and launches no other job, so
+  * resume granularity costs no extra jobs.
   */
 object SnapshotTable {
 
-  /** `wall_ms` is MEASURED per-bucket task time (not run wall / bucket
-    * count): every row's production time is attributed to its bucket by a
-    * timing iterator wrapped around the pipeline output (see
-    * [[timedByBucket]]), so skew between buckets is visible in lineage.
+  /** One committed bucket's lineage, counted by the write itself (see
+    * [[countedByBucket]]), never by a re-scan:
+    *   - `n_rows`: output rows of the bucket;
+    *   - `n_docs`: distinct non-null `doc_id`s of the bucket within each
+    *     write task, summed over tasks. A doc_id hashes to one bucket, so
+    *     this equals `countDistinct(doc_id)` per bucket unless one doc_id's
+    *     rows land in two tasks, which takes duplicate doc_id input rows
+    *     (ExtractionJob treats those as separate documents);
+    *   - `wall_ms`: MEASURED per-bucket task time (not run wall / bucket
+    *     count): every row's production time is attributed to its bucket,
+    *     so skew between buckets is visible.
     */
   final case class BucketLineage(
       bucket: Int, n_docs: Long, n_rows: Long, wall_ms: Long, snapshot_id: Int)
+
+  private val Json = new ObjectMapper()
 
   private def snapshotsDir(root: String) = Paths.get(root, "_snapshots")
 
@@ -47,79 +60,74 @@ object SnapshotTable {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes(UTF_8)).map("%02x".format(_)).mkString
 
-  /** Read the cumulative completed-bucket set from the current manifest. */
-  def completedBuckets(root: String): Set[Int] = {
-    val cur = snapshotsDir(root).resolve("current")
-    if (!Files.exists(cur)) Set.empty
-    else {
-      val manifest = snapshotsDir(root).resolve(Files.readString(cur).trim)
-      parseCompleted(Files.readString(manifest))
-    }
-  }
-
-  private[table] def parseCompleted(json: String): Set[Int] = {
-    // minimal parser for our own manifest shape: "completed":[1,2,3]
-    val m = """"completed"\s*:\s*\[([0-9,\s]*)\]""".r
-    m.findFirstMatchIn(json) match {
-      case Some(g) if g.group(1).trim.nonEmpty =>
-        g.group(1).split(",").map(_.trim.toInt).toSet
-      case _ => Set.empty
-    }
-  }
-
   private def currentSnapshotId(root: String): Int = {
     val cur = snapshotsDir(root).resolve("current")
     if (!Files.exists(cur)) 0
     else Files.readString(cur).trim.stripPrefix("v").stripSuffix(".json").toInt
   }
 
-  /** Schema marker of the current snapshot, if any. Guards resume against
-    * silently mixing rows of a different pipeline output shape into a table
-    * written by an older code version (the write would succeed and only the
-    * sink derivation would fail, after the mixed data was committed).
-    */
-  private[table] def currentSchemaMd5(root: String): Option[String] = {
-    val cur = snapshotsDir(root).resolve("current")
-    if (!Files.exists(cur)) None
-    else {
-      val manifest = snapshotsDir(root).resolve(Files.readString(cur).trim)
-      """"schema_md5"\s*:\s*"([0-9a-f]{32})"""".r
-        .findFirstMatchIn(Files.readString(manifest)).map(_.group(1))
-    }
-  }
+  private def manifest(root: String, id: Int): JsonNode =
+    Json.readTree(Files.readString(snapshotsDir(root).resolve(s"v$id.json")))
 
-  private def commitSnapshot(root: String, completed: Set[Int],
-      lineage: Seq[BucketLineage], schemaMd5: String,
-      bucketFiles: Map[Int, Seq[String]]): Int = {
+  private def current(root: String): Option[JsonNode] =
+    Some(currentSnapshotId(root)).filter(_ > 0).map(manifest(root, _))
+
+  private def textField(m: JsonNode, name: String): Option[String] =
+    Option(m.get(name)).filter(_.isTextual).map(_.asText)
+
+  /** Read the cumulative completed-bucket set from the current manifest. */
+  def completedBuckets(root: String): Set[Int] =
+    current(root).fold(Set.empty[Int])(
+      _.path("completed").elements().asScala.map(_.asInt).toSet)
+
+  /** Every committed bucket's lineage with its read paths (relative to
+    * `<root>/data`), walking v1 -> current (ids are sequential by
+    * construction; buckets commit exactly once, so entries never collide).
+    * An entry WITH a `files` list contributes exactly those files (the
+    * Iceberg contract); an entry WITHOUT one — written by a pre-file-level
+    * build — falls back to its whole `bucket=N/` directory (marker: a path
+    * ending in "/"), so resuming a legacy table cannot silently lose the
+    * legacy buckets' rows.
+    */
+  private def committed(root: String): Seq[(BucketLineage, Seq[String])] =
+    (1 to currentSnapshotId(root)).flatMap { id =>
+      manifest(root, id).path("lineage").elements().asScala.map { e =>
+        val b = e.get("bucket").asInt
+        val files = Option(e.get("files")).fold(Seq(s"bucket=$b/"))(
+          _.elements().asScala.map(f => s"bucket=$b/${f.asText}").toSeq)
+        BucketLineage(b, e.get("n_docs").asLong, e.get("n_rows").asLong,
+          e.get("wall_ms").asLong, id) -> files
+      }
+    }
+
+  private def commitSnapshot(root: String, id: Int, completed: Set[Int], ddl: String,
+      lineage: Seq[BucketLineage], bucketFiles: Map[Int, Seq[String]]): Unit = {
     val dir = snapshotsDir(root)
     Files.createDirectories(dir)
-    val parent = currentSnapshotId(root)
-    val id = parent + 1
-    val lineageJson = lineage.map { l =>
-      val files = bucketFiles.getOrElse(l.bucket, Seq.empty)
-        .map(f => s""""$f"""").mkString(",")
-      s"""{"bucket":${l.bucket},"n_docs":${l.n_docs},"n_rows":${l.n_rows},"wall_ms":${l.wall_ms},"files":[$files]}"""
-    }.mkString("[", ",", "]")
-    val json =
-      s"""{"snapshot_id":$id,"parent_id":$parent,""" +
-        s""""timestamp":"${java.time.Instant.now()}",""" +
-        s""""schema_md5":"$schemaMd5",""" +
-        s""""completed":[${completed.toSeq.sorted.mkString(",")}],""" +
-        s""""lineage":$lineageJson}"""
-    Files.writeString(dir.resolve(s"v$id.json"), json, UTF_8)
+    val m = Json.createObjectNode()
+      .put("snapshot_id", id).put("parent_id", id - 1)
+      .put("timestamp", java.time.Instant.now().toString)
+      .put("schema_md5", md5Hex(ddl)).put("schema", ddl)
+    val done = m.putArray("completed")
+    completed.toSeq.sorted.foreach(b => done.add(b))
+    val entries = m.putArray("lineage")
+    lineage.foreach { l =>
+      val files = entries.addObject().put("bucket", l.bucket).put("n_docs", l.n_docs)
+        .put("n_rows", l.n_rows).put("wall_ms", l.wall_ms).putArray("files")
+      bucketFiles(l.bucket).foreach(f => files.add(f))
+    }
+    Files.writeString(dir.resolve(s"v$id.json"), Json.writeValueAsString(m), UTF_8)
     // atomic-enough pointer flip (single writer; real Iceberg uses a catalog CAS)
     val tmp = dir.resolve("current.tmp")
     Files.writeString(tmp, s"v$id.json", UTF_8)
     Files.move(tmp, dir.resolve("current"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    id
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Resumable bucketed materialization of `pipeline(docs)`:
     * processes only buckets missing from the current snapshot (at most
     * `maxBucketsPerRun` of them, which is how a kill is simulated in tests),
-    * appends their data + a new manifest + lineage/metrics rows. Returns
+    * appends their data and a new manifest carrying their lineage. Returns
     * the set of buckets completed by THIS run.
     */
   def runResumable(
@@ -141,8 +149,9 @@ object SnapshotTable {
     // refuse to resume a table whose committed rows have a different pipeline
     // output shape (e.g. out dir written by an older code version): mixing
     // schemas would commit fine and only break at sink-derivation time
-    val schemaMd5 = md5Hex(out.schema.toDDL)
-    currentSchemaMd5(root).foreach { prev =>
+    val ddl = out.schema.toDDL
+    val schemaMd5 = md5Hex(ddl)
+    current(root).flatMap(textField(_, "schema_md5")).foreach { prev =>
       require(prev == schemaMd5,
         s"snapshot table at $root was committed with a different pipeline " +
           s"output schema (manifest schema_md5=$prev, current=$schemaMd5); " +
@@ -160,34 +169,19 @@ object SnapshotTable {
       }
     }
 
-    val bucketNanos = spark.sparkContext.collectionAccumulator[(Int, Long)]("graft.bucketNanos")
-    timedByBucket(out, bucketNanos)
+    val acc = spark.sparkContext.collectionAccumulator[(Int, Long, Long, Long)](LineageAccumulator)
+    countedByBucket(out, acc)
       .write.mode(SaveMode.Append).partitionBy("bucket").parquet(s"$root/data")
 
-    // lineage: per-bucket doc/row counts from the files just written — a
-    // cheap parquet re-scan of only the new bucket dirs, NOT a second
-    // execution of the pipeline (the former out.groupBy here re-ran the
-    // whole pipeline plan, doubling job cost). A bucket with zero output
-    // rows gets NO dir from partitionBy — filter to dirs that exist, or the
-    // read throws PATH_NOT_FOUND after the data append but before the
-    // commit, wedging every future resume at the same point.
-    val newDirs = missing.map(b => s"$root/data/bucket=$b")
-      .filter(p => Files.exists(Paths.get(p)))
-    val counts =
-      if (newDirs.isEmpty) Map.empty[Int, (Long, Long)]
-      else spark.read
-        .option("basePath", s"$root/data")
-        .parquet(newDirs: _*)
-        .groupBy("bucket").agg(
-          count(lit(1)).as("n_rows"),
-          countDistinct(col("doc_id")).as("n_docs"))
-        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val nanos = bucketNanos.value.asScala
-      .groupMapReduce(_._1)(_._2)(_ + _)
+    // (nanos, rows, docs) per bucket, summed over write tasks; a bucket with
+    // zero output rows has no entry (and no dir from partitionBy)
+    val counts = acc.value.asScala.groupMapReduce(_._1)(c => (c._2, c._3, c._4)) {
+      case ((n1, r1, d1), (n2, r2, d2)) => (n1 + n2, r1 + r2, d1 + d2)
+    }
     val id = currentSnapshotId(root) + 1
     val lineage = missing.map { b =>
-      val (rows, docsN) = counts.getOrElse(b, (0L, 0L))
-      BucketLineage(b, docsN, rows, nanos.getOrElse(b, 0L) / 1000000L, id)
+      val (nanos, rows, docsN) = counts.getOrElse(b, (0L, 0L, 0L))
+      BucketLineage(b, docsN, rows, nanos / 1000000L, id)
     }
     // file-level lineage: record exactly the data files this run produced
     // per bucket, so readers see only manifest-listed files (Iceberg's
@@ -208,30 +202,39 @@ object SnapshotTable {
         }
       b -> fs
     }.toMap
-    commitSnapshot(root, done ++ missing, lineage, schemaMd5, bucketFiles)
-
-    import spark.implicits._
-    lineage.toDF().write.mode(SaveMode.Append).parquet(s"$root/_metrics")
+    commitSnapshot(root, id, done ++ missing, ddl, lineage, bucketFiles)
     missing.toSet
   }
 
-  /** Wrap the bucketed pipeline output with a per-partition timing iterator
-    * that attributes each row's PRODUCTION time (the upstream pipeline's
+  /** Name of the accumulator that carries the write's per-bucket counts. */
+  private[table] val LineageAccumulator = "graft.bucketLineage"
+
+  /** Wrap the bucketed pipeline output with a per-partition iterator that
+    * counts, per bucket, each row's PRODUCTION time (the upstream pipeline's
     * hasNext+next work, which is where pull-based whole-stage codegen spends
-    * it) to that row's bucket, flushing aggregated (bucket, nanos) into the
-    * accumulator at partition end. Measures actual per-bucket task time with
-    * no extra exchange and no pipeline re-execution; the only cost is the
-    * Row encode/decode at this single point. Task retries double-count into
-    * the accumulator — acceptable for lineage metrics, not data.
+    * it), its rows, and its distinct doc_ids, and flushes
+    * (bucket, nanos, rows, docs) into the accumulator at partition end.
+    * It runs in the write's result stage: no extra exchange, no pipeline
+    * re-execution, no re-scan; the costs are the Row encode/decode at this
+    * single point and a set of the task's doc_ids (one entry per document,
+    * while the write's sort on `bucket` already buffers every row).
+    *
+    * Counts land exactly once per partition: the DAGScheduler merges a
+    * result task's accumulator updates only while its output is not yet
+    * marked finished (a speculative or resubmitted twin is ignored), and a
+    * failed or killed attempt reports only `countFailedValues`
+    * accumulators, which a `CollectionAccumulator` is not.
     */
-  private def timedByBucket(
-      out: DataFrame,
-      acc: org.apache.spark.util.CollectionAccumulator[(Int, Long)]): DataFrame = {
+  private def countedByBucket(
+      out: DataFrame, acc: CollectionAccumulator[(Int, Long, Long, Long)]): DataFrame = {
     val schema = out.schema
     val bucketIdx = schema.fieldIndex("bucket")
+    val docIdx = schema.fieldIndex("doc_id")
     out.mapPartitions { it =>
-      new Iterator[org.apache.spark.sql.Row] {
-        private val agg = scala.collection.mutable.HashMap.empty[Int, Long]
+      new Iterator[Row] {
+        // bucket -> (nanos, rows, docs)
+        private val agg = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
+        private val seen = scala.collection.mutable.HashSet.empty[Any]
         private var pending = 0L
         private var flushed = false
         override def hasNext: Boolean = {
@@ -240,69 +243,47 @@ object SnapshotTable {
           pending += System.nanoTime() - t0
           if (!h && !flushed) {
             flushed = true
-            agg.foreach { case (b, n) => acc.add((b, n)) }
+            agg.foreach { case (b, c) => acc.add((b, c(0), c(1), c(2))) }
           }
           h
         }
-        override def next(): org.apache.spark.sql.Row = {
+        override def next(): Row = {
           val t0 = System.nanoTime()
           val r = it.next()
           pending += System.nanoTime() - t0
-          agg.updateWith(r.getInt(bucketIdx)) {
-            case Some(n) => Some(n + pending); case None => Some(pending)
-          }
+          val c = agg.getOrElseUpdate(r.getInt(bucketIdx), new Array[Long](3))
+          c(0) += pending
+          c(1) += 1
+          if (!r.isNullAt(docIdx) && seen.add(r.get(docIdx))) c(2) += 1
           pending = 0L
           r
         }
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
-  }
-
-  /** All data files recorded by the manifest chain, as paths relative to
-    * `<root>/data`. Walks current -> parent (ids are sequential by
-    * construction); buckets commit exactly once, so entries never collide.
-    */
-  /** Per-committed-bucket read paths from the manifest chain. A lineage
-    * entry WITH a `files` list contributes exactly those files (the
-    * Iceberg contract); an entry WITHOUT one — written by a pre-file-level
-    * manifest build — falls back to its whole `bucket=N/` directory
-    * (marker: a path ending in "/"), so resuming a legacy table under this
-    * build cannot silently lose the legacy buckets' rows (a chain-wide
-    * any-files-present check would: one new-format commit would hide every
-    * old-format bucket).
-    */
-  private[table] def manifestFiles(root: String): Seq[String] = {
-    val dir = snapshotsDir(root)
-    if (!Files.exists(dir.resolve("current"))) return Seq.empty
-    val entry = """"bucket":(\d+)(?:[^}]*?"files":\[([^\]]*)\])?""".r
-    (1 to currentSnapshotId(root)).flatMap { id =>
-      val json = Files.readString(dir.resolve(s"v$id.json"))
-      entry.findAllMatchIn(json).flatMap { m =>
-        val bucket = m.group(1)
-        Option(m.group(2)) match {
-          case None => Iterator(s"bucket=$bucket/") // legacy entry: whole dir
-          case Some(fs) => fs.split(",").iterator
-            .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-            .filter(_.nonEmpty)
-            .map(f => s"bucket=$bucket/$f")
-        }
-      }
-    }
+    }(Encoders.row(schema))
   }
 
   /** Read the materialized table back: ONLY the files the manifest chain
     * lists (the Iceberg reader contract) — a stray or partial file sitting
     * in a committed bucket dir is invisible here, exactly as it would be to
     * a real Iceberg reader. `basePath` keeps the `bucket` partition column.
+    * The schema comes from the current manifest, so no read infers it, and
+    * a table whose committed buckets are all empty reads back as an empty
+    * frame of that schema. A manifest from a build that did not record the
+    * schema falls back to inference.
     */
   def read(root: String)(implicit spark: SparkSession): DataFrame = {
-    val files = manifestFiles(root)
-    if (files.isEmpty) spark.read.parquet(s"$root/data") // no/empty snapshot: surface the scan error
-    else spark.read.option("basePath", s"$root/data")
-      .parquet(files.map(f => s"$root/data/${f.stripSuffix("/")}"): _*)
+    val files = committed(root).flatMap(_._2).map(f => s"$root/data/${f.stripSuffix("/")}")
+    val reader = spark.read.option("basePath", s"$root/data")
+    current(root).flatMap(textField(_, "schema")) match {
+      case Some(ddl) => reader.schema(ddl).parquet(files: _*)
+      case None if files.isEmpty => spark.read.parquet(s"$root/data") // no/empty snapshot: surface the scan error
+      case None => reader.parquet(files: _*)
+    }
   }
 
-  /** Lineage/metrics table. */
-  def metrics(root: String)(implicit spark: SparkSession): DataFrame =
-    spark.read.parquet(s"$root/_metrics")
+  /** Per-bucket lineage of every commit, read from the manifest chain. */
+  def metrics(root: String)(implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    committed(root).map(_._1).toDF()
+  }
 }

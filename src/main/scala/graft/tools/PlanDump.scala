@@ -3,9 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: write `.explain("formatted")` output for the given query names
-  * to files, under the SAME session configuration as graft.Bench (local[32],
-  * shuffle.partitions = cpus, AQE on) so plan shapes match what the bench
-  * actually executes. Usage:
+  * to files, under the SAME session configuration as graft.Bench
+  * (local[SPARK_GRAFT_CPUS], default 4; shuffle.partitions = cpus; AQE on)
+  * so plan shapes match what the bench actually executes. Usage:
   *   runMain graft.tools.PlanDump <sfDir> <outDir> [names...]
   * (default names: all queries)
   */
@@ -14,7 +14,7 @@ object PlanDump {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "plans/r06"
     val names = if (args.length > 2) args.drop(2).toSeq else graft.Queries.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

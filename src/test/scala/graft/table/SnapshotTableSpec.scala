@@ -55,6 +55,84 @@ class SnapshotTableSpec extends AnyFunSuite {
     val m = SnapshotTable.metrics(root)
     assert(m.select("bucket").distinct().count() == nBuckets)
     assert(m.agg(sum("n_rows")).head.getLong(0) == expected.length.toLong)
+
+    // and the counts taken inside the write equal a re-scan of the table
+    val lineage = m.collect()
+      .map(r => r.getAs[Int]("bucket") -> (r.getAs[Long]("n_rows") -> r.getAs[Long]("n_docs")))
+      .toMap
+    val rescan = SnapshotTable.read(root).groupBy("bucket")
+      .agg(count(lit(1)), countDistinct(col("doc_id"))).collect()
+      .map(r => r.getInt(0) -> (r.getLong(1) -> r.getLong(2))).toMap
+    assert(lineage.size == nBuckets)
+    assert(lineage.filter(_._2._1 > 0L) == rescan)
+  }
+
+  test("runResumable launches no Spark job after its data-write job") {
+    import org.apache.spark.scheduler._
+    val root = Files.createTempDirectory("snapjobs").toString
+    val docs = Corpus.docsTable(spark, sfDir)
+    val sc = spark.sparkContext
+    // per leg: its jobs, and the stages that carried the write's lineage
+    // accumulator; a marker job after each leg flushes the listener
+    val jobs = scala.collection.concurrent.TrieMap.empty[Int, Seq[Int]]
+    val writeStages = scala.collection.concurrent.TrieMap.empty[Int, Unit]
+    @volatile var marker = 0
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("snap-leg") => jobs.put(e.jobId, e.stageIds)
+          case Some("snap-marker") => marker += 1
+          case _ =>
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.accumulables.values
+            .exists(_.name.contains(SnapshotTable.LineageAccumulator)))
+          writeStages.put(e.stageInfo.stageId, ())
+    }
+    sc.addSparkListener(listener)
+    try {
+      for ((max, leg) <- Seq(2, Int.MaxValue).zipWithIndex) {
+        jobs.clear()
+        sc.setJobGroup("snap-leg", "runResumable")
+        assert(SnapshotTable.runResumable(docs, pipeline, root, 4, max).nonEmpty)
+        sc.setJobGroup("snap-marker", "marker")
+        sc.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime() + 30000000000L
+        while (marker <= leg && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(marker > leg, "listener never saw the marker job")
+        val ids = jobs.keys.toSeq.sorted
+        val write = ids.filter(j => jobs(j).exists(writeStages.contains))
+        assert(write.size == 1, s"leg $leg: jobs $ids, write jobs $write")
+        assert(ids.last == write.head,
+          s"leg $leg: jobs ${ids.filter(_ > write.head)} ran after the data write")
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("an all-empty committed table reads back empty with the pipeline schema") {
+    import spark.implicits._
+    import graft.jobs.SubmitMain
+    import graft.streaming.TestDoc
+    val cfg = ExtractionJob.PipelineConfig()
+    val dedup = (d: org.apache.spark.sql.DataFrame) => ExtractionJob.dedupWith(d, cfg)
+    // null spans are no document: every bucket commits with zero rows
+    val empty = (1 to 5).map(i => TestDoc(s"d$i", null)).toDF()
+    val root = Files.createTempDirectory("snapempty").toString
+    assert(SnapshotTable.runResumable(empty, dedup, root, 4) == (0 until 4).toSet)
+    assert(SnapshotTable.metrics(root).collect().forall(_.getAs[Long]("n_rows") == 0L))
+    val got = SnapshotTable.read(root)
+    assert(got.count() == 0L)
+
+    // the same schema a non-empty table of the same pipeline reads back with
+    val full = Files.createTempDirectory("snapfull").toString
+    SnapshotTable.runResumable(Corpus.docsTable(spark, sfDir).limit(20), dedup, full, 4)
+    assert(got.schema == SnapshotTable.read(full).schema)
+
+    SubmitMain.writeSinks(SubmitMain.Args(out = root, pipeline = cfg, emitReport = true))
+    assert(spark.read.parquet(s"$root/output_spans").count() == 0L)
   }
 
   test("zero-row buckets commit cleanly (no dir from partitionBy, no crash, 0-count lineage)") {
@@ -163,6 +241,29 @@ class SnapshotTableSpec extends AnyFunSuite {
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(got.length == expected.length,
       s"legacy-committed buckets lost on read-back: ${got.length} vs ${expected.length}")
+    assert(got.toSeq == expected.toSeq)
+  }
+
+  test("a manifest from a build that recorded no schema reads back and resumes") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    val root = Files.createTempDirectory("snap7").toString
+    val docs = Corpus.docsTable(spark, sfDir)
+    SnapshotTable.runResumable(docs, pipeline, root, 4, maxBucketsPerRun = 2)
+    val v1 = java.nio.file.Paths.get(s"$root/_snapshots/v1.json")
+    val json = new ObjectMapper()
+    val m = json.readTree(Files.readString(v1)).asInstanceOf[ObjectNode]
+    assert(m.remove("schema") != null, "fixture must drop the schema field")
+    Files.writeString(v1, json.writeValueAsString(m))
+
+    // read-back falls back to inference; resume keeps the schema guard
+    assert(SnapshotTable.read(root).count() ==
+      SnapshotTable.metrics(root).agg(sum("n_rows")).head.getLong(0))
+    SnapshotTable.runResumable(docs, pipeline, root, 4)
+    val got = SnapshotTable.read(root).drop("bucket")
+      .collect().map(_.toSeq).sortBy(_.toString)
+    val expected = pipeline(docs)
+      .collect().map(_.toSeq).sortBy(_.toString)
     assert(got.toSeq == expected.toSeq)
   }
 }
