@@ -44,7 +44,7 @@ object OracleSql {
 
   // ---- HTML boilerplate-strip family (dialect twins of graft.ops.Html) ----
 
-  /** Entity decode chain — same pairs/order as Html.decodeEntities
+  /** Entity decode chain — same pairs/order as HtmlVisibleTextExpr
     * (`&amp;` last); DuckDB plain replace() == Spark regexp_replace here
     * because none of the entity strings carry regex metacharacters.
     */

@@ -19,7 +19,8 @@ object NormalizeEval {
 }
 
 /** Static eval target for the fused HTML visible-text extraction — the
-  * byte-identical single-pass form of Html.visibleText's Column chain
+  * byte-identical single-pass form of the Column chain that HtmlLayoutSpec
+  * keeps as its reference
   *
   *   trim(regexp_replace(decodeEntities(regexp_replace(html, "<[^>]*>", " ")),
   *     "[ \t\r\n]+", " "))

@@ -59,9 +59,11 @@ object Curation {
   val EvalMod = 97L
 
   /** `checkpointDir`: when given, the post-dedup (doc_id, split, n_tokens)
-    * frame is materialized as parquet under it instead of locally
+    * frame is materialized as parquet under a fresh
+    * `<dir>/curation-<uuid>/` subdirectory per call instead of locally
     * checkpointed — survives executor loss on preemptible fleets, the same
-    * trade [[LshDedup.clusterWinners]] offers.
+    * trade [[LshDedup.clusterWinners]] offers, and a later call on the same
+    * dir leaves the files behind this call's lazy result alone.
     */
   def manifest(docs: DataFrame, budget: Long = Pack.DefaultBudget,
       checkpointDir: Option[String] = None): DataFrame = {
@@ -125,7 +127,7 @@ object Curation {
     val splitDone = winners.withColumn("split", Splits.splitOf(col("doc_id")))
     val withSplit = checkpointDir match {
       case Some(d) =>
-        val path = s"$d/curation_split"
+        val path = s"$d/curation-${java.util.UUID.randomUUID()}/curation_split"
         splitDone.write.mode("overwrite").parquet(path)
         docs.sparkSession.read.parquet(path)
       case None =>

@@ -44,36 +44,17 @@ object Html {
       regexp_replace(html, "(?s)<script[^>]*>.*?</script>", " "),
       "(?s)<style[^>]*>.*?</style>", " ")
 
-  /** Decode the fixed entity set the corpus uses; `&amp;` LAST so
-    * double-encoded sequences don't cascade.
-    */
-  def decodeEntities(c: Column): Column = {
-    val pairs = Seq("&lt;" -> "<", "&gt;" -> ">", "&quot;" -> "\"",
-      "&#39;" -> "'", "&nbsp;" -> " ", "&copy;" -> "(c)", "&amp;" -> "&")
-    pairs.foldLeft(c) { case (acc, (e, r)) => regexp_replace(acc, e, r) }
-  }
-
   /** Visible text of an HTML fragment: strip tags, decode entities,
     * collapse whitespace runs, trim — as ONE fused codegen scan
     * (graft.functions.HtmlVisibleTextExpr). The former ten-pass regex
     * chain (tag strip + 7 entity passes + collapse + trim) ran per BLOCK
     * on the q43/q44/q45 hot path; byte-parity of the fusion is spec-pinned
-    * against [[visibleTextChain]] on the rendered corpus.
+    * against that chain (kept in HtmlLayoutSpec) on the rendered corpus.
     */
   def visibleText(html: Column): Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.HtmlVisibleTextExpr(
         org.apache.spark.sql.graftbridge.Bridge.expression(html)))
-
-  /** The original Column-regex formulation of [[visibleText]] — kept as the
-    * in-engine reference the fused expression is spec-tested against (the
-    * NormalizeExpr / normColRegex twin discipline), and the shape the
-    * DuckDB oracle twin (OracleSql.html*) mirrors pass for pass.
-    */
-  def visibleTextChain(html: Column): Column =
-    trim(regexp_replace(
-      decodeEntities(regexp_replace(html, "<[^>]*>", " ")),
-      "[ \t\r\n]+", " "))
 
   /** Text inside anchor tags only — the numerator of link density. */
   def anchorText(html: Column): Column =

@@ -4,8 +4,10 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,6 +30,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * boilerplate) is handled by AQE skew-join splitting since the band join
   * is a plain equi-join. ([[clusterWinners]] runs as RDD joins, outside
   * AQE.)
+  *
+  * What keeps the text out of every exchange: the signature, pair and
+  * component stages never select it, and [[clusterWinners]] returns its
+  * labels with their measured size and row count as plan statistics, so
+  * [[dedupedDocs]] broadcasts the winner side to the docs instead of
+  * shuffling the docs to a sort-merge join (see there for the threshold).
   */
 object LshDedup {
 
@@ -122,11 +130,15 @@ object LshDedup {
     * Scale shape: `winners` maps ONLY clustered docs (docs without an edge
     * never enter [[clusterWinners]]), so both joins below key on doc_id —
     * a left join to decide survival and a left join against the per-winner
-    * component size aggregate. No payload ever enters the winner/size
-    * exchanges (they carry (doc_id, winner) only); the doc text rides the
-    * docs side of an equi-join, and at web scale the winners side is the
-    * duplicate fraction of the corpus, typically broadcast-able after AQE
-    * measures it.
+    * component size aggregate. Neither the winner rows nor the size
+    * aggregate carry payload. Whether the doc text is shuffled depends on
+    * the planner's size estimate of the winners side: [[clusterWinners]]
+    * reports its measured size, so while that side (and the size aggregate
+    * derived from it) is under `spark.sql.autoBroadcastJoinThreshold`, both
+    * joins are broadcast hash joins and the docs never leave their scan
+    * partitions. Above the threshold (or for a `winners` frame of unknown
+    * size) they are sort-merge joins that shuffle the docs by doc_id; the
+    * output is the same either way.
     */
   def dedupedDocs(docs: DataFrame, winners: DataFrame): DataFrame = {
     val sizes = winners.groupBy(col("winner"))
@@ -197,7 +209,11 @@ object LshDedup {
     * co-partitioned with them, so round 0 and the edges-delta and
     * labels-messages joins are narrow. A round is ONE job with 3 shuffles:
     * the message reduce, the jump requests to their targets, and the jump
-    * answers back; its single aggregate yields (changed, processedEdges).
+    * answers back; its single aggregate yields (changed, processedEdges)
+    * and the labels' row count and id bytes. The returned frame carries
+    * those two as its plan statistics (sizeInBytes, rowCount), so joins
+    * against it are planned from a measured size, not from the 8 EiB
+    * default of a frame over an RDD.
     * RDDs are forced here, against the "no RDD unless forced" default: a
     * DataFrame join cannot be told that both sides already share a
     * partitioner across loop iterations, so every round would re-shuffle
@@ -208,13 +224,15 @@ object LshDedup {
     * `localCheckpoint`, whose blocks live on EXECUTORS — cheap and right for
     * local mode, but an executor lost mid-iteration takes blocks with it
     * whose lineage no longer exists, killing the whole job. Passing
-    * `checkpointDir` makes each round durable as `<dir>/labels_r<N>`
-    * parquet (HDFS/S3-backed on a real cluster): an executor loss costs a
-    * recompute from the last durable round instead of the job. Round N's
-    * file is deleted as soon as round N+1 is committed, so the directory
-    * holds at most two rounds; the final round's file backs the RETURNED
-    * DataFrame and stays for the caller to clean up with the job output.
-    * The SparkContext-global checkpoint dir is never touched.
+    * `checkpointDir` makes each round durable as
+    * `<dir>/cc-<uuid>/labels_r<N>` parquet (HDFS/S3-backed on a real
+    * cluster), one fresh `cc-<uuid>` subdirectory per call so that calls
+    * sharing a dir never overwrite each other's rounds: an executor loss
+    * costs a recompute from the last durable round instead of the job.
+    * Round N's file is deleted as soon as round N+1 is committed, so the
+    * subdirectory holds at most two rounds; the final round's file backs
+    * the RETURNED DataFrame and stays for the caller to clean up with the
+    * job output. The SparkContext-global checkpoint dir is never touched.
     */
   def clusterWinners(pairs: DataFrame, maxRounds: Int = 20,
       checkpointDir: Option[String] = None,
@@ -223,29 +241,38 @@ object LshDedup {
     require(idType == tb,
       s"clusterWinners: doc_a and doc_b must share one id type, got $idType and $tb")
     val spark = pairs.sparkSession
-    // ids read as K, whose Ordering is Spark SQL's for the id type
-    // (UTF8String compares UTF-8 bytes); `out` converts back for Rows
-    def run[K: ClassTag: Ordering](id: (Row, Int) => K, out: K => Any): DataFrame = {
+    // one fresh subdirectory per call: a later call on the same dir must not
+    // overwrite or delete the rounds behind this call's lazy result
+    val ckptDir = checkpointDir.map(d => s"$d/cc-${java.util.UUID.randomUUID()}")
+    // ids read as K straight from InternalRows; K's Ordering is Spark SQL's
+    // for the id type (UTF8String compares UTF-8 bytes), and K is also the
+    // InternalRow value the result frame and the round parquet carry.
+    // `width` is the id's byte size in the plan-statistics estimate.
+    def run[K: ClassTag: Ordering](id: (InternalRow, Int) => K, width: K => Int): DataFrame = {
       val least = implicitly[Ordering[K]].min(_: K, _: K)
       val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
       val labelSchema = StructType(
         Seq("doc_id", "winner", "prev").map(StructField(_, idType, nullable = false)) :+
           StructField("n_msgs", LongType, nullable = false))
+      def rows(df: DataFrame): RDD[InternalRow] = df.queryExecution.toRdd
       // doc -> (winner, prev, n_msgs), partitioned by `part`
       type Labels = RDD[(K, (K, K, Long))]
-      def ckpt(labels: Labels, round: Int): Labels = checkpointDir match {
+      def ckpt(labels: Labels, round: Int): Labels = ckptDir match {
         case Some(d) =>
           val path = s"$d/labels_r$round"
-          val rows = labels.map { case (x, (w, p, n)) => Row(out(x), out(w), out(p), n) }
-          spark.createDataFrame(rows, labelSchema).write.mode(SaveMode.Overwrite).parquet(path)
+          Bridge.internalRowFrame(spark, labelSchema,
+              labels.map { case (x, (w, p, n)) => InternalRow(x, w, p, n) })
+            .write.mode(SaveMode.Overwrite).parquet(path)
           if (round >= 2) deletePath(spark, s"$d/labels_r${round - 2}")
-          spark.read.parquet(path).rdd
+          rows(spark.read.parquet(path))
             .map(r => id(r, 0) -> ((id(r, 1), id(r, 2), r.getLong(3)))).partitionBy(part)
         case None => labels.localCheckpoint()
       }
       // symmetric edges keyed by their message source y (value: receiver x)
-      val edges = pairs.select(col("doc_a"), col("doc_b")).rdd.flatMap { r =>
-        require(!r.isNullAt(0) && !r.isNullAt(1), s"clusterWinners: null doc id in pair $r")
+      val edges = rows(pairs.select(col("doc_a"), col("doc_b"))).flatMap { r =>
+        def show(i: Int) = if (r.isNullAt(i)) "null" else id(r, i).toString
+        require(!r.isNullAt(0) && !r.isNullAt(1),
+          s"clusterWinners: null doc id in pair (${show(0)}, ${show(1)})")
         val (a, b) = (id(r, 0), id(r, 1))
         if (a == b) Nil else Seq(a -> b, b -> a)
       }.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
@@ -256,6 +283,7 @@ object LshDedup {
       var delta = labels.mapValues(_._1) // everyone "changed"
       var round = 0
       var changed = -1L
+      var (nRows, nBytes) = (0L, 0L)
       while (changed != 0L) {
         round += 1
         require(round <= maxRounds,
@@ -275,27 +303,30 @@ object LshDedup {
         val next = ckpt(upd.leftOuterJoin(answers, part).mapValues { case ((w1, p, n), j) =>
           (j.fold(w1)(least(w1, _)), p, n)
         }, round)
-        // ONE action for both round statistics
-        val (c, processed) = next.aggregate((0L, 0L))(
-          { case ((c, e), (_, (w, p, n))) => (if (w == p) c else c + 1, e + n) },
-          { case ((c1, e1), (c2, e2)) => (c1 + c2, e1 + e2) })
+        // ONE action for the round statistics and the result's size, by
+        // Spark's row-size formula (8 bytes of row overhead plus the column
+        // widths) with string ids at their measured UTF-8 length
+        val (c, processed, k, b) = next.aggregate((0L, 0L, 0L, 0L))(
+          { case ((c, e, k, b), (x, (w, p, n))) =>
+            (if (w == p) c else c + 1, e + n, k + 1, b + 8 + width(x) + width(w)) },
+          { case ((c1, e1, k1, b1), (c2, e2, k2, b2)) => (c1 + c2, e1 + e2, k1 + k2, b1 + b2) })
         stats.foreach(_ += CcRoundStat(round, c, processed))
         delta = next.filter { case (_, (w, p, _)) => w != p }.mapValues(_._1)
         labels = next
         changed = c
+        nRows = k
+        nBytes = b
       }
       edges.unpersist(blocking = false)
-      checkpointDir match {
-        case Some(d) => spark.read.parquet(s"$d/labels_r$round").select(col("doc_id"), col("winner"))
-        case None => spark.createDataFrame(labels.map { case (x, (w, _, _)) => Row(out(x), out(w)) },
-          StructType(labelSchema.fields.take(2)))
-      }
+      Bridge.internalRowFrame(spark, StructType(labelSchema.fields.take(2)),
+        labels.map { case (x, (w, _, _)) => InternalRow(x, w) },
+        Some((BigInt(nBytes), BigInt(nRows))))
     }
     idType match {
       case StringType => // equals only the default UTF8_BINARY collation
-        run[UTF8String]((r, i) => UTF8String.fromString(r.getString(i)), _.toString)
-      case LongType => run[Long](_.getLong(_), identity)
-      case IntegerType => run[Int](_.getInt(_), identity)
+        run[UTF8String](_.getUTF8String(_).clone(), _.numBytes)
+      case LongType => run[Long](_.getLong(_), _ => 8)
+      case IntegerType => run[Int](_.getInt(_), _ => 4)
       case t => throw new IllegalArgumentException(
         s"clusterWinners: doc ids must be string (UTF8_BINARY), long or int, got ${t.sql}")
     }

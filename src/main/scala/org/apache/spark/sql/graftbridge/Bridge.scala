@@ -1,13 +1,20 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
 /** Column <-> Expression bridge. Spark 4 made `Column` wrap a ColumnNode and
   * the conversion helpers `private[sql]`, so libraries adding native
   * Catalyst expressions use a bridge object inside the org.apache.spark.sql
-  * package — the established pattern for Spark extension libraries.
+  * package — the established pattern for Spark extension libraries. The
+  * same holds for building a DataFrame straight from a logical plan.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -24,4 +31,17 @@ object Bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(ident, info, builder)
+
+  /** A DataFrame over `rows` (InternalRows laid out as `schema`) whose plan
+    * reports `stats` = (sizeInBytes, rowCount) when given. Without it the
+    * LogicalRDD that `createDataFrame(rdd)` builds estimates
+    * `spark.sql.defaultSizeInBytes` (8 EiB), so no join against it can be
+    * planned as a broadcast. The InternalRows skip the Row encoder.
+    */
+  def internalRowFrame(spark: SparkSession, schema: StructType, rows: RDD[InternalRow],
+      stats: Option[(BigInt, BigInt)] = None): DataFrame = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    Dataset.ofRows(s, LogicalRDD(DataTypeUtils.toAttributes(schema), rows)(s,
+      stats.map { case (bytes, n) => Statistics(bytes, Some(n)) }))
+  }
 }

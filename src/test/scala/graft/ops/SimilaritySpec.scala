@@ -323,10 +323,97 @@ class SimilaritySpec extends AnyFunSuite {
     // to <dir>/<UUID> on every call)
     assert(spark.sparkContext.getCheckpointDir == globalBefore,
       s"clusterWinners clobbered the global checkpoint dir: ${spark.sparkContext.getCheckpointDir}")
-    // and old rounds are cleaned as newer rounds become durable: at most the
-    // last two labels_r<N> round dirs remain
-    val roundDirs = new java.io.File(dir).listFiles().filter(_.getName.startsWith("labels_r"))
+    // and old rounds are cleaned as newer rounds become durable: the call
+    // wrote into its own subdirectory, where at most the last two
+    // labels_r<N> round dirs remain
+    val callDirs = new java.io.File(dir).listFiles()
+    assert(callDirs.length == 1 && callDirs.head.getName.startsWith("cc-"),
+      s"expected one per-call subdirectory: ${callDirs.mkString(", ")}")
+    val roundDirs = callDirs.head.listFiles().filter(_.getName.startsWith("labels_r"))
+    assert(roundDirs.nonEmpty, s"no labels_r<N> round dirs under ${callDirs.head}")
     assert(roundDirs.length <= 2, s"stale checkpoint rounds not cleaned: ${roundDirs.mkString(", ")}")
+  }
+
+  test("clusterWinners: a second call on the same checkpointDir leaves the first call's result intact") {
+    import spark.implicits._
+    // same graph shape, disjoint ids: both calls run the same rounds, so
+    // shared round paths would let B overwrite the files behind A's result
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val a = LshDedup.clusterWinners(Seq(("a", "b"), ("b", "c")).toDF("doc_a", "doc_b"),
+      checkpointDir = Some(dir))
+    val b = LshDedup.clusterWinners(Seq(("p", "q"), ("q", "r")).toDF("doc_a", "doc_b"),
+      checkpointDir = Some(dir))
+    def labels(w: DataFrame) = w.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(labels(a) == Map("a" -> "a", "b" -> "a", "c" -> "a"))
+    assert(labels(b) == Map("p" -> "p", "q" -> "p", "r" -> "p"))
+  }
+
+  test("clusterWinners: the result plan reports its measured row count and size") {
+    import spark.implicits._
+    // size = Spark's row-size formula (8 bytes of row overhead + column
+    // widths) with string ids at their UTF-8 length
+    def check(w: DataFrame, width: org.apache.spark.sql.Row => Long): Unit = {
+      val st = w.queryExecution.optimizedPlan.stats
+      val rows = w.collect()
+      assert(rows.nonEmpty)
+      assert(st.rowCount.contains(BigInt(rows.length)), s"$st for ${rows.length} rows")
+      assert(st.sizeInBytes == BigInt(rows.map(r => 8L + width(r)).sum), st.toString)
+    }
+    val strings = Seq(("a", "b"), ("b", "cé"), ("x", "y")).toDF("doc_a", "doc_b")
+    val utf8 = (r: org.apache.spark.sql.Row) =>
+      (0 to 1).map(i => r.getString(i).getBytes("UTF-8").length.toLong).sum
+    check(LshDedup.clusterWinners(strings), utf8)
+    check(LshDedup.clusterWinners(strings,
+      checkpointDir = Some(java.nio.file.Files.createTempDirectory("graft-ckpt").toString)), utf8)
+    check(LshDedup.clusterWinners(Seq((5L, 3L), (3L, 9L)).toDF("doc_a", "doc_b")), _ => 16L)
+    check(LshDedup.clusterWinners(Seq((2, 1), (4, 3)).toDF("doc_a", "doc_b")), _ => 8L)
+  }
+
+  /** dedupedDocs over the planted-cluster fixture, collected; returns the
+    * rows and the final (post-AQE) physical plan.
+    */
+  private def dedupedWithPlan(): (Set[(Long, String, Long)], org.apache.spark.sql.execution.SparkPlan) = {
+    import spark.implicits._
+    val t = "the quick brown fox jumps over the lazy dog again and again tonight"
+    val docs = (Seq((10L, t), (11L, t), (12L, t), (13L, t + " tonight")) ++
+      (20L until 40L).map(i => (i, s"unrelated document $i about topic ${i * 7919L}")))
+      .toDF("doc_id", "text")
+    val out = LshDedup.dedupedDocs(docs,
+      LshDedup.clusterWinners(Similarity.simhashDocPairs(docs, 5, 6)))
+    val rows = out.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    (rows, out.queryExecution.executedPlan)
+  }
+
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    import org.apache.spark.sql.execution.SparkPlan
+    def textExchanges(p: SparkPlan): Seq[SparkPlan] = collect(p) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+          if e.output.exists(_.name == "text") => e
+    }
+    def joins(p: SparkPlan): Seq[String] = collect(p) {
+      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => "broadcast"
+      case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => "sort-merge"
+    }
+  }
+
+  test("dedupedDocs: under the broadcast threshold no exchange carries the doc text") {
+    val (rows, plan) = dedupedWithPlan()
+    assert(rows.map(r => r._1 -> r._3).toMap.get(10L).contains(4L), rows.toString)
+    assert(Plans.textExchanges(plan).isEmpty, s"doc text shuffled:\n$plan")
+    assert(Plans.joins(plan) == Seq("broadcast", "broadcast"), plan.toString)
+  }
+
+  test("dedupedDocs: with broadcasts disabled the sort-merge plan returns the same rows") {
+    val (broadcastRows, _) = dedupedWithPlan()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val (rows, plan) = dedupedWithPlan()
+      assert(Plans.joins(plan) == Seq("sort-merge", "sort-merge"), plan.toString)
+      assert(Plans.textExchanges(plan).nonEmpty, plan.toString)
+      assert(rows == broadcastRows)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   // 200 star components (hub + 5 leaves — converge in round 1, the web
