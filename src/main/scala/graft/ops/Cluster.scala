@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Embedding-space clustering + cluster-pruned semantic dedup — the two
   * operators a curation pipeline runs between near-dup removal and final
@@ -67,22 +68,12 @@ object Cluster {
   val Iters = 3
 
   /** Long-cast embeddings (doc_id, xs Array[Long]) — exact by construction
-    * ([[Embed.docEmbeddings]] accumulates ints), materialized because the
-    * Lloyd loop re-scans it iters+1 times. The materialization is a
-    * reference-tracked RDD persist, not Dataset.persist: a Dataset persist
-    * inside a function returning a lazy frame leaks a CacheManager entry
-    * per call (no unpersist handle reaches the caller), while RDD persists
-    * are cleaned by the ContextCleaner once the returned plan is dropped —
-    * the same fix as Curation.manifest's stage boundary.
+    * ([[Embed.docEmbeddings]] accumulates ints), [[Bridge.reused]] because
+    * the Lloyd loop re-scans it iters+1 times.
     */
   private[ops] def withXs(emb: DataFrame, idCol: String): DataFrame =
-    rddPersisted(emb.select(col(idCol),
+    Bridge.reused(emb.select(col(idCol),
       expr("transform(embedding, x -> CAST(x AS BIGINT))").as("xs")))
-
-  private def rddPersisted(df: DataFrame): DataFrame = {
-    val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df.sparkSession.createDataFrame(rdd, df.schema)
-  }
 
   /** Argmin assignment under closure-shipped fixed-point centroids.
     * UDF justification: a k×dim argmin loop per row (128 long mults at the
@@ -187,7 +178,7 @@ object Cluster {
     // aggregate(zip_with(...)) HOF fold ran per candidate PAIR and was the
     // q70 bench's dominant cost; exact integer arithmetic either way
     val n2 = Exprs.longDot(col("xs"), col("xs"))
-    val docs = rddPersisted(asg.select(col(idCol), col("cluster"), col("xs"))
+    val docs = Bridge.reused(asg.select(col(idCol), col("cluster"), col("xs"))
       .withColumn("n2", n2))
     val a = docs.select(col(idCol).as("id_a"), col("cluster"),
       col("xs").as("xs_a"), col("n2").as("na2"))

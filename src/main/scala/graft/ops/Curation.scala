@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The end-to-end curation capstone: one query that takes the raw
   * `documents` table to a training-data MANIFEST — the composition every
@@ -40,7 +41,7 @@ import org.apache.spark.sql.functions._
   * where the text is, so NO document text enters any exchange of the plan;
   * packing adds the range exchange + two-job prefix sum documented on
   * [[Pack.packCounts]] (16 bytes/doc); the final manifest join keys on
-  * doc_id. The post-dedup (doc_id, split, n_tokens) frame is persisted at
+  * doc_id. The post-dedup (doc_id, split, n_tokens) frame is reused at
   * the stage boundary because three downstream jobs consume it.
   */
 object Curation {
@@ -59,11 +60,10 @@ object Curation {
   val EvalMod = 97L
 
   /** `checkpointDir`: when given, the post-dedup (doc_id, split, n_tokens)
-    * frame is materialized as parquet under a fresh
-    * `<dir>/curation-<uuid>/` subdirectory per call instead of locally
-    * checkpointed — survives executor loss on preemptible fleets, the same
-    * trade [[LshDedup.clusterWinners]] offers, and a later call on the same
-    * dir leaves the files behind this call's lazy result alone.
+    * frame is written as parquet under a fresh `<dir>/curation-<uuid>/`
+    * subdirectory per call instead of kept in executor storage, so a lost
+    * executor costs no recompute of the gates, gram join and dedup window;
+    * a later call on the same dir leaves this call's files alone.
     */
   def manifest(docs: DataFrame, budget: Long = Pack.DefaultBudget,
       checkpointDir: Option[String] = None): DataFrame = {
@@ -111,29 +111,15 @@ object Curation {
     // downstream runs THREE jobs over it (packCounts' per-partition-totals
     // collect, its main pass, and the manifest join) — unmaterialized,
     // each would re-execute the gates + gram join + dedup window from the
-    // scan (measured 13.3 s vs ~1 s at sf0.1). The materialization is a
-    // persisted RDD, deliberately NOT Dataset.persist and NOT
-    // localCheckpoint: a Dataset persist inside a function returning a
-    // lazy frame leaks a CacheManager entry per call (no unpersist handle
-    // exists for the caller; CacheManager holds it for the session
-    // lifetime), while RDD persists are reference-tracked by the
-    // ContextCleaner and freed once the returned plan is dropped; and
-    // localCheckpoint's eager extra job re-ran the upstream per bench rep
-    // (measured 6.3 s vs ~1 s). Lazy RDD persist gives persist-grade reuse
-    // with RDD-grade cleanup. The frame is (long, string, long) per
-    // surviving doc — tiny at any scale. Cached blocks are
-    // non-fault-tolerant; pass `checkpointDir` on preemptible fleets for
-    // a reliable parquet materialization instead.
+    // scan (measured 13.3 s vs ~1 s at sf0.1). The frame is (long, string,
+    // long) per surviving doc — tiny at any scale.
     val splitDone = winners.withColumn("split", Splits.splitOf(col("doc_id")))
     val withSplit = checkpointDir match {
       case Some(d) =>
         val path = s"$d/curation-${java.util.UUID.randomUUID()}/curation_split"
         splitDone.write.mode("overwrite").parquet(path)
         docs.sparkSession.read.parquet(path)
-      case None =>
-        val rdd = splitDone.rdd
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        docs.sparkSession.createDataFrame(rdd, splitDone.schema)
+      case None => Bridge.reused(splitDone)
     }
 
     // 5. pack the train stream (q57 shape); manifest join back on doc_id

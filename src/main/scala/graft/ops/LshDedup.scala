@@ -56,14 +56,13 @@ object LshDedup {
   def nearDupPairs(sigs: DataFrame, threshold: Int): DataFrame = {
     require(threshold >= 0, s"Hamming threshold must be >= 0, got $threshold")
     require(threshold < Bands, s"banded LSH with $Bands bands has exact recall only for threshold < $Bands")
-    // Materialize the signature table ONCE (lazy localCheckpoint — no eager
-    // job; first action fills the blocks): the join sides below otherwise
+    // Materialize the signature table ONCE: the join sides below otherwise
     // each re-evaluated the full upstream sig computation (scan + normalize
     // + simhash, the dominant per-row cost), and the join-key null filter
     // the planner pushes into each side's scan evaluated it a second time
-    // per side (filter + project, no cross-operator CSE). The checkpoint
-    // caches 16 bytes/doc (doc_id, sig) — scale-safe metadata.
-    val snap = sigs.select(col("doc_id"), col("sig")).localCheckpoint(eager = false)
+    // per side (filter + project, no cross-operator CSE). It holds 16
+    // bytes/doc (doc_id, sig) — scale-safe metadata.
+    val snap = Bridge.reused(sigs.select(col("doc_id"), col("sig")))
     // The band self-join runs over DISTINCT signatures, and doc pairs are
     // expanded afterwards (guide §8: decide on small rows, expand to the
     // output). With per-doc-unique sigs this is the same join one exchange
@@ -220,15 +219,15 @@ object LshDedup {
     * the full edge and label sets (and AQE may re-coalesce each side
     * differently); co-partitioned RDD joins keep those joins narrow.
     *
-    * Durability: by default each round's labels are truncated with RDD
-    * `localCheckpoint`, whose blocks live on EXECUTORS — cheap and right for
-    * local mode, but an executor lost mid-iteration takes blocks with it
-    * whose lineage no longer exists, killing the whole job. Passing
+    * Durability: by default each round's labels are persisted
+    * (MEMORY_AND_DISK) with their lineage and the previous round's are
+    * released once the new ones are filled, so one round is stored per
+    * call and a lost executor costs a recompute from lineage. Passing
     * `checkpointDir` makes each round durable as
     * `<dir>/cc-<uuid>/labels_r<N>` parquet (HDFS/S3-backed on a real
     * cluster), one fresh `cc-<uuid>` subdirectory per call so that calls
     * sharing a dir never overwrite each other's rounds: an executor loss
-    * costs a recompute from the last durable round instead of the job.
+    * then costs a recompute from the last durable round only.
     * Round N's file is deleted as soon as round N+1 is committed, so the
     * subdirectory holds at most two rounds; the final round's file backs
     * the RETURNED DataFrame and stays for the caller to clean up with the
@@ -266,7 +265,7 @@ object LshDedup {
           if (round >= 2) deletePath(spark, s"$d/labels_r${round - 2}")
           rows(spark.read.parquet(path))
             .map(r => id(r, 0) -> ((id(r, 1), id(r, 2), r.getLong(3)))).partitionBy(part)
-        case None => labels.localCheckpoint()
+        case None => labels.persist(StorageLevel.MEMORY_AND_DISK)
       }
       // symmetric edges keyed by their message source y (value: receiver x)
       val edges = rows(pairs.select(col("doc_a"), col("doc_b"))).flatMap { r =>
@@ -311,6 +310,7 @@ object LshDedup {
             (if (w == p) c else c + 1, e + n, k + 1, b + 8 + width(x) + width(w)) },
           { case ((c1, e1, k1, b1), (c2, e2, k2, b2)) => (c1 + c2, e1 + e2, k1 + k2, b1 + b2) })
         stats.foreach(_ += CcRoundStat(round, c, processed))
+        labels.unpersist(blocking = false) // `next` is filled: one round stays stored
         delta = next.filter { case (_, (w, p, _)) => w != p }.mapValues(_._1)
         labels = next
         changed = c

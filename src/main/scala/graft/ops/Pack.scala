@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Sequence packing for training: lay the corpus out as one deterministic
@@ -50,6 +52,9 @@ object Pack {
     * form composition sites use (the q76 curation manifest): token counts
     * are computed map-side where the text already is, so the packing range
     * exchange carries 16 bytes per doc instead of the document text.
+    * The totals pass also counts rows, so the result reports its measured
+    * size (48 bytes a row: row overhead plus five longs) and a join against
+    * it is planned from that, not from the 8 EiB default of an RDD frame.
     */
   def packCounts(counts: DataFrame, budget: Long = DefaultBudget,
       partitions: Int = 0): DataFrame = {
@@ -63,19 +68,20 @@ object Pack {
       .repartitionByRange(n, col("doc_id"))
       .sortWithinPartitions("doc_id")
     val rdd = sorted.rdd // ONE lineage: both jobs below reuse this shuffle
-    val partTotals = rdd
+    val partTotals = rdd // per partition: (token total, row count)
       .mapPartitionsWithIndex { (i, it) =>
-        var s = 0L; it.foreach(r => s += r.getLong(1)); Iterator((i, s))
+        Iterator(i -> it.foldLeft((0L, 0L)) { case ((s, k), r) => (s + r.getLong(1), k + 1) })
       }
       .collect().sortBy(_._1).map(_._2)
-    val offsets = partTotals.scanLeft(0L)(_ + _) // exclusive per-partition
+    val offsets = partTotals.map(_._1).scanLeft(0L)(_ + _) // exclusive per-partition
+    val nRows = partTotals.map(_._2).sum
     val packed = rdd.mapPartitionsWithIndex { (i, it) =>
       var cum = offsets(i)
       it.map { r =>
         val t = r.getLong(1)
         val before = cum
         cum += t
-        Row(r.getLong(0), t, before, before / budget, before % budget)
+        InternalRow(r.getLong(0), t, before, before / budget, before % budget)
       }
     }
     val schema = StructType(Seq(
@@ -84,6 +90,6 @@ object Pack {
       StructField("cum_before", LongType, nullable = false),
       StructField("seq_id", LongType, nullable = false),
       StructField("seq_offset", LongType, nullable = false)))
-    spark.createDataFrame(packed, schema)
+    Bridge.internalRowFrame(spark, schema, packed, Some((BigInt(nRows) * 48, BigInt(nRows))))
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.LongType
 
 /** Scale-safe GLOBAL rank (O1 natural-sort ranking, reference
@@ -41,15 +42,12 @@ object Ranks {
     val spark = df.sparkSession
     val n = if (partitions > 0) partitions
       else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // Materialize the keyed projection ONCE (lazy localCheckpoint —
-    // ContextCleaner-tracked block cache, no CacheManager leak, no eager
-    // job): repartitionByRange's RangePartitioner runs a separate SAMPLING
-    // job over its child before the shuffle map, so an unmaterialized key
-    // expression (q11's naturalKey UDF — the dominant per-row cost) was
-    // evaluated TWICE per row, once in the sampling pass and once in the
-    // exchange write (VERDICT r5: q11 at 2.7x its historical constant).
-    val sorted = df.withColumn("__gr_key", key)
-      .localCheckpoint(eager = false)
+    // Materialize the keyed projection ONCE: repartitionByRange's
+    // RangePartitioner runs a separate SAMPLING job over its child before
+    // the shuffle map, so an unmaterialized key expression (q11's
+    // naturalKey UDF — the dominant per-row cost) was evaluated TWICE per
+    // row, once in the sampling pass and once in the exchange write.
+    val sorted = Bridge.reused(df.withColumn("__gr_key", key))
       .repartitionByRange(n, col("__gr_key"))
       .sortWithinPartitions("__gr_key")
     val keyIdx = sorted.schema.fieldIndex("__gr_key")

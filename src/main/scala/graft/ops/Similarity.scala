@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.kernel.Hashing
 
 /** Document-level deduplication + similarity-search operators for a
@@ -50,13 +51,11 @@ object Similarity {
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .filter(col("n_docs") > maxDocs)
       .select(col("h"))
-    // Measured (r6): materializing a (doc_id, id, idx, md5) projection once
-    // (lazy localCheckpoint) and serving both branches from it benched the
-    // same-to-slightly-worse as this double-pass under matched conditions
-    // (~1.55 s vs ~1.50 s at sf0.1): the two chunker passes stream inside
-    // whole-stage codegen, while the materialization pays row copies +
-    // block I/O and costs the anti-join its broadcast until AQE remeasures
-    // (LogicalRDD has no size stats). Kept double-pass, eyes open.
+    // Measured: serving both branches from one materialized (doc_id, id,
+    // idx, md5) projection benched the same-to-slightly-worse as this
+    // double pass (~1.55 s vs ~1.50 s at sf0.1): the two chunker passes
+    // stream inside whole-stage codegen, while the materialization pays
+    // row copies + block I/O.
     chunks
       .join(heavy, md5(col("norm")) === col("h"), "left_anti")
       .select(col("doc_id"), col("id"), col("idx"))
@@ -197,12 +196,11 @@ object Similarity {
   def minhashLshPairs(docs: DataFrame, n: Int, minAgree: Int,
       bands: Int = MinHashBands, rowsPerBand: Int = MinHashFns / MinHashBands): DataFrame = {
     require(bands > 0 && rowsPerBand > 0, "bands and rowsPerBand must be positive")
-    // lazy localCheckpoint: both self-join sides (and their pushed null
-    // filters) re-evaluated the shingle + minhash UDF pipeline — the
-    // dominant cost — up to 4x per doc; the cached (doc_id, sig, set_size)
-    // rows are ~150 bytes/doc (same rationale as LshDedup.nearDupPairs)
-    val sigs = minhashSignatures(docs, n, bands * rowsPerBand)
-      .localCheckpoint(eager = false)
+    // reused: both self-join sides (and their pushed null filters)
+    // re-evaluated the shingle + minhash UDF pipeline — the dominant cost —
+    // up to 4x per doc; the kept (doc_id, sig, set_size) rows are ~150
+    // bytes/doc (same rationale as LshDedup.nearDupPairs)
+    val sigs = Bridge.reused(minhashSignatures(docs, n, bands * rowsPerBand))
     val banded = sigs.select(col("doc_id"), col("sig"),
       explode(sequence(lit(0), lit(bands - 1))).as("band"))
       .withColumn("bslice", slice(col("sig"), col("band") * rowsPerBand + 1, lit(rowsPerBand)))
@@ -372,14 +370,13 @@ object Similarity {
   def annLshTopK(emb: DataFrame, k: Int, bits: Int = 0,
       probe: Boolean = true): DataFrame = {
     val nbits = if (bits > 0) bits else autoBits(emb.count())
-    // lazy localCheckpoint: the probe side and the neighbor side each
-    // re-evaluated the signature UDF + norm over the full scan (plus the
-    // pushed join-key null filter's second evaluation); one materialization
-    // serves both (same rationale as LshDedup.nearDupPairs)
-    val sigs = emb.select(col("vec_id"), col("embedding"),
+    // reused: the probe side and the neighbor side each re-evaluated the
+    // signature UDF + norm over the full scan (plus the pushed join-key
+    // null filter's second evaluation); one materialization serves both
+    // (same rationale as LshDedup.nearDupPairs)
+    val sigs = Bridge.reused(emb.select(col("vec_id"), col("embedding"),
       signBitsU(nbits)(col("embedding")).as("bucket"),
-      norm2(col("embedding")).as("nrm"))
-      .localCheckpoint(eager = false)
+      norm2(col("embedding")).as("nrm")))
     // single-bit-flip probe buckets, built driver-side (NOT sequence():
     // sequence(0,-1) is a descending [0,-1], not empty)
     val probeArr =
@@ -426,11 +423,10 @@ object Similarity {
   def embeddingNearDupPairsLsh(emb: DataFrame, thresholdBp: Long,
       bits: Int = 0, probe: Boolean = true): DataFrame = {
     val nbits = if (bits > 0) bits else autoBits(emb.count())
-    // lazy localCheckpoint — same double-evaluation fix as annLshTopK
-    val sigs = emb.select(col("vec_id"), col("embedding"),
+    // reused — same double-evaluation fix as annLshTopK
+    val sigs = Bridge.reused(emb.select(col("vec_id"), col("embedding"),
       signBitsU(nbits)(col("embedding")).as("bucket"),
-      norm2(col("embedding")).as("nrm"))
-      .localCheckpoint(eager = false)
+      norm2(col("embedding")).as("nrm")))
     val probeArr =
       if (probe) array((col("bucket") +: (0 until nbits).map(i =>
         col("bucket").bitwiseXOR(lit(1 << i)))): _*)
@@ -506,12 +502,11 @@ object Similarity {
       }.sortBy { case (cid, csim) => (-csim, cid) }
         .take(nprobe).map(_._1)
     }
-    // lazy localCheckpoint: the assignment side and the probe side each
-    // re-evaluated the k-centroid scoring UDF over the full scan; one
-    // materialization serves both (same rationale as annLshTopK's sigs)
-    val base = emb.select(col("vec_id"), col("embedding"),
-      norm2(col("embedding")).as("nrm"), probesU(col("embedding")).as("pcells"))
-      .localCheckpoint(eager = false)
+    // reused: the assignment side and the probe side each re-evaluated the
+    // k-centroid scoring UDF over the full scan; one materialization serves
+    // both (same rationale as annLshTopK's sigs)
+    val base = Bridge.reused(emb.select(col("vec_id"), col("embedding"),
+      norm2(col("embedding")).as("nrm"), probesU(col("embedding")).as("pcells")))
     val assign = base.select(col("vec_id").as("neighbor_id"), col("embedding").as("e_n"),
       col("nrm").as("n_n"), element_at(col("pcells"), 1).as("cell"))
     val probes = base.select(col("vec_id").as("query_id"), col("embedding").as("e_q"),

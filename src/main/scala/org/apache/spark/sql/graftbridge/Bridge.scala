@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** Column <-> Expression bridge. Spark 4 made `Column` wrap a ColumnNode and
   * the conversion helpers `private[sql]`, so libraries adding native
@@ -43,5 +44,26 @@ object Bridge {
     val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     Dataset.ofRows(s, LogicalRDD(DataTypeUtils.toAttributes(schema), rows)(s,
       stats.map { case (bytes, n) => Statistics(bytes, Some(n)) }))
+  }
+
+  /** `df` materialized for reuse: the one way an operator reads an
+    * intermediate twice. It is planned as Spark's lazy local checkpoint
+    * plans it (a LogicalRDD keeping `df`'s attributes, partitioning,
+    * ordering and statistics; with AQE, `df`'s shuffle stages run here and
+    * the first action fills the blocks), but the rows are persisted
+    * MEMORY_AND_DISK with their lineage: a lost block is recomputed, where
+    * a local checkpoint's fails every later action. Unlike
+    * `Dataset.persist` it makes no CacheManager entry, which a caller of a
+    * lazy frame could never release; the ContextCleaner frees the blocks
+    * with the frame. The price is one stored copy of the rows meanwhile.
+    */
+  def reused(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
+    val qe = ds.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("reused")) {
+      qe.executedPlan.resetMetrics()
+      qe.executedPlan.execute().map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rows, ds, ds.isStreaming))
   }
 }

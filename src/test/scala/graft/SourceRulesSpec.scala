@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Rules on the library source itself: tuning is typed `spark.graft.*`
   * session conf, so no operator, kernel, function, table or streaming code
-  * reads the process environment. Only the mains (Bench, BenchExtra,
-  * tools, jobs) may.
+  * reads the process environment (only the mains — Bench, BenchExtra,
+  * tools, jobs — may), and an intermediate is materialized one way,
+  * through `Bridge.reused`.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -22,6 +23,18 @@ class SourceRulesSpec extends AnyFunSuite {
       if env.findFirstIn(line).isDefined
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("environment reads:\n", "\n", ""))
+  }
+
+  test("no local checkpoint anywhere under src/main") {
+    // an intermediate read twice goes through Bridge.reused, which keeps
+    // lineage; a local checkpoint's lost block fails every later action
+    val rule = "localCheckpoint".r
+    val hits = for {
+      f <- scalaFiles(Paths.get("src/main"))
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if rule.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("local checkpoints:\n", "\n", ""))
   }
 
   private def scalaFiles(dir: Path): Seq[Path] = {

@@ -92,4 +92,22 @@ class CurationSpec extends AnyFunSuite {
     assert(a.collect().map(_.getLong(0)).toSet == Set(1L, 5L, 6L, 7L, 8L))
     assert(b.collect().map(_.getLong(0)).toSet == Set(40L, 41L))
   }
+
+  test("q76: the packed side is broadcast, so no exchange moves split rows by doc_id") {
+    // the packing frame reports its measured size, so the final manifest
+    // join broadcasts it at plan time instead of shuffling both sides
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val out = graft.SparkEntry.queries("q76_curation_manifest")(spark, "/root/testdata/sf0.001")
+    assert(out.collect().nonEmpty)
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val byDocId = plans.collect(out.queryExecution.executedPlan) {
+      case e: ShuffleExchangeLike if e.output.exists(_.name == "split") &&
+          (e.outputPartitioning match {
+            case h: HashPartitioning => h.expressions.exists(_.references.exists(_.name == "doc_id"))
+            case _ => false
+          }) => e
+    }
+    assert(byDocId.isEmpty, out.queryExecution.executedPlan.toString)
+  }
 }

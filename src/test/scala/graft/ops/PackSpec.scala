@@ -55,4 +55,15 @@ class PackSpec extends AnyFunSuite {
     val b = Pack.packSequences(docs.repartition(11), budget = 256L, partitions = 7)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
+
+  test("the result plan reports its measured row count and size") {
+    // 8 bytes of row overhead + five long columns = 48 bytes a row
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val out = Pack.packSequences(docs, budget = 512L, partitions = 5)
+    val st = out.queryExecution.optimizedPlan.stats
+    val n = out.collect().length
+    assert(n > 0)
+    assert(st.rowCount.contains(BigInt(n)), s"$st for $n rows")
+    assert(st.sizeInBytes == BigInt(n) * 48, st.toString)
+  }
 }

@@ -570,4 +570,20 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got.size == n && got.values.forall(_ == "d000"), got.toString)
   }
+
+  test("clusterWinners: one round of labels stays stored after the call") {
+    import spark.implicits._
+    // a 64-node path runs several rounds; each round's labels replace the
+    // previous round's in storage, and the edges are released at the end,
+    // so only the labels behind the returned frame stay persisted
+    val sc = spark.sparkContext
+    val pairs = (0 until 63).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
+    val firstId = sc.parallelize(Seq(0), 1).id + 1 // RDD ids only grow
+    val st = scala.collection.mutable.Buffer.empty[LshDedup.CcRoundStat]
+    val w = LshDedup.clusterWinners(pairs, stats = Some(st))
+    assert(w.collect().forall(_.getLong(1) == 0L))
+    assert(st.length >= 3, s"fixture must run several rounds: $st")
+    val stored = sc.getPersistentRDDs.keys.filter(_ >= firstId).toSeq.sorted
+    assert(stored.size == 1, s"persisted RDDs from the call: $stored")
+  }
 }
