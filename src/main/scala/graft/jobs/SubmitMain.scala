@@ -1,8 +1,8 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.kernel.DedupeConfig
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.ops.{Corpus, Render}
 import graft.table.SnapshotTable
 
@@ -27,7 +27,9 @@ import graft.table.SnapshotTable
   * dropped rows); every sink (output spans, final markdown, chunks JSONL,
   * report) is then derived by READING BACK the committed parquet — the
   * expensive pipeline runs exactly once per bucket across any number of
-  * kills/resumes, and sink derivation is a cheap scan.
+  * kills/resumes, and sink derivation is a cheap scan. The sinks are
+  * written as concurrent Spark jobs; if one fails, others may already be
+  * written, and since each is an `Overwrite`, a rerun rewrites them all.
   *
   * Re-running after a kill resumes from the last committed snapshot.
   */
@@ -270,28 +272,31 @@ object SubmitMain {
     * (read-back, no pipeline re-execution): output spans, final markdown
     * (text.go:249-279), chunks JSONL (text.go:166-215), report JSON
     * (report.go:34-72, dropped list as deterministic digest).
+    *
+    * The sinks are built over one read of the table and written as
+    * concurrent Spark jobs ([[Bridge.concurrently]]): each is a small scan,
+    * so a sequence of them would wait on per-job driver latency, not on
+    * work. If one sink fails, the others may already be written; every
+    * sink is `Overwrite`, so a rerun rewrites them all.
     */
   def writeSinks(args: Args)(implicit spark: SparkSession): Unit = {
     val cfg = args.pipeline
     val table = SnapshotTable.read(args.out)
 
     val kept = table.filter(col("kept"))
-    kept.select(col("doc_id"), lit("text").as("kind"), col("text"),
-        lit("").as("media_ref"), col("kept_order").as("order"))
-      .write.mode(SaveMode.Overwrite).parquet(s"${args.out}/output_spans")
+    val spans = kept.select(col("doc_id"), lit("text").as("kind"), col("text"),
+      lit("").as("media_ref"), col("kept_order").as("order"))
 
-    Render.markdown(
-        kept.withColumn("idx", col("kept_order")),
-        lit(cfg.markdownTitle), includeChunkIds = cfg.includeChunkIds)
-      .write.mode(SaveMode.Overwrite).parquet(s"${args.out}/final_md")
+    val md = Render.markdown(
+      kept.withColumn("idx", col("kept_order")),
+      lit(cfg.markdownTitle), includeChunkIds = cfg.includeChunkIds)
 
-    if (cfg.emitChunksJsonl)
-      // the audit frame holds EVERY filtered chunk (kept + dropped), which is
-      // exactly the reference's pre-dedup JSONL input set
-      Render.jsonlProjection(table.select("doc_id", "id", "text", "norm", "idx"))
-        .write.mode(SaveMode.Overwrite).json(s"${args.out}/chunks_jsonl")
+    // the audit frame holds EVERY filtered chunk (kept + dropped), which is
+    // exactly the reference's pre-dedup JSONL input set
+    val jsonl = Option.when(cfg.emitChunksJsonl)(
+      Render.jsonlProjection(table.select("doc_id", "id", "text", "norm", "idx")))
 
-    if (args.emitReport) {
+    val report = Option.when(args.emitReport) {
       val dd = cfg.dedupe
       val droppedEntry = when(!col("kept"),
         concat_ws("|", col("id"), col("reason"), col("matched_id"),
@@ -308,7 +313,13 @@ object SubmitMain {
         .withColumn("simhash_threshold", lit(dd.simHashThreshold))
         .withColumn("window", lit(dd.window))
         .withColumn("generated_at", current_timestamp())
-        .write.mode(SaveMode.Overwrite).json(s"${args.out}/report_json")
     }
+
+    Bridge.concurrently(spark)(
+      Seq[() => Unit](
+        () => spans.write.mode(SaveMode.Overwrite).parquet(s"${args.out}/output_spans"),
+        () => md.write.mode(SaveMode.Overwrite).parquet(s"${args.out}/final_md")) ++
+      jsonl.map(df => () => df.write.mode(SaveMode.Overwrite).json(s"${args.out}/chunks_jsonl")) ++
+      report.map(df => () => df.write.mode(SaveMode.Overwrite).json(s"${args.out}/report_json")))
   }
 }

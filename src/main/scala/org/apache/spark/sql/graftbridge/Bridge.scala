@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Executors}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -65,5 +67,37 @@ object Bridge {
       qe.executedPlan.execute().map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
     }
     Dataset.ofRows(ds.sparkSession, LogicalRDD.fromDataset(rows, ds, ds.isStreaming))
+  }
+
+  /** Run `jobs` at once, one daemon thread each: the one way to submit
+    * concurrent Spark jobs. Each thread carries the caller's active session
+    * and local properties (job group, description, scheduler pool) through
+    * `SQLExecution.withThreadLocalCaptured`, so listeners attribute its jobs
+    * as if the caller ran them. It waits for every job; if any fail, it then
+    * throws the failure of the first failing job in `jobs` order, with the
+    * others suppressed on it. No thread outlives the call.
+    */
+  def concurrently(spark: SparkSession)(jobs: Seq[() => Unit]): Unit = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(math.max(1, jobs.size), (r: Runnable) => {
+      val t = new Thread(r, s"graft-concurrent-${threads.size}")
+      t.setDaemon(true)
+      threads.add(t)
+      t
+    })
+    try {
+      val futures = jobs.map(j => SQLExecution.withThreadLocalCaptured(s, pool)(j()))
+      val failures = futures.flatMap { f =>
+        try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdownNow()
+      threads.asScala.foreach(_.join())
+    }
   }
 }

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Rules on the library source itself: tuning is typed `spark.graft.*`
   * session conf, so no operator, kernel, function, table or streaming code
   * reads the process environment (only the mains — Bench, BenchExtra,
-  * tools, jobs — may), and an intermediate is materialized one way,
-  * through `Bridge.reused`.
+  * tools, jobs — may), an intermediate is materialized one way, through
+  * `Bridge.reused`, and concurrent Spark jobs are run one way, through
+  * `Bridge.concurrently`.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -35,6 +36,20 @@ class SourceRulesSpec extends AnyFunSuite {
       if rule.findFirstIn(line).isDefined
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("local checkpoints:\n", "\n", ""))
+  }
+
+  test("no thread pool, Future or parallel collection under src/main outside Bridge") {
+    // concurrent Spark jobs go through Bridge.concurrently, which hands the
+    // caller's job group, description and scheduler pool to every job; a
+    // shared pool's threads keep whatever properties they were born with
+    val rule = """Executors|ThreadPool|ForkJoin|ExecutionContext|Future\b|\.par\b|new Thread\b""".r
+    val hits = for {
+      f <- scalaFiles(Paths.get("src/main"))
+      if f.getFileName.toString != "Bridge.scala"
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if rule.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("concurrency outside Bridge:\n", "\n", ""))
   }
 
   private def scalaFiles(dir: Path): Seq[Path] = {

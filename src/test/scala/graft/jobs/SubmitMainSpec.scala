@@ -1,14 +1,18 @@
 package graft.jobs
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.Corpus
+import graft.ops.{Corpus, Render}
 import graft.table.SnapshotTable
 
-/** CLI parsing (flag/positional mixing) and the reference's single-FILE
-  * artifact contract (result.md / chunks_raw.jsonl / dedupe_report.json —
+/** CLI parsing (flag/positional mixing), the directory sinks' content and
+  * job attribution, and the reference's single-FILE artifact contract
+  * (result.md / chunks_raw.jsonl / dedupe_report.json —
   * cmd/pipeline/main.go:231,259,276).
   */
 class SubmitMainSpec extends AnyFunSuite {
@@ -37,6 +41,98 @@ class SubmitMainSpec extends AnyFunSuite {
 
     intercept[IllegalArgumentException] {
       SubmitMain.parse(Array("/sf", "/out", "8", "2", "3", "junk"))
+    }
+  }
+
+  private val sfDir = "/root/testdata/sf0.001"
+
+  /** The sf0.001 corpus committed once, with a title and chunk ids so the
+    * Markdown options reach the sink, and the report on.
+    */
+  private lazy val committed: (SubmitMain.Args, DataFrame) = {
+    val out = Files.createTempDirectory("subsinks").toString
+    val cfg = ExtractionJob.PipelineConfig(markdownTitle = "Pinned", includeChunkIds = true)
+    val args = SubmitMain.Args(sfDir = sfDir, out = out, buckets = 4, pipeline = cfg,
+      emitReport = true)
+    val docs = Corpus.docsTable(spark, sfDir)
+    SnapshotTable.runResumable(docs, d => ExtractionJob.dedupWith(d, cfg), out, args.buckets)
+    (args, docs)
+  }
+
+  /** `sink` and `twin` hold the same rows over `cols`, as multisets. */
+  private def sameRows(name: String, sink: DataFrame, twin: DataFrame, cols: String*): Unit = {
+    def rows(df: DataFrame) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).sortBy(_.mkString("\u0000")).toSeq
+    val (a, b) = (rows(sink), rows(twin))
+    assert(a.nonEmpty, s"$name is empty")
+    assert(a.size == b.size, s"$name: ${a.size} rows, its twin ${b.size}")
+    assert(a == b, s"$name differs from its twin, first at ${a.zip(b).find(p => p._1 != p._2)}")
+  }
+
+  test("every sink equals its per-row twin on the sf0.001 corpus") {
+    val (args, docs) = committed
+    val cfg = args.pipeline
+    val out = args.out
+    SubmitMain.writeSinks(args)
+
+    sameRows("output_spans", spark.read.parquet(s"$out/output_spans"),
+      ExtractionJob.outputSpans(docs, cfg.dedupe), "doc_id", "kind", "text", "media_ref", "order")
+    sameRows("final_md", spark.read.parquet(s"$out/final_md"),
+      ExtractionJob.markdown(docs, cfg), "doc_id", "markdown")
+    sameRows("chunks_jsonl", spark.read.json(s"$out/chunks_jsonl"),
+      Render.jsonlProjection(ExtractionJob.filteredChunks(docs, cfg)),
+      "doc_id", "id", "text", "index", "len")
+
+    // the report has a row per doc with a chunk past the chrome filter;
+    // metrics also lists docs whose every chunk was chrome
+    val report = spark.read.json(s"$out/report_json")
+    val metrics = ExtractionJob.metrics(docs, cfg.dedupe).filter(col("input_count") > 0)
+      .select(col("doc_id"), col("input_count").as("input_chunks"), col("kept_count").as("kept"),
+        col("dropped_count").as("dropped"), col("exact_dups"), col("near_dups"))
+    sameRows("report_json", report, metrics,
+      "doc_id", "input_chunks", "kept", "dropped", "exact_dups", "near_dups")
+    assert(report.agg(sum("dropped")).head().getLong(0) > 0,
+      "the corpus drops no chunk, so the report's drop counts are not pinned")
+  }
+
+  test("every sink job carries the caller's job group, description and scheduler pool") {
+    val (args, _) = committed
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[(String, String, String)]()
+    @volatile var markers = 0
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        def prop(k: String) = Option(p).map(_.getProperty(k)).orNull
+        if (prop("spark.jobGroup.id") == "sinks-marker") markers += 1
+        else seen.add((prop("spark.jobGroup.id"), prop("spark.job.description"),
+          prop("spark.scheduler.pool")))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      // two calls under two groups: threads kept from the first call (a
+      // shared or global pool) would carry its properties into the second;
+      // the marker job after each call flushes the listener
+      for (call <- 1 to 2) {
+        seen.clear()
+        sc.setJobGroup(s"sinks-$call", s"sink writes $call")
+        sc.setLocalProperty("spark.scheduler.pool", s"pool-$call")
+        SubmitMain.writeSinks(args)
+        sc.setJobGroup("sinks-marker", "marker")
+        sc.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime() + 30000000000L
+        while (markers < call && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(markers == call, "listener never saw the marker job")
+        val jobs = seen.asScala.toSeq
+        assert(jobs.size >= 4, s"call $call: ${jobs.size} jobs for four sinks")
+        assert(jobs.forall(_ == ((s"sinks-$call", s"sink writes $call", s"pool-$call"))),
+          s"call $call: jobs ran as ${jobs.distinct}")
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("spark.scheduler.pool", null)
+      sc.removeSparkListener(listener)
     }
   }
 
@@ -108,16 +204,11 @@ class SubmitMainSpec extends AnyFunSuite {
     for (docId <- Seq("3", "9")) {
       val driver = Files.readString(Paths.get(out, "artifacts", "result_md", s"$docId.md"))
       val partDir = Paths.get(out, "artifacts", "result_md_dist", s"doc_id=$docId")
-      val parts = scala.jdk.CollectionConverters.IteratorHasAsScala(
-          Files.list(partDir).iterator()).asScala
+      val parts = Files.list(partDir).iterator().asScala
         .filter(_.getFileName.toString.startsWith("part-")).toSeq
       assert(parts.size == 1, s"expected one text part for doc $docId, got $parts")
       val dist = Files.readString(parts.head)
       assert(dist == driver, s"doc $docId: distributed tree diverges from driver tree")
     }
-  }
-
-  private implicit class JavaListOps[A](l: java.util.List[A]) {
-    def asScala: Seq[A] = scala.jdk.CollectionConverters.ListHasAsScala(l).asScala.toSeq
   }
 }
