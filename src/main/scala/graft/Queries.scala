@@ -370,26 +370,14 @@ object Queries {
     // ---- doctor: testdata probe (the relational half of DoctorMain; the
     // env half — Spark/Scala/Java versions, parallelism — is the
     // graft.jobs.DoctorMain CLI, reference cmd/pipeline/doctor.go) ----
-    "q36_doctor_tables" -> ((s, dir) => {
-      // ONE two-phase aggregation over the union of constant-projected
-      // scans (2 exchanges), not one aggregation per table (the former
-      // 10-branch unionAll of aggs planned 20 exchanges and paid an AQE
-      // replanning round per branch). The broadcast spine join preserves
-      // the 0-row-table edge exactly (a groupBy alone would drop it).
-      // spine from unioned literals, not createDataFrame: keeps table_name
-      // non-nullable so the dumped parquet schema is bit-identical to the
-      // former shape
-      val spine = graft.jobs.DoctorMain.Tables.map(t =>
-        s.range(1).select(lit(t).as("table_name"))).reduce(_ unionAll _)
-      val counts = graft.jobs.DoctorMain.Tables.map(t =>
+    // one global count per table, unioned — the oracle's shape; a global
+    // aggregate over an empty table still yields its 0 row
+    "q36_doctor_tables" -> ((s, dir) =>
+      graft.jobs.DoctorMain.Tables.map(t =>
         s.read.parquet(s"$dir/$t.parquet")
-          .select(lit(t).as("table_name")))
-        .reduce(_ unionAll _)
-        .groupBy(col("table_name"))
-        .agg(count(lit(1)).cast("long").as("n_rows"))
-      spine.join(counts, Seq("table_name"), "left")
-        .select(col("table_name"), coalesce(col("n_rows"), lit(0L)).as("n_rows"))
-    })
+          .agg(count(lit(1)).cast("long").as("n_rows"))
+          .select(lit(t).as("table_name"), col("n_rows")))
+        .reduce(_ unionAll _))
   )
 
   import OracleSql._

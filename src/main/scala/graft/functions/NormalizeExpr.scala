@@ -11,7 +11,8 @@ import graft.kernel.TextKernel
   * `TextKernel.normalize` after the built-in lower()'s own lowercase
   * (`UTF8String.toLowerCase`), so the expression can never diverge from
   * `lower` on case mapping. It replaces the 4-pass Column formulation
-  * `Exprs.normColRegex`; ExprSpec pins the two byte for byte.
+  * (`graft.ops.SpecTwins.normColRegex`, test-side); ExprSpec pins the
+  * two byte for byte.
   */
 object NormalizeEval {
   def eval(in: UTF8String): UTF8String =

@@ -177,40 +177,39 @@ object SubmitMain {
 
     // result.md (reference result.md, main.go:276; WriteMarkdown text.go:249-279)
     val nDocs = table.select("doc_id").distinct().count()
+    val md = Render.markdown(kept.withColumn("idx", col("kept_order")),
+      cfg.markdownTitle, includeChunkIds = cfg.includeChunkIds)
     if (nDocs > docLimit) {
       // the single-FILE tree is the small-corpus contract; above the cap
       // the per-doc .md surface is written DISTRIBUTED instead of skipped:
       // partitionBy(doc_id) fans the same markdown out as
       // result_md_dist/doc_id=<id>/part-*.txt, executor-parallel, no
       // driver-side per-doc loop. Byte parity with the driver tree: the
-      // markdown always ends in exactly one '\n' (Render.markdown finalize
+      // markdown always ends in exactly one '\n' (TextKernel.finalizeMarkdown
       // contract) which the text sink re-appends per row, so the value is
       // written with its trailing newline stripped. Locked by
       // SubmitMainSpec's parity test.
       println(s"[graft] $nDocs docs > $docLimit: writing the per-doc tree " +
         "distributed (artifacts/result_md_dist, partitioned by doc_id); " +
         "chunks JSONL + report remain in the parquet/json directory sinks")
-      Render.markdown(kept.withColumn("idx", col("kept_order")),
-          lit(cfg.markdownTitle), includeChunkIds = cfg.includeChunkIds)
+      md
         // \z (end of INPUT) not $ (which also matches before a final line
         // terminator, so a value ending "\n\n" would lose two chars) — byte
-        // parity must not depend on Render.markdown's single-\n contract
+        // parity must not depend on finalizeMarkdown's single-\n contract
         .select(col("doc_id"),
           regexp_replace(col("markdown"), "\\n\\z", "").as("value"))
         .write.mode(SaveMode.Overwrite).partitionBy("doc_id")
         .text(dir.resolve("result_md_dist").toString)
       return
     }
-    val md = Render.markdown(kept.withColumn("idx", col("kept_order")),
-        lit(cfg.markdownTitle), includeChunkIds = cfg.includeChunkIds)
-      .orderBy("doc_id").select("doc_id", "markdown")
+    val ordered = md.orderBy("doc_id")
     if (nDocs == 1) {
-      val r = md.head
+      val r = ordered.head
       Files.writeString(dir.resolve("result.md"), r.getString(1), UTF_8)
     } else {
       val mdDir = dir.resolve("result_md")
       Files.createDirectories(mdDir)
-      md.toLocalIterator().asScala.foreach { r =>
+      ordered.toLocalIterator().asScala.foreach { r =>
         Files.writeString(mdDir.resolve(s"${r.getString(0)}.md"), r.getString(1), UTF_8)
       }
     }
@@ -289,7 +288,7 @@ object SubmitMain {
 
     val md = Render.markdown(
       kept.withColumn("idx", col("kept_order")),
-      lit(cfg.markdownTitle), includeChunkIds = cfg.includeChunkIds)
+      cfg.markdownTitle, includeChunkIds = cfg.includeChunkIds)
 
     // the audit frame holds EVERY filtered chunk (kept + dropped), which is
     // exactly the reference's pre-dedup JSONL input set

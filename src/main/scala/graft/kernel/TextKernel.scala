@@ -57,10 +57,10 @@ object TextKernel {
     * trim. Empty input stays empty.
     *
     * Everything after the lowercase is ONE character pass
-    * ([[collapseFilterTrim]]), byte-identical to the reference's (and
-    * `Exprs.normColRegex`'s) chain `[ \t]+` -> " ", `\n+` -> "\n", drop
-    * `[^\p{L}\p{Nd} \n]`, trim — pinned by ExprSpec and PropertySpec
-    * against that chain. Order sensitivity that must be preserved: run
+    * ([[collapseFilterTrim]]), byte-identical to the reference's (and the
+    * test-side `SpecTwins.normColRegex`'s) chain `[ \t]+` -> " ", `\n+` ->
+    * "\n", drop `[^\p{L}\p{Nd} \n]`, trim — pinned by ExprSpec and
+    * PropertySpec against that chain. Order sensitivity that must be preserved: run
     * collapsing happens BEFORE the character filter, so a run-breaking char
     * that is itself later removed still leaves two separate spaces
     * ("a . b" -> "a  b"); the pass tracks the previous INPUT char's class,

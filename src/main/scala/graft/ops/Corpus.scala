@@ -77,58 +77,17 @@ object Corpus {
   def ocrTextSql(ref: String): String =
     s"'Scanned page ' || $ref || ' recognized text payload with sufficient descriptive length for chunking.'"
 
-  /** The assembled raw document text: span texts (media spans contribute
-    * their OCR text) joined by blank lines, in offset order — the graft
-    * analogue of the reference's single extracted.txt read
-    * (cmd/pipeline/main.go:217-222).
-    */
-  def rawTextCol(docId: Column, t: Column): Column = {
-    val ref1 = concat(lit("img_"), docId, lit("_1.png"))
-    val ref2 = concat(lit("img_"), docId, lit("_2.jpg"))
-    concat_ws("\n\n",
-      t,
-      ocrTextCol(ref1),
-      lit(ChromeLine),
-      ocrTextCol(ref2),
-      t,
-      lit("ok"),
-      concat(upper(t), lit("!")),
-      lit(CrlfPara),
-      lit(LongChrome),
-      concat(t, lit(" "), lit(Tail)),
-      lit(AccentPara),
-      lit(UnicodeWsPara))
-  }
-
-  /** Plain-Scala twin of [[rawTextCol]] for the sequential test oracle —
-    * must stay byte-identical to the Column and SQL builders.
-    */
-  def rawTextLocal(docId: String, t: String): String = {
-    def ocr(ref: String): String =
-      s"Scanned page $ref recognized text payload with sufficient descriptive length for chunking."
-    Seq(
-      t,
-      ocr(s"img_${docId}_1.png"),
-      ChromeLine,
-      ocr(s"img_${docId}_2.jpg"),
-      t,
-      "ok",
-      t.toUpperCase(java.util.Locale.ROOT) + "!",
-      CrlfPara,
-      LongChrome,
-      s"$t $Tail",
-      AccentPara,
-      UnicodeWsPara
-    ).mkString("\n\n")
-  }
-
   // SQL string literals: escape and use chr(10)/chr(13) for control chars.
   private def sqlLit(s: String): String =
     "'" + s.replace("'", "''").replace("\r", "' || chr(13) || '")
       .replace("\n", "' || chr(10) || '") + "'"
 
-  /** DuckDB SQL for rawTextCol over `documents` aliased columns; `docId` and
-    * `t` are SQL expressions (e.g. "CAST(doc_id AS VARCHAR)" and "text").
+  /** The assembled raw document text as DuckDB SQL over `documents`
+    * aliased columns: span texts (media spans contribute their OCR text)
+    * joined by blank lines, in offset order — what [[assemble]] builds from
+    * a [[docsTable]] row, and the graft analogue of the reference's single
+    * extracted.txt read (cmd/pipeline/main.go:217-222). `docId` and `t` are
+    * SQL expressions (e.g. "CAST(doc_id AS VARCHAR)" and "text").
     */
   def rawTextSql(docId: String, t: String): String = {
     val nn = "chr(10) || chr(10)"
@@ -153,7 +112,7 @@ object Corpus {
   /** Deterministic HTML rendering of a document — nav/footer/script/style
     * chrome around entity-encoded body paragraphs — for the [[Html]]
     * boilerplate-strip family. Column and SQL builders in LOCK-STEP (same
-    * discipline as rawTextCol/rawTextSql); the corpus itself carries no
+    * discipline as docsTable/rawTextSql); the corpus itself carries no
     * HTML, so this is the synthesized-input surface the north_rule's
     * "HTML boilerplate strip, DOM heuristics" operators run on.
     */

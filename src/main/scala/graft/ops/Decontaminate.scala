@@ -30,9 +30,9 @@ object Decontaminate {
     * uppercase (see OracleSql.asciiLower), which would silently flip
     * membership.
     *
-    * A compiled UDF, not the Column-HOF formulation (kept below as
-    * [[ngramsHof]], the in-engine spec twin): Catalyst higher-order
-    * functions run an interpreted lambda per ELEMENT, and the
+    * A compiled UDF, not the Column-HOF formulation (kept as the
+    * test-side `SpecTwins.ngramsHof`, the in-engine spec twin): Catalyst
+    * higher-order functions run an interpreted lambda per ELEMENT, and the
     * transform+array_join(slice) form measured ~23 µs per gram — 5.5 s
     * for one sf0.1 explode, the dominant cost of the q76 capstone and of
     * any REAL consumer of the q56 screen (the same finding, fix, and
@@ -50,20 +50,6 @@ object Decontaminate {
   }
 
   def ngrams(text: Column, n: Int): Column = ngramsU(text, lit(n))
-
-  /** The original Column-HOF formulation — the spec twin [[ngrams]] is
-    * parity-tested against (DecontaminateSpec). The `when` guard matters:
-    * Spark's `sequence(1, 0)` helpfully steps BACKWARDS, which would
-    * fabricate grams for short docs.
-    */
-  private[ops] def ngramsHof(text: Column, n: Int): Column = {
-    val toks = TextAnalysis.tokens(translate(text,
-      "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"))
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
 
   val DefaultN = 8
 

@@ -30,20 +30,6 @@ object Exprs {
       graft.functions.NormalizeExpr(
         org.apache.spark.sql.graftbridge.Bridge.expression(c)))
 
-  /** The original 4-pass built-in formulation of [[normCol]] — kept as the
-    * in-engine reference the fused expression and `TextKernel.normalize`
-    * are spec-tested against (ExprSpec: byte equality on the full corpus +
-    * adversarial fixtures; PropertySpec: random strings).
-    */
-  def normColRegex(c: Column): Column =
-    trim(
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(lower(c), "[ \\t]+", " "),
-          "\\n+", "\n"),
-        "[^\\p{L}\\p{Nd} \\n]", ""),
-      " \n")
-
   /** Go `strings.TrimSpace` trim set — the FULL Unicode White_Space property
     * (TextKernel.isGoSpace), not just ASCII: tab, LF, VT, FF, CR, space,
     * NEL, NBSP, OGHAM SPACE MARK, U+2000-200A, LINE/PARA SEPARATOR,

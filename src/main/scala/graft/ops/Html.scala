@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * The corpus carries no real HTML, so [[Corpus]] gains a deterministic
   * HTML rendering of each document (nav/header/footer chrome + entity-
   * encoded body paragraphs) built in Column and SQL lock-step — the same
-  * 3-builder discipline as rawTextCol.
+  * discipline as docsTable and rawTextSql.
   */
 object Html {
 

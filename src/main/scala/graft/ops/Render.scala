@@ -1,44 +1,36 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.kernel.{Chunk, TextKernel}
 
 /** A3/S4 — per-document Markdown rendering (reference:
-  * internal/text/text.go:219-279), as an ordered per-doc fold.
+  * internal/text/text.go:219-279) over a distributed chunk table.
   *
-  * Implemented with collect_list + array_sort + array_join inside a single
-  * groupBy on doc_id (one exchange, reused from upstream per-doc stages) —
-  * never a driver-side collect. Byte layout locked by kernel fixtures; the
-  * distributed form is fixture-tested against the kernel.
+  * One groupBy on doc_id collects each doc's (idx, id, text) rows — a
+  * partial aggregate, so the sink shuffles the collected chunks once and
+  * never collects to the driver — and the kernel renders them
+  * ([[TextKernel.renderMarkdown]] + [[TextKernel.finalizeMarkdown]]), so
+  * the byte layout lives in the kernel alone.
   */
 object Render {
 
-  /** kept chunks (doc_id, id, text, idx) -> (doc_id, markdown).
-    * Layout per reference: "# " + title + "\n\n" then per chunk
-    * [optional "<!-- id -->\n"] + text + "\n\n"; then the sink
-    * normalization (text.go:267-272): trailing newlines collapsed to one.
+  /** kept chunks (doc_id, id, text, idx) -> (doc_id, markdown): the doc's
+    * chunks in (idx, id, text) order, rendered under `title` (empty: the
+    * kernel's default) with optional chunk-id comments, sink-normalized.
     */
-  def markdown(kept: DataFrame, title: Column, includeChunkIds: Boolean): DataFrame = {
-    val entry =
-      if (includeChunkIds)
-        (x: Column) => concat(lit("<!-- "), x("id"), lit(" -->\n"), x("text"), lit("\n\n"))
-      else
-        (x: Column) => concat(x("text"), lit("\n\n"))
-    val t = when(length(title) === 0, lit("Extracted Notes")).otherwise(title)
+  def markdown(kept: DataFrame, title: String, includeChunkIds: Boolean): DataFrame = {
+    def utf8(r: Row, i: Int) = UTF8String.fromString(r.getString(i))
+    val render = udf { (rows: Seq[Row]) =>
+      // Spark's struct order: strings compare as UTF-8 bytes
+      val chunks = rows.sortBy(r => (r.getLong(0), utf8(r, 1), utf8(r, 2)))
+        .map(r => Chunk(r.getString(1), r.getString(2), "", r.getLong(0).toInt))
+      TextKernel.finalizeMarkdown(TextKernel.renderMarkdown(title, chunks, includeChunkIds))
+    }.asNonNullable()
     kept
       .groupBy(col("doc_id"))
-      .agg(array_join(
-        transform(
-          array_sort(collect_list(struct(col("idx"), col("id"), col("text")))),
-          entry),
-        "").as("body"))
-      .select(
-        col("doc_id"), {
-          // finalizeMarkdown: CRLF->LF, CR->LF, trailing \n* -> exactly one
-          val full = concat(lit("# "), t, lit("\n\n"), col("body"))
-          val lf = regexp_replace(regexp_replace(full, "\\r\\n", "\n"), "\\r", "\n")
-          concat(rtrim(lf, "\n"), lit("\n")).as("markdown")
-        })
+      .agg(render(collect_list(struct(col("idx"), col("id"), col("text")))).as("markdown"))
   }
 
   /** S3 — chunks-JSONL projection (reference: internal/text/text.go:187-198):

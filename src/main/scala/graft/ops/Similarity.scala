@@ -17,18 +17,6 @@ import graft.kernel.Hashing
   */
 object Similarity {
 
-  // ---------- exact dedup ----------
-
-  /** Exact document dedup: hash-groupBy on sha1(text); winner = min doc_id.
-    * Map-side partial agg + one exchange on the 20-byte hash; text payload
-    * travels only for the winner via min_by.
-    */
-  def exactDocDedup(docs: DataFrame): DataFrame =
-    docs.groupBy(sha1(col("text")).as("text_sha1"))
-      .agg(
-        min(col("doc_id")).as("keep_doc_id"),
-        count(lit(1)).cast("long").as("n_copies"))
-
   /** Corpus-wide common-paragraph (boilerplate) filter, the
     * RefinedWeb/CCNet-style complement of per-corpus exact dedup: a chunk
     * whose normalized text recurs in MORE than `maxDocs` DISTINCT documents
@@ -353,36 +341,43 @@ object Similarity {
   }
   }
 
+  /** The hyperplane buckets of both embedding-LSH operators: `emb`'s
+    * (vec_id, embedding, bucket, nrm) rows under `bits` hyperplanes (0:
+    * [[autoBits]] of the corpus count), and the probe buckets of a row —
+    * its own bucket plus every single-bit flip of it.
+    *
+    * The rows are reused: the probe side and the neighbor side each
+    * re-evaluated the signature UDF + norm over the full scan (plus the
+    * pushed join-key null filter's second evaluation); one materialization
+    * serves both (same rationale as LshDedup.nearDupPairs). The flips are
+    * built driver-side, NOT with sequence(): sequence(0,-1) is a
+    * descending [0,-1], not empty.
+    */
+  private def hyperplaneBuckets(emb: DataFrame, bits: Int): (DataFrame, Column) = {
+    val nbits = if (bits > 0) bits else autoBits(emb.count())
+    val sigs = Bridge.reused(emb.select(col("vec_id"), col("embedding"),
+      signBitsU(nbits)(col("embedding")).as("bucket"),
+      norm2(col("embedding")).as("nrm")))
+    (sigs, array((col("bucket") +: (0 until nbits).map(i =>
+      col("bucket").bitwiseXOR(lit(1 << i)))): _*))
+  }
+
   /** LSH-bucketed ANN: random-hyperplane sign buckets; candidates = bucket
-    * collisions plus (when `probe`) all single-bit-flip probe buckets of the
-    * query side; exact cosine re-rank inside the bucket. This is the shape
-    * that survives 100TB — a bucket equi-join, no cross product.
+    * collisions plus all single-bit-flip probe buckets of the query side;
+    * exact cosine re-rank inside the bucket. This is the shape that
+    * survives 100TB — a bucket equi-join, no cross product.
     *
     * Scale knob: `bits`. Expected bucket population is n / 2^bits and join
     * fan-out is sum over buckets of |bucket|^2, so `bits` must GROW with
     * log2(n) to keep buckets bounded; recall lost to more bits is bought
-    * back by probing. Default (bits = 0) is SELF-TENDING: [[autoBits]] of
-    * the corpus count — one metadata-cheap count() action against the
-    * input; callers that already know n (or whose emb is an expensive
-    * unmaterialized plan) pass bits explicitly to skip it. AQE skew-join
-    * splits any residual hot bucket.
+    * back by the 1-bit probing. Default (bits = 0) is SELF-TENDING:
+    * [[autoBits]] of the corpus count — one metadata-cheap count() action
+    * against the input; callers that already know n (or whose emb is an
+    * expensive unmaterialized plan) pass bits explicitly to skip it. AQE
+    * skew-join splits any residual hot bucket.
     */
-  def annLshTopK(emb: DataFrame, k: Int, bits: Int = 0,
-      probe: Boolean = true): DataFrame = {
-    val nbits = if (bits > 0) bits else autoBits(emb.count())
-    // reused: the probe side and the neighbor side each re-evaluated the
-    // signature UDF + norm over the full scan (plus the pushed join-key
-    // null filter's second evaluation); one materialization serves both
-    // (same rationale as LshDedup.nearDupPairs)
-    val sigs = Bridge.reused(emb.select(col("vec_id"), col("embedding"),
-      signBitsU(nbits)(col("embedding")).as("bucket"),
-      norm2(col("embedding")).as("nrm")))
-    // single-bit-flip probe buckets, built driver-side (NOT sequence():
-    // sequence(0,-1) is a descending [0,-1], not empty)
-    val probeArr =
-      if (probe) array((col("bucket") +: (0 until nbits).map(i =>
-        col("bucket").bitwiseXOR(lit(1 << i)))): _*)
-      else array(col("bucket"))
+  def annLshTopK(emb: DataFrame, k: Int, bits: Int = 0): DataFrame = {
+    val (sigs, probeArr) = hyperplaneBuckets(emb, bits)
     val probes = sigs.select(col("vec_id").as("query_id"), col("embedding").as("e_q"),
       col("nrm").as("n_q"), explode(probeArr).as("bucket"))
     val cands = probes.join(
@@ -416,21 +411,13 @@ object Similarity {
     * pair surfaces iff their buckets differ in <= 1 bit; near-duplicates
     * (cos -> 1) flip any given hyperplane with probability
     * arccos(cos)/pi -> 0, so expected flipped bits stay < 1 for the
-    * near-dup band this exists for; raise probing (or lower bits) for
-    * looser thresholds. Scale knob `bits` self-tends exactly as in
-    * [[annLshTopK]]: 0 (the default) = [[autoBits]] of the corpus count.
+    * near-dup band this exists for; lower bits for looser thresholds.
+    * Scale knob `bits` self-tends exactly as in [[annLshTopK]]: 0 (the
+    * default) = [[autoBits]] of the corpus count.
     */
   def embeddingNearDupPairsLsh(emb: DataFrame, thresholdBp: Long,
-      bits: Int = 0, probe: Boolean = true): DataFrame = {
-    val nbits = if (bits > 0) bits else autoBits(emb.count())
-    // reused — same double-evaluation fix as annLshTopK
-    val sigs = Bridge.reused(emb.select(col("vec_id"), col("embedding"),
-      signBitsU(nbits)(col("embedding")).as("bucket"),
-      norm2(col("embedding")).as("nrm")))
-    val probeArr =
-      if (probe) array((col("bucket") +: (0 until nbits).map(i =>
-        col("bucket").bitwiseXOR(lit(1 << i)))): _*)
-      else array(col("bucket"))
+      bits: Int = 0): DataFrame = {
+    val (sigs, probeArr) = hyperplaneBuckets(emb, bits)
     val a = sigs.select(col("vec_id").as("id_a"), col("embedding").as("e_a"),
       col("nrm").as("n_a"), explode(probeArr).as("bucket"))
     val b = sigs.select(col("vec_id").as("id_b"), col("embedding").as("e_b"),

@@ -89,8 +89,8 @@ object TextAnalysis {
     * engines), plus an order-insensitive token-sum sketch.
     *
     * The rolling hash is the native codegen RollingHashExpr — the
-    * interpreted HOF fold (kept below as [[rollingHashHof]], the in-engine
-    * spec twin) ran an interpreted lambda per CHARACTER and materialized
+    * interpreted HOF fold (kept as the test-side `SpecTwins.rollingHashHof`,
+    * the in-engine spec twin) ran an interpreted lambda per CHARACTER and materialized
     * every character as a single-char string (~16 bytes each) on a scan
     * stage. The token sketch's fold is over tokens (1-2 orders of magnitude
     * fewer elements), dominated by the split itself — left as the HOF.
@@ -99,13 +99,6 @@ object TextAnalysis {
     docs.select(col("doc_id"),
       Exprs.rollingHash(col("text")).as("rolling_hash"),
       tokenSketch(col("text")).as("token_sketch"))
-
-  /** Interpreted spec twin of RollingHashExpr (the pre-round-4 formulation);
-    * must stay row-identical to it — see ExprSpec's parity property.
-    */
-  def rollingHashHof(text: Column): Column =
-    aggregate(transform(split(text, ""), ch => ascii(ch).cast("long")),
-      lit(0L), (h, c) => (h * 31L + c) % 1000000007L)
 
   private def tokenSketch(text: Column): Column =
     aggregate(

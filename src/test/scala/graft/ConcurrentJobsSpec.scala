@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * under the caller's session and local properties, every job finishes
   * before a failure is rethrown, and no pool thread outlives the call.
   */
-class ConcurrentJobsSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ConcurrentJobsSpec extends AnyFunSuite with SparkSpec {
 
   private val threads = new ConcurrentLinkedQueue[Thread]()
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernel._
@@ -12,14 +11,7 @@ import graft.jobs.ExtractionJob
   * row per document, the sequence computed by the SEQUENTIAL oracle — the
   * pure kernel applying the reference's semantics doc by doc.
   */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -33,7 +25,7 @@ class PipelineSpec extends AnyFunSuite {
   /** Sequential oracle: the full reference pipeline per doc via the kernel. */
   def oraclePipeline(docId: String, text: String,
       config: DedupeConfig = DedupeConfig()): DedupeResult = {
-    val raw = Corpus.rawTextLocal(docId, text)
+    val raw = SpecTwins.rawTextLocal(docId, text)
     val chunks = TextKernel.chunkText(raw, Corpus.MinChunkChars)
     val filtered = TextKernel.filterChrome(
       chunks, TextKernel.defaultChromePatterns, Corpus.ChromeMaxLength)
@@ -82,7 +74,7 @@ class PipelineSpec extends AnyFunSuite {
       .groupBy(_._1).view.mapValues(_.map(_._2).sortBy(_._4).toSeq).toMap
     for ((docId, text) <- sourceDocs) {
       val expected = TextKernel
-        .chunkText(Corpus.rawTextLocal(docId, text), Corpus.MinChunkChars)
+        .chunkText(SpecTwins.rawTextLocal(docId, text), Corpus.MinChunkChars)
         .map(c => (c.id, c.text, c.norm, c.index.toLong))
       assert(got.getOrElse(docId, Seq.empty) == expected, s"chunks mismatch for doc $docId")
     }
@@ -94,7 +86,7 @@ class PipelineSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1)))
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
     for ((docId, text) <- sourceDocs.take(100)) {
-      val raw = Corpus.rawTextLocal(docId, text)
+      val raw = SpecTwins.rawTextLocal(docId, text)
       val chunks = TextKernel.filterChrome(
         TextKernel.chunkText(raw, Corpus.MinChunkChars),
         TextKernel.defaultChromePatterns, Corpus.ChromeMaxLength)
@@ -108,7 +100,7 @@ class PipelineSpec extends AnyFunSuite {
     val got = Queries.queries("q08_a3_markdown")(spark, sfDir)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     for ((docId, text) <- sourceDocs.take(100)) {
-      val raw = Corpus.rawTextLocal(docId, text)
+      val raw = SpecTwins.rawTextLocal(docId, text)
       val chunks = TextKernel.filterChrome(
         TextKernel.chunkText(raw, Corpus.MinChunkChars),
         TextKernel.defaultChromePatterns, Corpus.ChromeMaxLength)

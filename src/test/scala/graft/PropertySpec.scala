@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -15,19 +14,13 @@ import graft.ops.Corpus
   * distributed pipeline must equal the sequential kernel, row for row. The round-2 Unicode-TrimSpace divergence
   * was exactly the class of bug a generator finds and example tests miss.
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with SparkSpec {
 
   // no scalatest-scalacheck bridge in the offline cache: drive Gen directly
   // with FIXED seeds — deterministic, replayable, still generator-powered
   private def sample[A](g: Gen[A], seed: Long): A =
     g.pureApply(Gen.Parameters.default, Seed(seed))
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
 
   private val wordGen = Gen.oneOf(
     "alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf", "hotel",
@@ -145,7 +138,7 @@ class PropertySpec extends AnyFunSuite {
       val ss = sample(Gen.listOfN(60, junkGen), seed)
       val rows = ss.toDF("s")
         .select(col("s"), ops.Exprs.normCol(col("s")).as("a"),
-          ops.Exprs.normColRegex(col("s")).as("b"))
+          ops.SpecTwins.normColRegex(col("s")).as("b"))
         .as[(String, String, String)].collect()
       val bad = rows.filter { case (s, fused, chain) =>
         fused != chain || TextKernel.normalize(s) != chain }

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * session conf, so no operator, kernel, function, table or streaming code
   * reads the process environment (only the mains — Bench, BenchExtra,
   * tools, jobs — may), an intermediate is materialized one way, through
-  * `Bridge.reused`, and concurrent Spark jobs are run one way, through
-  * `Bridge.concurrently`.
+  * `Bridge.reused`, concurrent Spark jobs are run one way, through
+  * `Bridge.concurrently`, and Markdown is rendered one way, by the kernel.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -50,6 +50,21 @@ class SourceRulesSpec extends AnyFunSuite {
       if rule.findFirstIn(line).isDefined
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("concurrency outside Bridge:\n", "\n", ""))
+  }
+
+  test("the Markdown layout is written only in TextKernel and the DuckDB oracle") {
+    // one renderer: every Markdown sink goes through the kernel; the
+    // oracle SQL in Queries is the other engine's independent encoding
+    val rule = """Extracted Notes|<!-- """.r
+    val allowed = Set(Paths.get("src/main/scala/graft/kernel/TextKernel.scala"),
+      Paths.get("src/main/scala/graft/Queries.scala"))
+    val hits = for {
+      f <- scalaFiles(Paths.get("src/main"))
+      if !allowed.contains(f)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if rule.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("Markdown layout outside the kernel:\n", "\n", ""))
   }
 
   private def scalaFiles(dir: Path): Seq[Path] = {

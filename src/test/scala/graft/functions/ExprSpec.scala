@@ -1,20 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernel.{Hashing, TextKernel}
 import graft.ops.Exprs
+import graft.SparkSpec
 
 /** Native-expression vs kernel parity, including codegen and SQL paths. */
-class ExprSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExprSpec extends AnyFunSuite with SparkSpec {
 
   private val samples = Seq(
     "", "ab", "abc", "hello world this is a simhash test string",
@@ -58,7 +51,7 @@ class ExprSpec extends AnyFunSuite {
         .select("text").as[String].take(50)
     val rows = fixtures.toDF("s")
       .select(col("s"), Exprs.normCol(col("s")).as("fused"),
-        Exprs.normColRegex(col("s")).as("chain"))
+        graft.ops.SpecTwins.normColRegex(col("s")).as("chain"))
       .collect()
     for (r <- rows) {
       assert(r.getString(1) == r.getString(2),
@@ -70,7 +63,7 @@ class ExprSpec extends AnyFunSuite {
     val corpus = graft.ops.Corpus.assemble(
         graft.ops.Corpus.docsTable(spark, "/root/testdata/sf0.001"))
       .select(col("raw"), Exprs.normCol(col("raw")).as("fused"),
-        Exprs.normColRegex(col("raw")).as("chain"))
+        graft.ops.SpecTwins.normColRegex(col("raw")).as("chain"))
       .filter(col("raw").isNotNull)
       .as[(String, String, String)].collect()
     assert(corpus.nonEmpty)
@@ -94,7 +87,7 @@ class ExprSpec extends AnyFunSuite {
         .select("text").as[String].take(50)
     val rows = fixtures.toDF("s")
       .select(Exprs.rollingHash(col("s")).as("native"),
-        graft.ops.TextAnalysis.rollingHashHof(col("s")).as("hof"))
+        graft.ops.SpecTwins.rollingHashHof(col("s")).as("hof"))
       .collect()
     for (r <- rows)
       assert(r.getLong(0) == r.getLong(1), s"native=${r.getLong(0)} hof=${r.getLong(1)}")
@@ -127,8 +120,8 @@ class ExprSpec extends AnyFunSuite {
 
   test("SQL registration via GraftExtensions") {
     import spark.implicits._
-    // the extensions conf above only applies if THIS spec won the shared
-    // getOrCreate race — register explicitly so suite order can't break SQL
+    // the shared session is built without the extensions conf (it applies
+    // only at construction), so register on the live session
     GraftExtensions.register(spark)
     samples.toDF("s").createOrReplaceTempView("t")
     val rows = spark.sql(

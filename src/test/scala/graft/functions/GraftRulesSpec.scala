@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Exprs
+import graft.SparkSpec
 
 /** NormalizeLowerElision: the semantic property the rewrite rests on
   * (normalize(lower(x)) == normalize(x), pinned over adversarial fixtures
@@ -14,13 +14,7 @@ import graft.ops.Exprs
   * from the optimized plan, identical results), and the counterexample
   * proving the tempting normalize∘normalize collapse must NOT be a rule.
   */
-class GraftRulesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraftRulesSpec extends AnyFunSuite with SparkSpec {
 
   private def sample[A](g: Gen[A], seed: Long): A =
     g.pureApply(Gen.Parameters.default, Seed(seed))

@@ -4,25 +4,19 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Corpus, Render}
 import graft.table.SnapshotTable
+import graft.SparkSpec
 
 /** CLI parsing (flag/positional mixing), the directory sinks' content and
   * job attribution, and the reference's single-FILE artifact contract
   * (result.md / chunks_raw.jsonl / dedupe_report.json —
   * cmd/pipeline/main.go:231,259,276).
   */
-class SubmitMainSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SubmitMainSpec extends AnyFunSuite with SparkSpec {
 
   test("parse: flags and positionals mix without slot misassignment") {
     val a = SubmitMain.parse(Array("--emit-report", "/sf", "/out", "64"))
@@ -93,6 +87,21 @@ class SubmitMainSpec extends AnyFunSuite {
       "doc_id", "input_chunks", "kept", "dropped", "exact_dups", "near_dups")
     assert(report.agg(sum("dropped")).head().getLong(0) > 0,
       "the corpus drops no chunk, so the report's drop counts are not pinned")
+  }
+
+  test("every result_md artifact equals its doc's kernel Markdown on the sf0.001 corpus") {
+    val (args, docs) = committed
+    SubmitMain.writeArtifacts(args)
+    val mdDir = Paths.get(args.out, "artifacts", "result_md")
+    val files = Files.list(mdDir).iterator().asScala.map(p =>
+      p.getFileName.toString.stripSuffix(".md") -> Files.readString(p)).toMap
+    val twin = ExtractionJob.markdown(docs, args.pipeline).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(twin.nonEmpty, "the corpus renders no Markdown")
+    assert(files.keySet == twin.keySet,
+      s"${files.size} artifacts for ${twin.size} rendered docs")
+    val differs = twin.keys.toSeq.sorted.find(id => files(id) != twin(id))
+    assert(differs.isEmpty, s"artifact differs from ExtractionJob.markdown at doc $differs")
   }
 
   test("every sink job carries the caller's job group, description and scheduler pool") {

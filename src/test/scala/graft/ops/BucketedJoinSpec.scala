@@ -1,9 +1,9 @@
 package graft.ops
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** Bucketed co-located join: the write-side partitioning contract that
   * removes the shuffle from repeated large-large joins — the storage-layout
@@ -21,14 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * of the exchange is attributable to bucketing alone, not to a
   * small-table rescue).
   */
-class BucketedJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class BucketedJoinSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 

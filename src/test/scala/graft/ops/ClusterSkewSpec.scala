@@ -1,22 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** k-means / SemDeDup / salted-join / importance-resample suite: planted
   * cluster geometry (identical docs co-cluster and dedup; zero vectors are
   * guarded, not NaN-compared), empty-cluster centroid carry, salted-join
   * result identity vs the plain join, and resample coin/rate fidelity.
   */
-class ClusterSkewSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class ClusterSkewSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,21 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** End-to-end curation-manifest capstone: one planted corpus exercises every
   * stage (short doc → structural gate, shared 8-gram → decontamination,
   * identical text → exact dedup, eval id → exclusion), and the packing
   * columns are re-derived from the surviving train stream independently.
   */
-class CurationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CurationSpec extends AnyFunSuite with SparkSpec {
 
   private val evalGram = "alpha beta gamma delta epsilon zeta eta theta"
 

@@ -1,18 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** Decontamination fixtures: planted eval overlap, the below-n short-doc
   * rule, ASCII case folding, and the complete-spine guarantee.
   */
-class DecontaminateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DecontaminateSpec extends AnyFunSuite with SparkSpec {
 
   private def df(rows: (Long, String)*) = {
     import spark.implicits._
@@ -68,14 +62,14 @@ class DecontaminateSpec extends AnyFunSuite {
         Decontaminate.ngrams(col("text"), n).as("g")).collect()
         .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
       val h = fixtures.select(col("doc_id"),
-        Decontaminate.ngramsHof(col("text"), n).as("g")).collect()
+        SpecTwins.ngramsHof(col("text"), n).as("g")).collect()
         .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
       assert(u == h, s"n=$n")
     }
     // and over the real corpus
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val a = docs.select(col("doc_id"), Decontaminate.ngrams(col("text"), 8).as("g"))
-    val b = docs.select(col("doc_id"), Decontaminate.ngramsHof(col("text"), 8).as("g"))
+    val b = docs.select(col("doc_id"), SpecTwins.ngramsHof(col("text"), 8).as("g"))
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 }

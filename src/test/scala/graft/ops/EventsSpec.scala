@@ -1,9 +1,9 @@
 package graft.ops
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** Edge-case fixtures for the events operators: the exact 30-minute gap
   * boundary (must MERGE — sessions split only when gap > threshold, the
@@ -13,14 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * so the keep branch is live on the synthetic corpus and covered by the
   * q41 oracle as well as here).
   */
-class EventsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class EventsSpec extends AnyFunSuite with SparkSpec {
 
   private def ts(min: Long, sec: Long = 0, us: Long = 0): Timestamp =
     new Timestamp(min * 60000L + sec * 1000L + us / 1000)
@@ -61,7 +54,6 @@ class EventsSpec extends AnyFunSuite {
   }
 
   test("resizeBatch: keep AND scale branches are both live and both correct") {
-    implicit val s: SparkSession = spark
     import spark.implicits._
     // payload construction mirrors Multimodal.mediaTable; 100 refs make the
     // deterministic stub dims land on BOTH sides of maxDim=512 (the former

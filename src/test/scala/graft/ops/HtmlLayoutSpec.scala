@@ -1,17 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** DOM-heuristic boilerplate classification + PDF reading-order fixtures. */
-class HtmlLayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HtmlLayoutSpec extends AnyFunSuite with SparkSpec {
 
   /** Decode the fixed entity set the corpus uses; `&amp;` LAST so
     * double-encoded sequences don't cascade.

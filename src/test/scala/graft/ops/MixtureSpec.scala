@@ -1,20 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** Planted-fixture suite for the source-mixture report: known per-source
   * doc/token/dup counts must come out exactly, and the balanced rate must
   * equalize token mass (the min-token source at exactly 10000 bp).
   */
-class MixtureSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class MixtureSpec extends AnyFunSuite with SparkSpec {
 
   test("sourceMixture: planted counts, dup fraction, balanced rate") {
     import spark.implicits._

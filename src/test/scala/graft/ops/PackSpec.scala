@@ -1,22 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** Sequence-packing suite: hand-computed boundary fixture, and the load-
   * bearing check that the DISTRIBUTED two-pass prefix sum equals the
   * single-partition window definition row-for-row across many partitions
   * (integer weights, so equality is exact, not approximate).
   */
-class PackSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PackSpec extends AnyFunSuite with SparkSpec {
 
   test("budget boundaries: offsets, spanning docs, empty docs") {
     import spark.implicits._

@@ -1,20 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** PII scrub fixtures: detection counts, redaction output, and the
   * near-miss strings that must NOT match (the patterns promise identical
   * meaning under Java regex and RE2 — these pin the Java half; the DuckDB
   * oracle run pins the RE2 half on the same planted corpus).
   */
-class PiiSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PiiSpec extends AnyFunSuite with SparkSpec {
 
   private def scrub(text: String): (Long, Long, Long, String) = {
     import spark.implicits._

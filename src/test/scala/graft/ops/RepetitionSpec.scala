@@ -1,20 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** Repetition-signal fixtures with hand-computed expectations, covering the
   * branches the synthetic corpus alone would leave at zero (the oracle path
   * plants dup lines for that — q54's derivation; here the arithmetic itself
   * is pinned).
   */
-class RepetitionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RepetitionSpec extends AnyFunSuite with SparkSpec {
 
   private def sig(text: String): (Long, Long, Long, Long) = {
     import spark.implicits._

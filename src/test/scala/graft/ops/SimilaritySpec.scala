@@ -1,10 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernel.Hashing
+import graft.SparkSpec
 
 /** Similarity-search quality suite: ANN recall on planted near-duplicates,
   * MinHash-LSH vs exact Jaccard, cluster-winner propagation.
@@ -17,14 +18,7 @@ import graft.kernel.Hashing
   * PLANTED near-duplicates: perturbed copies at cosine >= 0.99 that the
   * index must reunite with their source.
   */
-class SimilaritySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SimilaritySpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 

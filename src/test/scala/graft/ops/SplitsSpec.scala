@@ -1,21 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** Dataset-assembly suite: split determinism/coverage, stratified-sample
   * rate fidelity, and a planted incremental-ingest fixture (exact copy /
   * near-dup / novel must classify as such).
   */
-class SplitsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class SplitsSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,20 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** Vocabulary-stats suite: hand-computed tf/df fixture (case folding, minTf
   * cut), exact unigram-score arithmetic including the empty-doc row, and the
   * precomputed-vocab fast path equalling the self-computed one.
   */
-class VocabSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VocabSpec extends AnyFunSuite with SparkSpec {
 
   def fixture(): org.apache.spark.sql.DataFrame = {
     import spark.implicits._

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 final case class RawEvent(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double)
@@ -12,19 +12,11 @@ final case class RawEvent(event_id: Long, ts: Timestamp, user_id: Long,
   * event-time-ordered micro-batches; cross-batch state carries the latest
   * build event; a late out-of-order build replay never regresses state.
   */
-class StreamingAsofSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class StreamingAsofSpec extends AnyFunSuite with SparkSpec {
 
   private def ts(min: Long): Timestamp = new Timestamp(min * 60000L)
 
   test("streamed == batch over event-time-ordered batches; state crosses batches") {
-    implicit val s: SparkSession = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 
@@ -69,7 +61,6 @@ class StreamingAsofSpec extends AnyFunSuite {
   }
 
   test("a late replay of an OLD build event does not regress the state") {
-    implicit val s: SparkSession = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 

@@ -2,24 +2,18 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.mutable
+import graft.SparkSpec
 
 /** Streaming common-paragraph screen vs the q73 batch filter: the
   * documented no-recall divergence (pre-crossing occurrences stay emitted,
   * everything from the crossing batch on is dropped), atomic within-batch
   * crossing, and idempotency under micro-batch replay.
   */
-class StreamingBoilerplateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class StreamingBoilerplateSpec extends AnyFunSuite with SparkSpec {
 
   private val banner =
     "Please accept our cookie policy before continuing to browse this website."

@@ -1,25 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 final case class RawDoc(doc_id: Long, text: String)
 
 /** Streaming exact dedup: first-seen wins across micro-batches, min doc_id
   * wins within one, replay of the whole stream equals the batch winners.
   */
-class StreamingDedupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class StreamingDedupSpec extends AnyFunSuite with SparkSpec {
 
   test("novelDocs: first-seen wins across batches, min id within a batch") {
-    implicit val s: SparkSession = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 
@@ -62,7 +54,6 @@ class StreamingDedupSpec extends AnyFunSuite {
   }
 
   test("novelDocs under the RocksDB state store provider (the web-scale config)") {
-    implicit val s: SparkSession = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val key = "spark.sql.streaming.stateStore.providerClass"

@@ -2,25 +2,19 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.mutable
+import graft.SparkSpec
 
 /** Streaming near-dup screen: within-batch semantics (atomic, min-id,
   * index-beats-batch), singleton-batch == strict sequential greedy vs the
   * q52 batch screen, and idempotency under micro-batch replay.
   */
-class StreamingScreenSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class StreamingScreenSpec extends AnyFunSuite with SparkSpec {
 
   private val exactA = "The quick brown fox jumps over the lazy dog near the river bank today."
   private val nearA = "The quick brown fox jumps over the lazy dog near the river bank tonight."

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernel.{DedupeConfig, DedupeKernel, TextKernel}
-import graft.ops.Corpus
+import graft.ops.{Corpus, SpecTwins}
+import graft.SparkSpec
 
 final case class TestSpan(kind: String, text: String, media_ref: String, offset: Int)
 final case class TestDoc(doc_id: String, spans: Seq[TestSpan])
@@ -16,27 +16,19 @@ final case class TestDoc(doc_id: String, spans: Seq[TestSpan])
   * stream runs the batch pipeline's own per-document code, so comparing the
   * two would prove nothing.)
   */
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
   test("streaming output spans == kernel oracle spans (2 micro-batches)") {
     import spark.implicits._
-    implicit val s: SparkSession = spark
 
     val docs = Corpus.docsTable(spark, sfDir).limit(60).as[TestDoc].collect().toSeq
     assert(docs.size == 60)
 
     // offset 0 carries the source document text the corpus is built from
     val expected = docs.flatMap { d =>
-      val raw = Corpus.rawTextLocal(d.doc_id, d.spans.find(_.offset == 0).get.text)
+      val raw = SpecTwins.rawTextLocal(d.doc_id, d.spans.find(_.offset == 0).get.text)
       val filtered = TextKernel.filterChrome(
         TextKernel.chunkText(raw, Corpus.MinChunkChars),
         TextKernel.defaultChromePatterns, Corpus.ChromeMaxLength)

@@ -1,24 +1,18 @@
 package graft.table
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Corpus
 import graft.jobs.ExtractionJob
+import graft.SparkSpec
 
 /** Kill-and-resume at partition granularity (SURVEY.md §7.5 / north_rule):
   * a run that commits only some buckets must resume from the manifest,
   * complete the rest, and never duplicate or lose rows — including when the
   * kill left uncommitted partial data on disk.
   */
-class SnapshotTableSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def pipeline(docs: org.apache.spark.sql.DataFrame) =
