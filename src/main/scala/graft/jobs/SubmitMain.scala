@@ -228,12 +228,13 @@ object SubmitMain {
 
     // dedupe_report.json (main.go:259; report.go:13-31 key set; dropped
     // entries carry DroppedChunk's Go field names — no json tags there)
+    // count_if, not a sum of 0/1: over zero rows a sum is null, a count 0
     val st = table.agg(
       count(lit(1)).as("input"),
-      sum(when(col("kept"), 1L).otherwise(0L)).as("kept"),
-      sum(when(!col("kept"), 1L).otherwise(0L)).as("dropped"),
-      sum(when(col("reason") === "exact_duplicate", 1L).otherwise(0L)).as("exact"),
-      sum(when(col("reason") === "near_duplicate", 1L).otherwise(0L)).as("near")).head
+      count_if(col("kept")).as("kept"),
+      count_if(!col("kept")).as("dropped"),
+      count_if(col("reason") === "exact_duplicate").as("exact"),
+      count_if(col("reason") === "near_duplicate").as("near")).head
     val nImages = Corpus.docsTable(spark, args.sfDir, args.replicate)
       .select(explode(col("spans")).as("s"))
       .filter(col("s.kind") === "media").count()

@@ -1,9 +1,9 @@
 package graft.table
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 import scala.jdk.CollectionConverters._
@@ -11,29 +11,40 @@ import scala.jdk.CollectionConverters._
 /** Iceberg-STYLE snapshot layout on plain Parquet (no Iceberg runtime jar is
   * available in this environment — documented deviation, SURVEY.md §1.2):
   *
-  *   <root>/data/bucket=N/ parquet files      bucketed output data
+  *   <root>/data/v<k>/ parquet files      the data snapshot k committed
   *   <root>/_snapshots/v<k>.json           one manifest per committed run
-  *   <root>/_snapshots/current             pointer to the latest manifest
+  *   <root>/_snapshots/current             hint: the latest manifest's name
   *
+  * A run writes its buckets' rows into `data/v<k>/` with `bucket` as a data
+  * column, one file per write task, and commits by creating `v<k>.json`.
   * The manifest is the only record of a commit: its parent, the cumulative
-  * completed-bucket set, the output schema (DDL and its md5), and per-bucket
-  * lineage (input docs, output rows, wall ms, and the DATA FILES the bucket
-  * committed). There is no separate metrics table: the parquet metrics
-  * directory that older builds appended next to `_snapshots` is ignored.
+  * completed-bucket set, the output schema (DDL and its md5), per-bucket
+  * lineage (input docs, output rows, wall ms) and the DATA FILES the run
+  * wrote, with their byte sizes. It is created without overwrite, so a
+  * second committer of the same id fails instead of replacing it; the
+  * `current` hint only saves probing, and a manifest past it counts.
+  * One writer at a time is assumed: a run deletes `data/v<k>/` before it
+  * writes there, since only a killed attempt can have left files in it.
+  * All table IO goes through the Hadoop `FileSystem` of `root`, the one
+  * Spark writes the data with, so a URI root such as `file:///…` holds the
+  * manifests next to the data, as a plain path does.
   *
   * Semantics matched to Iceberg snapshots at partition granularity:
   * a killed run resumes from the last committed manifest — completed
   * buckets are never recomputed. [[read]] consumes only manifest-listed
   * files, the real Iceberg reader contract — uncommitted/stray files in a
-  * committed bucket dir are invisible on read-back, not silently mixed in.
+  * committed snapshot dir are invisible on read-back, not silently mixed in.
+  * Manifests of older builds, which recorded files per bucket under
+  * `data/bucket=N/` or recorded no files at all, keep reading and resuming.
   *
   * Scale notes: buckets are hash partitions of doc_id (`pmod(xxhash64)`),
   * which salts document PLACEMENT uniformly — the defense against
   * large-document skew the north_rule asks for (a doc's sequential dedup
   * can never be split, so placement is the only knob; AQE handles residual
   * size skew within the run). One run processes ALL missing buckets in ONE
-  * Spark job (`partitionBy(bucket)` write) and launches no other job, so
-  * resume granularity costs no extra jobs.
+  * Spark job (an unpartitioned write that plans no sort) and launches no
+  * other job, so resume granularity costs no extra jobs, and the run's file
+  * count is bounded by its write tasks, not by tasks times buckets.
   */
 object SnapshotTable {
 
@@ -54,56 +65,86 @@ object SnapshotTable {
 
   private val Json = new ObjectMapper()
 
-  private def snapshotsDir(root: String) = Paths.get(root, "_snapshots")
+  private def fileSystem(root: String)(implicit spark: SparkSession): FileSystem =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def snapshotsDir(root: String) = new Path(root, "_snapshots")
+
+  private def manifestPath(root: String, id: Int) = new Path(snapshotsDir(root), s"v$id.json")
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes(UTF_8)).map("%02x".format(_)).mkString
 
-  private def currentSnapshotId(root: String): Int = {
-    val cur = snapshotsDir(root).resolve("current")
-    if (!Files.exists(cur)) 0
-    else Files.readString(cur).trim.stripPrefix("v").stripSuffix(".json").toInt
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
-  private def manifest(root: String, id: Int): JsonNode =
-    Json.readTree(Files.readString(snapshotsDir(root).resolve(s"v$id.json")))
+  private def writeText(fs: FileSystem, p: Path, text: String, overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
+  }
 
-  private def current(root: String): Option[JsonNode] =
-    Some(currentSnapshotId(root)).filter(_ > 0).map(manifest(root, _))
+  /** The `current` hint, then every manifest past it: a run killed between
+    * creating its manifest and moving the hint has still committed.
+    */
+  private def currentSnapshotId(fs: FileSystem, root: String): Int = {
+    val cur = new Path(snapshotsDir(root), "current")
+    var id =
+      if (!fs.exists(cur)) 0
+      else readText(fs, cur).trim.stripPrefix("v").stripSuffix(".json").toInt
+    while (fs.exists(manifestPath(root, id + 1))) id += 1
+    id
+  }
+
+  private def manifest(fs: FileSystem, root: String, id: Int): JsonNode =
+    Json.readTree(readText(fs, manifestPath(root, id)))
+
+  private def current(fs: FileSystem, root: String): Option[JsonNode] =
+    Some(currentSnapshotId(fs, root)).filter(_ > 0).map(manifest(fs, root, _))
 
   private def textField(m: JsonNode, name: String): Option[String] =
     Option(m.get(name)).filter(_.isTextual).map(_.asText)
 
-  /** Read the cumulative completed-bucket set from the current manifest. */
-  def completedBuckets(root: String): Set[Int] =
-    current(root).fold(Set.empty[Int])(
-      _.path("completed").elements().asScala.map(_.asInt).toSet)
+  private def completedIn(m: Option[JsonNode]): Set[Int] =
+    m.fold(Set.empty[Int])(_.path("completed").elements().asScala.map(_.asInt).toSet)
 
-  /** Every committed bucket's lineage with its read paths (relative to
-    * `<root>/data`), walking v1 -> current (ids are sequential by
-    * construction; buckets commit exactly once, so entries never collide).
-    * An entry WITH a `files` list contributes exactly those files (the
-    * Iceberg contract); an entry WITHOUT one — written by a pre-file-level
-    * build — falls back to its whole `bucket=N/` directory (marker: a path
+  /** Read the cumulative completed-bucket set from the current manifest. */
+  def completedBuckets(root: String)(implicit spark: SparkSession): Set[Int] =
+    completedIn(current(fileSystem(root), root))
+
+  /** Every committed bucket's lineage and every committed data path
+    * (relative to `<root>/data`), walking v1 -> current (ids are sequential
+    * by construction; buckets commit exactly once, so entries never
+    * collide). A manifest's top-level `files` list is exactly the files
+    * its run wrote into `v<k>/`. Older manifests list files per bucket
+    * (`bucket=N/<file>`), or — written by a pre-file-level build — none, in
+    * which case the whole `bucket=N/` directory is read (marker: a path
     * ending in "/"), so resuming a legacy table cannot silently lose the
     * legacy buckets' rows.
     */
-  private def committed(root: String): Seq[(BucketLineage, Seq[String])] =
-    (1 to currentSnapshotId(root)).flatMap { id =>
-      manifest(root, id).path("lineage").elements().asScala.map { e =>
-        val b = e.get("bucket").asInt
-        val files = Option(e.get("files")).fold(Seq(s"bucket=$b/"))(
-          _.elements().asScala.map(f => s"bucket=$b/${f.asText}").toSeq)
-        BucketLineage(b, e.get("n_docs").asLong, e.get("n_rows").asLong,
-          e.get("wall_ms").asLong, id) -> files
+  private def committed(fs: FileSystem, root: String): (Seq[BucketLineage], Seq[String]) = {
+    val perSnapshot = (1 to currentSnapshotId(fs, root)).map { id =>
+      val m = manifest(fs, root, id)
+      val entries = m.path("lineage").elements().asScala.toSeq
+      val lineage = entries.map(e => BucketLineage(e.get("bucket").asInt,
+        e.get("n_docs").asLong, e.get("n_rows").asLong, e.get("wall_ms").asLong, id))
+      val files = Option(m.get("files")) match {
+        case Some(listed) => listed.elements().asScala.map(_.get("path").asText).toSeq
+        case None => entries.flatMap { e =>
+          val b = e.get("bucket").asInt
+          Option(e.get("files")).fold(Seq(s"bucket=$b/"))(
+            _.elements().asScala.map(f => s"bucket=$b/${f.asText}").toSeq)
+        }
       }
+      (lineage, files)
     }
+    (perSnapshot.flatMap(_._1), perSnapshot.flatMap(_._2))
+  }
 
-  private def commitSnapshot(root: String, id: Int, completed: Set[Int], ddl: String,
-      lineage: Seq[BucketLineage], bucketFiles: Map[Int, Seq[String]]): Unit = {
-    val dir = snapshotsDir(root)
-    Files.createDirectories(dir)
+  private def commitSnapshot(fs: FileSystem, root: String, id: Int, completed: Set[Int],
+      ddl: String, lineage: Seq[BucketLineage], files: Seq[(String, Long)]): Unit = {
     val m = Json.createObjectNode()
       .put("snapshot_id", id).put("parent_id", id - 1)
       .put("timestamp", java.time.Instant.now().toString)
@@ -112,23 +153,28 @@ object SnapshotTable {
     completed.toSeq.sorted.foreach(b => done.add(b))
     val entries = m.putArray("lineage")
     lineage.foreach { l =>
-      val files = entries.addObject().put("bucket", l.bucket).put("n_docs", l.n_docs)
-        .put("n_rows", l.n_rows).put("wall_ms", l.wall_ms).putArray("files")
-      bucketFiles(l.bucket).foreach(f => files.add(f))
+      entries.addObject().put("bucket", l.bucket).put("n_docs", l.n_docs)
+        .put("n_rows", l.n_rows).put("wall_ms", l.wall_ms)
     }
-    Files.writeString(dir.resolve(s"v$id.json"), Json.writeValueAsString(m), UTF_8)
-    // atomic-enough pointer flip (single writer; real Iceberg uses a catalog CAS)
-    val tmp = dir.resolve("current.tmp")
-    Files.writeString(tmp, s"v$id.json", UTF_8)
-    Files.move(tmp, dir.resolve("current"),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    val listed = m.putArray("files")
+    files.foreach { case (path, size) => listed.addObject().put("path", path).put("size", size) }
+    // the commit: fails if another run already committed this id
+    writeText(fs, manifestPath(root, id), Json.writeValueAsString(m), overwrite = false)
+    // move the hint; while it is missing, readers probe from v1
+    val dir = snapshotsDir(root)
+    val tmp = new Path(dir, "current.tmp")
+    writeText(fs, tmp, s"v$id.json", overwrite = true)
+    fs.delete(new Path(dir, "current"), false)
+    if (!fs.rename(tmp, new Path(dir, "current")))
+      throw new java.io.IOException(s"could not move $tmp to current")
   }
 
   /** Resumable bucketed materialization of `pipeline(docs)`:
     * processes only buckets missing from the current snapshot (at most
     * `maxBucketsPerRun` of them, which is how a kill is simulated in tests),
-    * appends their data and a new manifest carrying their lineage. Returns
-    * the set of buckets completed by THIS run.
+    * writes their rows into a new snapshot dir and commits a new manifest
+    * carrying their lineage and files. Returns the set of buckets completed
+    * by THIS run.
     */
   def runResumable(
       docs: DataFrame,
@@ -136,7 +182,10 @@ object SnapshotTable {
       root: String,
       nBuckets: Int,
       maxBucketsPerRun: Int = Int.MaxValue)(implicit spark: SparkSession): Set[Int] = {
-    val done = completedBuckets(root)
+    val fs = fileSystem(root)
+    val parent = currentSnapshotId(fs, root)
+    val head = Option.when(parent > 0)(manifest(fs, root, parent))
+    val done = completedIn(head)
     val missing = (0 until nBuckets).filterNot(done).take(maxBucketsPerRun)
     if (missing.isEmpty) return Set.empty
 
@@ -151,58 +200,39 @@ object SnapshotTable {
     // schemas would commit fine and only break at sink-derivation time
     val ddl = out.schema.toDDL
     val schemaMd5 = md5Hex(ddl)
-    current(root).flatMap(textField(_, "schema_md5")).foreach { prev =>
+    head.flatMap(textField(_, "schema_md5")).foreach { prev =>
       require(prev == schemaMd5,
         s"snapshot table at $root was committed with a different pipeline " +
           s"output schema (manifest schema_md5=$prev, current=$schemaMd5); " +
           "refusing to resume — use a fresh --out dir or rerun the old build")
     }
 
-    // Clean uncommitted partials: a kill mid-write leaves bucket dirs with no
-    // manifest entry; Iceberg readers only see manifest-listed files — our
-    // equivalent is deleting un-snapshotted bucket dirs before reprocessing,
-    // which makes resume idempotent.
-    for (b <- missing) {
-      val dir = Paths.get(root, "data", s"bucket=$b")
-      if (Files.exists(dir)) {
-        Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      }
-    }
+    // an existing v<k>/ is a killed attempt's uncommitted output: no
+    // manifest lists it, so deleting it makes the retry idempotent
+    val id = parent + 1
+    val dataDir = new Path(root, s"data/v$id")
+    fs.delete(dataDir, true)
 
     val acc = spark.sparkContext.collectionAccumulator[(Int, Long, Long, Long)](LineageAccumulator)
-    countedByBucket(out, acc)
-      .write.mode(SaveMode.Append).partitionBy("bucket").parquet(s"$root/data")
+    countedByBucket(out, acc).write.parquet(dataDir.toString)
 
     // (nanos, rows, docs) per bucket, summed over write tasks; a bucket with
-    // zero output rows has no entry (and no dir from partitionBy)
+    // zero output rows has no entry
     val counts = acc.value.asScala.groupMapReduce(_._1)(c => (c._2, c._3, c._4)) {
       case ((n1, r1, d1), (n2, r2, d2)) => (n1 + n2, r1 + r2, d1 + d2)
     }
-    val id = currentSnapshotId(root) + 1
     val lineage = missing.map { b =>
       val (nanos, rows, docsN) = counts.getOrElse(b, (0L, 0L, 0L))
       BucketLineage(b, docsN, rows, nanos / 1000000L, id)
     }
-    // file-level lineage: record exactly the data files this run produced
-    // per bucket, so readers see only manifest-listed files (Iceberg's
-    // contract) — a stray/partial file later dropped into a committed
-    // bucket dir is invisible on read-back
-    val bucketFiles = missing.map { b =>
-      val d = Paths.get(root, "data", s"bucket=$b")
-      val fs =
-        if (!Files.exists(d)) Seq.empty[String]
-        else {
-          val stream = Files.list(d)
-          try stream.iterator().asScala
-            .filter(Files.isRegularFile(_))
-            .map(_.getFileName.toString)
-            .filterNot(n => n.startsWith(".") || n.startsWith("_"))
-            .toSeq.sorted
-          finally stream.close()
-        }
-      b -> fs
-    }.toMap
-    commitSnapshot(root, id, done ++ missing, ddl, lineage, bucketFiles)
+    // the one listing: exactly the data files this run wrote, so readers see
+    // only manifest-listed files (Iceberg's contract)
+    val files = fs.listStatus(dataDir).toSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
+        !s.getPath.getName.startsWith("_"))
+      .map(s => s"v$id/${s.getPath.getName}" -> s.getLen)
+      .sortBy(_._1)
+    commitSnapshot(fs, root, id, done ++ missing, ddl, lineage, files)
     missing.toSet
   }
 
@@ -216,8 +246,8 @@ object SnapshotTable {
     * (bucket, nanos, rows, docs) into the accumulator at partition end.
     * It runs in the write's result stage: no extra exchange, no pipeline
     * re-execution, no re-scan; the costs are the Row encode/decode at this
-    * single point and a set of the task's doc_ids (one entry per document,
-    * while the write's sort on `bucket` already buffers every row).
+    * single point and a set of the task's doc_ids (one entry per document;
+    * the unpartitioned write itself buffers no rows).
     *
     * Counts land exactly once per partition: the DAGScheduler merges a
     * result task's accumulator updates only while its output is not yet
@@ -264,26 +294,32 @@ object SnapshotTable {
 
   /** Read the materialized table back: ONLY the files the manifest chain
     * lists (the Iceberg reader contract) — a stray or partial file sitting
-    * in a committed bucket dir is invisible here, exactly as it would be to
-    * a real Iceberg reader. `basePath` keeps the `bucket` partition column.
-    * The schema comes from the current manifest, so no read infers it, and
-    * a table whose committed buckets are all empty reads back as an empty
-    * frame of that schema. A manifest from a build that did not record the
-    * schema falls back to inference.
+    * in a committed snapshot dir is invisible here, exactly as it would be
+    * to a real Iceberg reader, and no directory is scanned for files. Files
+    * in older builds' `bucket=N/` dirs are read with `basePath`, which turns
+    * the dir name back into the `bucket` column, and are unioned by name
+    * with the rest. The schema comes from the current manifest, so no read infers
+    * it, and a table whose committed buckets are all empty reads back as an
+    * empty frame of that schema. A manifest from a build that did not
+    * record the schema falls back to inference.
     */
   def read(root: String)(implicit spark: SparkSession): DataFrame = {
-    val files = committed(root).flatMap(_._2).map(f => s"$root/data/${f.stripSuffix("/")}")
-    val reader = spark.read.option("basePath", s"$root/data")
-    current(root).flatMap(textField(_, "schema")) match {
-      case Some(ddl) => reader.schema(ddl).parquet(files: _*)
-      case None if files.isEmpty => spark.read.parquet(s"$root/data") // no/empty snapshot: surface the scan error
-      case None => reader.parquet(files: _*)
-    }
+    val fs = fileSystem(root)
+    val data = new Path(root, "data").toString
+    val schema = current(fs, root).flatMap(textField(_, "schema"))
+    val (legacy, flat) = committed(fs, root)._2.partition(_.startsWith("bucket="))
+    def scan(files: Seq[String], reader: DataFrameReader) =
+      schema.fold(reader)(reader.schema).parquet(files.map(f => s"$data/${f.stripSuffix("/")}"): _*)
+    val scans = Seq(flat -> spark.read, legacy -> spark.read.option("basePath", data))
+      .collect { case (files, reader) if files.nonEmpty => scan(files, reader) }
+    if (scans.nonEmpty) scans.reduce(_ unionByName _)
+    else if (schema.isDefined) scan(Nil, spark.read)
+    else spark.read.parquet(data) // no/empty snapshot: surface the scan error
   }
 
   /** Per-bucket lineage of every commit, read from the manifest chain. */
   def metrics(root: String)(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    committed(root).map(_._1).toDF()
+    committed(fileSystem(root), root)._1.toDF()
   }
 }

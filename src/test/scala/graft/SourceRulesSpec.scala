@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * reads the process environment (only the mains — Bench, BenchExtra,
   * tools, jobs — may), an intermediate is materialized one way, through
   * `Bridge.reused`, concurrent Spark jobs are run one way, through
-  * `Bridge.concurrently`, and Markdown is rendered one way, by the kernel.
+  * `Bridge.concurrently`, Markdown is rendered one way, by the kernel, and
+  * the snapshot table does its IO through the Hadoop `FileSystem`.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -65,6 +66,19 @@ class SourceRulesSpec extends AnyFunSuite {
       if rule.findFirstIn(line).isDefined
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("Markdown layout outside the kernel:\n", "\n", ""))
+  }
+
+  test("table IO goes through the Hadoop FileSystem and the table write has no partitionBy") {
+    // java.nio.file cannot reach a file:, hdfs: or s3a: root; a per-bucket
+    // partitionBy sorts every write task's rows and writes a file per bucket
+    val rule = """java\.nio\.file|partitionBy""".r
+    val hits = for {
+      f <- scalaFiles(Paths.get("src/main/scala/graft/table"))
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if rule.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      hits.mkString("table IO outside FileSystem or a partitioned write:\n", "\n", ""))
   }
 
   private def scalaFiles(dir: Path): Seq[Path] = {

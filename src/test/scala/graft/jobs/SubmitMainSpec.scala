@@ -43,8 +43,10 @@ class SubmitMainSpec extends AnyFunSuite with SparkSpec {
   /** The sf0.001 corpus committed once, with a title and chunk ids so the
     * Markdown options reach the sink, and the report on.
     */
-  private lazy val committed: (SubmitMain.Args, DataFrame) = {
-    val out = Files.createTempDirectory("subsinks").toString
+  private lazy val committed: (SubmitMain.Args, DataFrame) =
+    commit(Files.createTempDirectory("subsinks").toString)
+
+  private def commit(out: String): (SubmitMain.Args, DataFrame) = {
     val cfg = ExtractionJob.PipelineConfig(markdownTitle = "Pinned", includeChunkIds = true)
     val args = SubmitMain.Args(sfDir = sfDir, out = out, buckets = 4, pipeline = cfg,
       emitReport = true)
@@ -64,6 +66,52 @@ class SubmitMainSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("every sink equals its per-row twin on the sf0.001 corpus") {
+    sinkParity(committed)
+  }
+
+  test("every sink equals its per-row twin with a file: URI root") {
+    sinkParity(commit(Files.createTempDirectory("subsinksuri").toUri.toString.stripSuffix("/")))
+  }
+
+  test("SubmitMain's default buckets commit at most 8 files, and read lists no files in a job") {
+    val out = Files.createTempDirectory("subfiles").toString
+    val args = SubmitMain.Args(sfDir = sfDir, out = out)
+    assert(args.buckets == 32)
+    SnapshotTable.runResumable(Corpus.docsTable(spark, sfDir),
+      d => ExtractionJob.dedupWith(d, args.pipeline), out, args.buckets)
+    val files = Files.walk(Paths.get(out, "data")).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet"))
+    assert(files > 0 && files <= 8, s"one run committed $files data files")
+
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[String]()
+    @volatile var marker = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("read-table") =>
+            jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+          case Some("read-marker") => marker = true
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("read-table", "read")
+      SnapshotTable.read(out)
+      sc.setJobGroup("read-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!marker && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marker, "listener never saw the marker job")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.isEmpty, s"read launched jobs: ${jobs.asScala.mkString("; ")}")
+  }
+
+  private def sinkParity(committed: (SubmitMain.Args, DataFrame)): Unit = {
     val (args, docs) = committed
     val cfg = args.pipeline
     val out = args.out

@@ -1,6 +1,7 @@
 package graft.table
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Corpus
@@ -19,7 +20,27 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
     ExtractionJob.outputSpans(docs)(spark)
 
   test("kill-and-resume: partial run + resume == single full run, no dup rows") {
-    val root = Files.createTempDirectory("snap").toString
+    killAndResume(Files.createTempDirectory("snap").toString)
+  }
+
+  test("kill-and-resume with a file: URI root keeps data and manifests under it") {
+    val dir = Files.createTempDirectory("snapuri")
+    killAndResume(dir.toUri.toString.stripSuffix("/"))
+    // the manifests list the data, and went where the data went
+    assert(Files.exists(dir.resolve("_snapshots/v2.json")))
+    assert(!Files.exists(java.nio.file.Paths.get("file:")),
+      "manifests went to a relative file: dir")
+  }
+
+  /** Rewrite a table file the way another program would: its Hadoop
+    * checksum sidecar no longer matches, so it goes too.
+    */
+  private def editOutOfBand(p: java.nio.file.Path, text: String): Unit = {
+    Files.writeString(p, text)
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+  }
+
+  private def killAndResume(root: String): Unit = {
     val docs = Corpus.docsTable(spark, sfDir)
     val nBuckets = 8
 
@@ -59,6 +80,54 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
       .map(r => r.getInt(0) -> (r.getLong(1) -> r.getLong(2))).toMap
     assert(lineage.size == nBuckets)
     assert(lineage.filter(_._2._1 > 0L) == rescan)
+  }
+
+  test("the snapshot write plans no sort and commits at most one file per write task") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = Files.createTempDirectory("snapsort").toString
+    val docs = Corpus.docsTable(spark, sfDir)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val writeTasks = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var marker = false
+    val queries = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand])) writes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val stages = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.accumulables.values
+            .exists(_.name.contains(SnapshotTable.LineageAccumulator)))
+          writeTasks.addAndGet(e.stageInfo.numTasks)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "sort-marker"))
+          marker = true
+    }
+    spark.listenerManager.register(queries)
+    spark.sparkContext.addSparkListener(stages)
+    try {
+      SnapshotTable.runResumable(docs, pipeline, root, 8)
+      spark.sparkContext.setJobGroup("sort-marker", "marker")
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!(marker && writes.size == 1) && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.listenerManager.unregister(queries)
+      spark.sparkContext.removeSparkListener(stages)
+    }
+    assert(writes.size == 1, s"expected the one data write, saw ${writes.size}")
+    val plan = writes.peek().executedPlan
+    val sorts = new AdaptiveSparkPlanHelper {}.collect(plan) { case s: SortExec => s }
+    assert(sorts.isEmpty, s"the data write sorts:\n$plan")
+    val files = Files.list(java.nio.file.Paths.get(root, "data", "v1")).iterator()
+      .asScala.count(_.getFileName.toString.endsWith(".parquet"))
+    assert(files > 0 && files <= writeTasks.get,
+      s"$files data files from ${writeTasks.get} write tasks")
   }
 
   test("runResumable launches no Spark job after its data-write job") {
@@ -125,14 +194,23 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
     SnapshotTable.runResumable(Corpus.docsTable(spark, sfDir).limit(20), dedup, full, 4)
     assert(got.schema == SnapshotTable.read(full).schema)
 
-    SubmitMain.writeSinks(SubmitMain.Args(out = root, pipeline = cfg, emitReport = true))
+    val args = SubmitMain.Args(sfDir = sfDir, out = root, pipeline = cfg, emitReport = true)
+    SubmitMain.writeSinks(args)
     assert(spark.read.parquet(s"$root/output_spans").count() == 0L)
+
+    // the single-file report carries zero counts, not a null-sum failure
+    SubmitMain.writeArtifacts(args)
+    val report = Files.readString(java.nio.file.Paths.get(root, "artifacts", "dedupe_report.json"))
+    for (k <- Seq("input_chunks", "kept_chunks", "dropped_chunks", "exact_duplicates",
+        "near_duplicates"))
+      assert(report.contains(s""""$k": 0,"""), s"$k is not 0 in\n$report")
+    assert(report.contains("\"dropped\": [],"))
   }
 
   test("zero-row buckets commit cleanly (no dir from partitionBy, no crash, 0-count lineage)") {
     val root = Files.createTempDirectory("snap3").toString
-    // 3 docs hashed into 16 buckets -> most buckets get NO output rows and
-    // therefore NO bucket dir; the lineage re-scan must not read them
+    // 3 docs hashed into 16 buckets -> most buckets get NO output rows,
+    // and still commit with their lineage
     val docs = Corpus.docsTable(spark, sfDir).limit(3)
     val nBuckets = 16
     val ran = SnapshotTable.runResumable(docs, pipeline, root, nBuckets)
@@ -177,17 +255,15 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
     SnapshotTable.runResumable(docs, pipeline, root, 4)
     val before = SnapshotTable.read(root).count()
     // inject an orphan AFTER commit: duplicate a committed part file under a
-    // new name inside its own bucket dir (same schema, so a wholesale dir
+    // new name inside its own snapshot dir (same schema, so a wholesale dir
     // scan would silently double-count it)
-    val dataDir = new java.io.File(s"$root/data")
-    val bucketDir = dataDir.listFiles().filter(_.isDirectory)
-      .find(_.listFiles().exists(f => f.isFile && !f.getName.startsWith("."))).get
-    val part = bucketDir.listFiles().filter(f => f.isFile && !f.getName.startsWith(".")).head
+    val bucketDir = new java.io.File(s"$root/data/v1")
+    val part = bucketDir.listFiles().filter(_.getName.endsWith(".parquet")).maxBy(_.length)
     Files.copy(part.toPath, bucketDir.toPath.resolve("part-orphan-deadbeef.snappy.parquet"))
     assert(SnapshotTable.read(root).count() == before,
       "manifest-driven read must not see the orphan file")
     // the fidelity gap this closes: a wholesale directory scan DOES see it
-    assert(spark.read.parquet(s"$root/data").count() > before)
+    assert(spark.read.parquet(bucketDir.toString).count() > before)
   }
 
   test("uncommitted partial data is discarded on resume (no duplicates)") {
@@ -196,9 +272,9 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
     val nBuckets = 4
 
     SnapshotTable.runResumable(docs, pipeline, root, nBuckets, maxBucketsPerRun = 2)
-    // simulate a kill AFTER data write but BEFORE manifest commit for bucket 2:
-    // write garbage partial data into an uncommitted bucket dir
-    val partial = new java.io.File(s"$root/data/bucket=2")
+    // simulate a kill AFTER data write but BEFORE manifest commit of v2:
+    // write garbage partial data into the uncommitted snapshot dir
+    val partial = new java.io.File(s"$root/data/v2")
     partial.mkdirs()
     pipeline(docs.limit(5)).drop("doc_id").withColumn("doc_id", lit("zzz"))
       .write.mode("append").parquet(partial.toString)
@@ -212,30 +288,85 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("mixed manifest chain: buckets committed by a pre-file-level build stay visible") {
+    import com.fasterxml.jackson.databind.ObjectMapper
     val root = Files.createTempDirectory("snap3").toString
     val docs = Corpus.docsTable(spark, sfDir)
     val nBuckets = 4
+    val bucketOf = pmod(xxhash64(col("doc_id")), lit(nBuckets)).cast("int")
 
-    // v1 commits 2 buckets, then simulate a LEGACY manifest by stripping
-    // its per-bucket "files" lists (the pre-file-level format)
-    SnapshotTable.runResumable(docs, pipeline, root, nBuckets, maxBucketsPerRun = 2)
-    val v1 = java.nio.file.Paths.get(s"$root/_snapshots/v1.json")
-    val legacy = Files.readString(v1).replaceAll(""","files":\[[^\]]*\]""", "")
-    assert(!legacy.contains("\"files\""), "fixture must strip all files lists")
-    Files.writeString(v1, legacy)
+    // the layout of older builds: rows under data/bucket=N/ via partitionBy,
+    // and a manifest whose lineage entries list their bucket's files (v2) or
+    // no files at all (v1, the pre-file-level format)
+    val json = new ObjectMapper()
+    def legacyCommit(id: Int, bucket: Int, listFiles: Boolean): Unit = {
+      val out = pipeline(docs.filter(bucketOf === bucket)).withColumn("bucket", bucketOf)
+      out.write.mode("append").partitionBy("bucket").parquet(s"$root/data")
+      val ddl = out.schema.toDDL
+      val md5 = java.security.MessageDigest.getInstance("MD5")
+        .digest(ddl.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      val m = json.createObjectNode().put("snapshot_id", id).put("parent_id", id - 1)
+        .put("timestamp", "2024-01-01T00:00:00Z").put("schema_md5", md5).put("schema", ddl)
+      val done = m.putArray("completed")
+      (0 to bucket).foreach(b => done.add(b))
+      val e = m.putArray("lineage").addObject().put("bucket", bucket)
+        .put("n_docs", 0L).put("n_rows", out.count()).put("wall_ms", 0L)
+      if (listFiles) {
+        val files = e.putArray("files")
+        new java.io.File(s"$root/data/bucket=$bucket").list().sorted
+          .filterNot(n => n.startsWith(".") || n.startsWith("_")).foreach(n => files.add(n))
+      }
+      val snaps = java.nio.file.Paths.get(root, "_snapshots")
+      Files.createDirectories(snaps)
+      Files.writeString(snaps.resolve(s"v$id.json"), json.writeValueAsString(m))
+      Files.writeString(snaps.resolve("current"), s"v$id.json")
+    }
+    legacyCommit(1, 0, listFiles = false)
+    legacyCommit(2, 1, listFiles = true)
+    assert(SnapshotTable.completedBuckets(root) == Set(0, 1))
 
-    // v2 commits the remaining buckets under the NEW format
-    SnapshotTable.runResumable(docs, pipeline, root, nBuckets)
+    // v3 commits the remaining buckets under the NEW format
+    assert(SnapshotTable.runResumable(docs, pipeline, root, nBuckets) == Set(2, 3))
 
     // read-back must include the legacy buckets (per-bucket dir fallback),
-    // not just v2's file-listed ones
-    val got = SnapshotTable.read(root).drop("bucket")
+    // not just v3's file-listed ones
+    val table = SnapshotTable.read(root)
+    assert(table.columns.last == "bucket")
+    assert(table.groupBy("bucket").count().collect().map(_.getInt(0)).toSet == Set(0, 1, 2, 3))
+    val got = table.drop("bucket")
       .collect().map(_.toSeq).sortBy(_.toString)
     val expected = pipeline(docs)
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(got.length == expected.length,
       s"legacy-committed buckets lost on read-back: ${got.length} vs ${expected.length}")
     assert(got.toSeq == expected.toSeq)
+  }
+
+  test("a manifest past a stale current hint is committed") {
+    val root = Files.createTempDirectory("snap8").toString
+    val docs = Corpus.docsTable(spark, sfDir)
+    SnapshotTable.runResumable(docs, pipeline, root, 4, maxBucketsPerRun = 2)
+    SnapshotTable.runResumable(docs, pipeline, root, 4)
+    // a kill between creating v2.json and moving the hint leaves it at v1
+    editOutOfBand(java.nio.file.Paths.get(root, "_snapshots", "current"), "v1.json")
+    assert(SnapshotTable.completedBuckets(root) == (0 until 4).toSet)
+    assert(SnapshotTable.runResumable(docs, pipeline, root, 4).isEmpty)
+    assert(SnapshotTable.read(root).count() == pipeline(docs).count())
+  }
+
+  test("a second committer of the same snapshot id fails and leaves the first's manifest") {
+    val root = Files.createTempDirectory("snap9").toString
+    val docs = Corpus.docsTable(spark, sfDir)
+    SnapshotTable.runResumable(docs, pipeline, root, 4, maxBucketsPerRun = 2)
+    val v2 = java.nio.file.Paths.get(root, "_snapshots", "v2.json")
+    // another run commits v2 while this one is planning its write
+    val racing = (d: org.apache.spark.sql.DataFrame) => {
+      Files.writeString(v2, "{\"snapshot_id\":2}")
+      pipeline(d)
+    }
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      SnapshotTable.runResumable(docs, racing, root, 4)
+    }
+    assert(Files.readString(v2) == "{\"snapshot_id\":2}")
   }
 
   test("a manifest from a build that recorded no schema reads back and resumes") {
@@ -248,7 +379,7 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
     val json = new ObjectMapper()
     val m = json.readTree(Files.readString(v1)).asInstanceOf[ObjectNode]
     assert(m.remove("schema") != null, "fixture must drop the schema field")
-    Files.writeString(v1, json.writeValueAsString(m))
+    editOutOfBand(v1, json.writeValueAsString(m))
 
     // read-back falls back to inference; resume keeps the schema guard
     assert(SnapshotTable.read(root).count() ==
