@@ -2,7 +2,7 @@ package graft.table
 
 import java.nio.charset.StandardCharsets.UTF_8
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameReader, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
@@ -11,20 +11,24 @@ import scala.jdk.CollectionConverters._
 /** Iceberg-STYLE snapshot layout on plain Parquet (no Iceberg runtime jar is
   * available in this environment — documented deviation, SURVEY.md §1.2):
   *
-  *   <root>/data/v<k>/ parquet files      the data snapshot k committed
-  *   <root>/_snapshots/v<k>.json           one manifest per committed run
-  *   <root>/_snapshots/current             hint: the latest manifest's name
+  *   <root>/data/v<k>-<uuid>/ parquet files  one attempt at snapshot k
+  *   <root>/_snapshots/v<k>.json              one manifest per committed run
   *
-  * A run writes its buckets' rows into `data/v<k>/` with `bucket` as a data
-  * column, one file per write task, and commits by creating `v<k>.json`.
-  * The manifest is the only record of a commit: its parent, the cumulative
+  * A run writes its buckets' rows into a dir of its own, `data/v<k>-<uuid>/`,
+  * with `bucket` as a data column, one file per write task, and commits by
+  * renaming a fully written temporary manifest to `v<k>.json`. The
+  * manifest is the only record of a commit: its parent, the cumulative
   * completed-bucket set, the output schema (DDL and its md5), per-bucket
   * lineage (input docs, output rows, wall ms) and the DATA FILES the run
-  * wrote, with their byte sizes. It is created without overwrite, so a
-  * second committer of the same id fails instead of replacing it; the
-  * `current` hint only saves probing, and a manifest past it counts.
-  * One writer at a time is assumed: a run deletes `data/v<k>/` before it
-  * writes there, since only a killed attempt can have left files in it.
+  * wrote, with their byte sizes. The head is the last of v1, v2, … that
+  * exists; a killed manifest write leaves only its temporary file, never a
+  * partial `v<k>.json`. The rename fails if `v<k>.json` exists, so of two
+  * runs committing the same id the second fails and deletes its own dir;
+  * the first's files are never touched, since no attempt writes into
+  * another's dir. The rename is atomic on HDFS; a local file system checks
+  * and then renames, so there two commits in the same instant can both
+  * pass the check. After its commit a run deletes the other `v<k>-*` dirs
+  * (killed attempts at the same id), which no manifest can list any more.
   * All table IO goes through the Hadoop `FileSystem` of `root`, the one
   * Spark writes the data with, so a URI root such as `file:///…` holds the
   * manifests next to the data, as a plain path does.
@@ -34,8 +38,9 @@ import scala.jdk.CollectionConverters._
   * buckets are never recomputed. [[read]] consumes only manifest-listed
   * files, the real Iceberg reader contract — uncommitted/stray files in a
   * committed snapshot dir are invisible on read-back, not silently mixed in.
-  * Manifests of older builds, which recorded files per bucket under
-  * `data/bucket=N/` or recorded no files at all, keep reading and resuming.
+  * Tables of older builds keep reading and resuming: their manifests list
+  * files per bucket under `data/bucket=N/`, or none at all, and their
+  * `_snapshots/current` names the head (see [[headId]]).
   *
   * Scale notes: buckets are hash partitions of doc_id (`pmod(xxhash64)`),
   * which salts document PLACEMENT uniformly — the defense against
@@ -86,23 +91,26 @@ object SnapshotTable {
     try out.write(text.getBytes(UTF_8)) finally out.close()
   }
 
-  /** The `current` hint, then every manifest past it: a run killed between
-    * creating its manifest and moving the hint has still committed.
+  /** The head snapshot id: the last of v1, v2, … that exists. Older builds
+    * wrote `v<k>.json` in place and then moved `_snapshots/current` to it,
+    * so on their tables `current` names the head and a manifest past it is
+    * a killed run's partial write; the first commit of this build drops
+    * both (see [[commitSnapshot]]).
     */
-  private def currentSnapshotId(fs: FileSystem, root: String): Int = {
-    val cur = new Path(snapshotsDir(root), "current")
-    var id =
-      if (!fs.exists(cur)) 0
-      else readText(fs, cur).trim.stripPrefix("v").stripSuffix(".json").toInt
-    while (fs.exists(manifestPath(root, id + 1))) id += 1
-    id
+  private def headId(fs: FileSystem, root: String): Int = {
+    val legacy = legacyHead(root)
+    if (fs.exists(legacy))
+      readText(fs, legacy).trim.stripPrefix("v").stripSuffix(".json").toInt
+    else Iterator.from(1).takeWhile(id => fs.exists(manifestPath(root, id))).size
   }
+
+  private def legacyHead(root: String) = new Path(snapshotsDir(root), "current")
 
   private def manifest(fs: FileSystem, root: String, id: Int): JsonNode =
     Json.readTree(readText(fs, manifestPath(root, id)))
 
   private def current(fs: FileSystem, root: String): Option[JsonNode] =
-    Some(currentSnapshotId(fs, root)).filter(_ > 0).map(manifest(fs, root, _))
+    Some(headId(fs, root)).filter(_ > 0).map(manifest(fs, root, _))
 
   private def textField(m: JsonNode, name: String): Option[String] =
     Option(m.get(name)).filter(_.isTextual).map(_.asText)
@@ -115,17 +123,17 @@ object SnapshotTable {
     completedIn(current(fileSystem(root), root))
 
   /** Every committed bucket's lineage and every committed data path
-    * (relative to `<root>/data`), walking v1 -> current (ids are sequential
+    * (relative to `<root>/data`), walking v1 -> head (ids are sequential
     * by construction; buckets commit exactly once, so entries never
     * collide). A manifest's top-level `files` list is exactly the files
-    * its run wrote into `v<k>/`. Older manifests list files per bucket
+    * its run wrote into `v<k>-<uuid>/`. Older manifests list files per bucket
     * (`bucket=N/<file>`), or — written by a pre-file-level build — none, in
     * which case the whole `bucket=N/` directory is read (marker: a path
     * ending in "/"), so resuming a legacy table cannot silently lose the
     * legacy buckets' rows.
     */
   private def committed(fs: FileSystem, root: String): (Seq[BucketLineage], Seq[String]) = {
-    val perSnapshot = (1 to currentSnapshotId(fs, root)).map { id =>
+    val perSnapshot = (1 to headId(fs, root)).map { id =>
       val m = manifest(fs, root, id)
       val entries = m.path("lineage").elements().asScala.toSeq
       val lineage = entries.map(e => BucketLineage(e.get("bucket").asInt,
@@ -143,8 +151,15 @@ object SnapshotTable {
     (perSnapshot.flatMap(_._1), perSnapshot.flatMap(_._2))
   }
 
-  private def commitSnapshot(fs: FileSystem, root: String, id: Int, completed: Set[Int],
-      ddl: String, lineage: Seq[BucketLineage], files: Seq[(String, Long)]): Unit = {
+  /** Commit the rows a run wrote into `attempt`: write the manifest of
+    * snapshot `id` under a temporary name and rename it to `v<id>.json`.
+    * If that exists, another run committed `id` first: the temporary
+    * manifest and `attempt` are deleted, `v<id>.json` is left as it was,
+    * and [[FileAlreadyExistsException]] is thrown.
+    */
+  private def commitSnapshot(fs: FileSystem, root: String, id: Int, attempt: Path,
+      completed: Set[Int], ddl: String, lineage: Seq[BucketLineage],
+      files: Seq[(String, Long)]): Unit = {
     val m = Json.createObjectNode()
       .put("snapshot_id", id).put("parent_id", id - 1)
       .put("timestamp", java.time.Instant.now().toString)
@@ -158,21 +173,35 @@ object SnapshotTable {
     }
     val listed = m.putArray("files")
     files.foreach { case (path, size) => listed.addObject().put("path", path).put("size", size) }
-    // the commit: fails if another run already committed this id
-    writeText(fs, manifestPath(root, id), Json.writeValueAsString(m), overwrite = false)
-    // move the hint; while it is missing, readers probe from v1
-    val dir = snapshotsDir(root)
-    val tmp = new Path(dir, "current.tmp")
-    writeText(fs, tmp, s"v$id.json", overwrite = true)
-    fs.delete(new Path(dir, "current"), false)
-    if (!fs.rename(tmp, new Path(dir, "current")))
-      throw new java.io.IOException(s"could not move $tmp to current")
+    val target = manifestPath(root, id)
+    val tmp = new Path(snapshotsDir(root), s".v$id.json.${java.util.UUID.randomUUID()}")
+    writeText(fs, tmp, Json.writeValueAsString(m), overwrite = false)
+    // an older build's table: drop its partial manifest past `current`,
+    // then `current`, so the head is found by probing from here on
+    val legacy = legacyHead(root)
+    if (fs.exists(legacy)) {
+      fs.delete(target, false)
+      fs.delete(legacy, false)
+    }
+    // the commit: the manifest appears whole, or not at all
+    try FileContext.getFileContext(fs.getUri, fs.getConf)
+      .rename(fs.makeQualified(tmp), fs.makeQualified(target), Options.Rename.NONE)
+    catch {
+      case e: FileAlreadyExistsException =>
+        fs.delete(tmp, false)
+        fs.delete(attempt, true)
+        throw e
+    }
+    // v<id> is taken, so no manifest can list another attempt's dir at id:
+    // those are killed attempts' files
+    fs.globStatus(new Path(root, s"data/v$id-*")).map(_.getPath)
+      .filter(_.getName != attempt.getName).foreach(fs.delete(_, true))
   }
 
   /** Resumable bucketed materialization of `pipeline(docs)`:
     * processes only buckets missing from the current snapshot (at most
     * `maxBucketsPerRun` of them, which is how a kill is simulated in tests),
-    * writes their rows into a new snapshot dir and commits a new manifest
+    * writes their rows into a dir of this attempt and commits a new manifest
     * carrying their lineage and files. Returns the set of buckets completed
     * by THIS run.
     */
@@ -183,7 +212,7 @@ object SnapshotTable {
       nBuckets: Int,
       maxBucketsPerRun: Int = Int.MaxValue)(implicit spark: SparkSession): Set[Int] = {
     val fs = fileSystem(root)
-    val parent = currentSnapshotId(fs, root)
+    val parent = headId(fs, root)
     val head = Option.when(parent > 0)(manifest(fs, root, parent))
     val done = completedIn(head)
     val missing = (0 until nBuckets).filterNot(done).take(maxBucketsPerRun)
@@ -207,11 +236,8 @@ object SnapshotTable {
           "refusing to resume — use a fresh --out dir or rerun the old build")
     }
 
-    // an existing v<k>/ is a killed attempt's uncommitted output: no
-    // manifest lists it, so deleting it makes the retry idempotent
     val id = parent + 1
-    val dataDir = new Path(root, s"data/v$id")
-    fs.delete(dataDir, true)
+    val dataDir = new Path(root, s"data/v$id-${java.util.UUID.randomUUID()}")
 
     val acc = spark.sparkContext.collectionAccumulator[(Int, Long, Long, Long)](LineageAccumulator)
     countedByBucket(out, acc).write.parquet(dataDir.toString)
@@ -230,9 +256,9 @@ object SnapshotTable {
     val files = fs.listStatus(dataDir).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
         !s.getPath.getName.startsWith("_"))
-      .map(s => s"v$id/${s.getPath.getName}" -> s.getLen)
+      .map(s => s"${dataDir.getName}/${s.getPath.getName}" -> s.getLen)
       .sortBy(_._1)
-    commitSnapshot(fs, root, id, done ++ missing, ddl, lineage, files)
+    commitSnapshot(fs, root, id, dataDir, done ++ missing, ddl, lineage, files)
     missing.toSet
   }
 

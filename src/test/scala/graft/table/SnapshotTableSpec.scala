@@ -40,6 +40,18 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
     Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
   }
 
+  /** The one data dir a committed snapshot's run wrote, `data/v<id>-<uuid>`. */
+  private def attemptDir(root: String, id: Int): java.nio.file.Path = {
+    val dirs = Files.newDirectoryStream(java.nio.file.Paths.get(root, "data"), s"v$id-*")
+    try dirs.iterator().asScala.toList match {
+      case Seq(d) => d
+      case ds => fail(s"expected one data dir of snapshot $id, found $ds")
+    } finally dirs.close()
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+
   private def killAndResume(root: String): Unit = {
     val docs = Corpus.docsTable(spark, sfDir)
     val nBuckets = 8
@@ -124,7 +136,7 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
     val plan = writes.peek().executedPlan
     val sorts = new AdaptiveSparkPlanHelper {}.collect(plan) { case s: SortExec => s }
     assert(sorts.isEmpty, s"the data write sorts:\n$plan")
-    val files = Files.list(java.nio.file.Paths.get(root, "data", "v1")).iterator()
+    val files = Files.list(attemptDir(root, 1)).iterator()
       .asScala.count(_.getFileName.toString.endsWith(".parquet"))
     assert(files > 0 && files <= writeTasks.get,
       s"$files data files from ${writeTasks.get} write tasks")
@@ -257,7 +269,7 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
     // inject an orphan AFTER commit: duplicate a committed part file under a
     // new name inside its own snapshot dir (same schema, so a wholesale dir
     // scan would silently double-count it)
-    val bucketDir = new java.io.File(s"$root/data/v1")
+    val bucketDir = attemptDir(root, 1).toFile
     val part = bucketDir.listFiles().filter(_.getName.endsWith(".parquet")).maxBy(_.length)
     Files.copy(part.toPath, bucketDir.toPath.resolve("part-orphan-deadbeef.snappy.parquet"))
     assert(SnapshotTable.read(root).count() == before,
@@ -273,8 +285,8 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
 
     SnapshotTable.runResumable(docs, pipeline, root, nBuckets, maxBucketsPerRun = 2)
     // simulate a kill AFTER data write but BEFORE manifest commit of v2:
-    // write garbage partial data into the uncommitted snapshot dir
-    val partial = new java.io.File(s"$root/data/v2")
+    // write garbage partial data into the killed attempt's own dir
+    val partial = new java.io.File(s"$root/data/v2-killed")
     partial.mkdirs()
     pipeline(docs.limit(5)).drop("doc_id").withColumn("doc_id", lit("zzz"))
       .write.mode("append").parquet(partial.toString)
@@ -285,6 +297,7 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
     val expected = pipeline(docs)
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(got.toSeq == expected.toSeq, "partial uncommitted data must not leak into the table")
+    assert(!partial.exists(), "the commit of v2 deletes the killed attempt's dir")
   }
 
   test("mixed manifest chain: buckets committed by a pre-file-level build stay visible") {
@@ -341,32 +354,66 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
     assert(got.toSeq == expected.toSeq)
   }
 
-  test("a manifest past a stale current hint is committed") {
+  test("a manifest write killed before its rename commits nothing") {
     val root = Files.createTempDirectory("snap8").toString
     val docs = Corpus.docsTable(spark, sfDir)
     SnapshotTable.runResumable(docs, pipeline, root, 4, maxBucketsPerRun = 2)
-    SnapshotTable.runResumable(docs, pipeline, root, 4)
-    // a kill between creating v2.json and moving the hint leaves it at v1
-    editOutOfBand(java.nio.file.Paths.get(root, "_snapshots", "current"), "v1.json")
-    assert(SnapshotTable.completedBuckets(root) == (0 until 4).toSet)
-    assert(SnapshotTable.runResumable(docs, pipeline, root, 4).isEmpty)
-    assert(SnapshotTable.read(root).count() == pipeline(docs).count())
+    // a kill mid-write leaves a truncated temporary manifest, never v2.json
+    val snaps = java.nio.file.Paths.get(root, "_snapshots")
+    val v1 = Files.readString(snaps.resolve("v1.json"))
+    Files.writeString(snaps.resolve(".v2.json.killed"), v1.take(v1.length / 2))
+    assert(SnapshotTable.completedBuckets(root).size == 2)
+    assert(SnapshotTable.runResumable(docs, pipeline, root, 4).size == 2)
+    assert(rowsOf(SnapshotTable.read(root).drop("bucket")) == rowsOf(pipeline(docs)))
   }
 
-  test("a second committer of the same snapshot id fails and leaves the first's manifest") {
+  test("an older build's partial manifest past its current is not committed") {
+    val docs = Corpus.docsTable(spark, sfDir)
+    val expected = rowsOf(pipeline(docs))
+    for ((partial, kind) <- Seq(0 -> "empty", 40 -> "truncated")) {
+      val root = Files.createTempDirectory("snapold").toString
+      SnapshotTable.runResumable(docs, pipeline, root, 4, maxBucketsPerRun = 2)
+      // older builds wrote v<k>.json in place, then moved current to it: a
+      // kill in between leaves current at v1 and a partial v2.json
+      val snaps = java.nio.file.Paths.get(root, "_snapshots")
+      Files.writeString(snaps.resolve("current"), "v1.json")
+      Files.writeString(snaps.resolve("v2.json"),
+        Files.readString(snaps.resolve("v1.json")).take(partial))
+      assert(SnapshotTable.completedBuckets(root).size == 2, kind)
+      assert(SnapshotTable.read(root).count() ==
+        SnapshotTable.metrics(root).agg(sum("n_rows")).head.getLong(0), kind)
+
+      // resume commits v2 over the partial one, and the head is probed after
+      assert(SnapshotTable.runResumable(docs, pipeline, root, 4).size == 2, kind)
+      assert(!Files.exists(snaps.resolve("current")), kind)
+      assert(SnapshotTable.completedBuckets(root) == (0 until 4).toSet, kind)
+      assert(rowsOf(SnapshotTable.read(root).drop("bucket")) == expected, kind)
+      assert(SnapshotTable.runResumable(docs, pipeline, root, 4).isEmpty, kind)
+    }
+  }
+
+  test("a second committer of the same snapshot id fails and leaves the first's commit whole") {
     val root = Files.createTempDirectory("snap9").toString
     val docs = Corpus.docsTable(spark, sfDir)
     SnapshotTable.runResumable(docs, pipeline, root, 4, maxBucketsPerRun = 2)
     val v2 = java.nio.file.Paths.get(root, "_snapshots", "v2.json")
-    // another run commits v2 while this one is planning its write
+    // another run writes and commits v2 after this one read its parent v1
+    var winner = ""
     val racing = (d: org.apache.spark.sql.DataFrame) => {
-      Files.writeString(v2, "{\"snapshot_id\":2}")
+      assert(SnapshotTable.runResumable(docs, pipeline, root, 4) == Set(2, 3))
+      winner = Files.readString(v2)
       pipeline(d)
     }
     intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
       SnapshotTable.runResumable(docs, racing, root, 4)
     }
-    assert(Files.readString(v2) == "{\"snapshot_id\":2}")
+    assert(Files.readString(v2) == winner)
+    // the winner's rows read back once each; the loser's data dir is gone
+    assert(rowsOf(SnapshotTable.read(root).drop("bucket")) == rowsOf(pipeline(docs)))
+    attemptDir(root, 2)
+    val left = Files.list(java.nio.file.Paths.get(root, "_snapshots")).iterator().asScala
+      .map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toList.sorted
+    assert(left == List("v1.json", "v2.json"), "a temporary manifest was left")
   }
 
   test("a manifest from a build that recorded no schema reads back and resumes") {
