@@ -107,6 +107,7 @@ object SubmitMain {
   def main(argv: Array[String]): Unit = {
     val args = parse(argv)
     require(args.sfDir.nonEmpty && args.out.nonEmpty, "--sf-dir and --out are required")
+    artifactsDir(args.out) // a root the artifacts cannot reach fails before any job
 
     implicit val spark: SparkSession = SparkSession.builder()
       .appName("graft-extraction")
@@ -160,11 +161,11 @@ object SubmitMain {
   def writeArtifacts(args: Args, docLimit: Long = ArtifactDocLimit)(
       implicit spark: SparkSession): Unit = {
     import java.nio.charset.StandardCharsets.UTF_8
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     import scala.jdk.CollectionConverters._
+    val dir = artifactsDir(args.out)
     val cfg = args.pipeline
     val dd = cfg.dedupe
-    val dir = Paths.get(args.out, "artifacts")
     Files.createDirectories(dir)
     val table = SnapshotTable.read(args.out)
     val kept = table.filter(col("kept"))
@@ -266,6 +267,21 @@ object SubmitMain {
       w.write(s"""  "timestamp": "${java.time.ZonedDateTime.now().format(java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)}"\n""")
       w.write("}\n")
     } finally w.close()
+  }
+
+  /** `<out>/artifacts` as a local path. The artifact writers do driver-side
+    * java.nio IO, so `out` must be a plain path or a `file:` URI, which both
+    * name the local dir the table is written to; any other scheme is
+    * rejected here, before any Spark job.
+    */
+  private[jobs] def artifactsDir(out: String): java.nio.file.Path = {
+    val uri = new org.apache.hadoop.fs.Path(out).toUri
+    Option(uri.getScheme) match {
+      case None | Some("file") => java.nio.file.Paths.get(uri.getPath, "artifacts")
+      case Some(scheme) => throw new IllegalArgumentException(
+        s"--out $out: the artifacts are written to a local dir, so the root must be a " +
+          s"plain path or a file: URI, not $scheme:")
+    }
   }
 
   /** Derive the reference's file sinks from the COMMITTED dedup table

@@ -1,5 +1,6 @@
 package graft.ops
 
+import scala.collection.mutable
 import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
@@ -28,8 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * perfect recall; the default threshold 6 qualifies. In [[nearDupPairs]]
   * join fan-out is bounded by band-bucket sizes; a hot bucket (common
   * boilerplate) is handled by AQE skew-join splitting since the band join
-  * is a plain equi-join. ([[clusterWinners]] runs as RDD joins, outside
-  * AQE.)
+  * is a plain equi-join. ([[clusterWinners]] runs on per-partition hash
+  * blocks of RDDs, outside AQE.)
   *
   * What keeps the text out of every exchange: the signature, pair and
   * component stages never select it, and [[clusterWinners]] returns its
@@ -201,25 +202,42 @@ object LshDedup {
     * bound, not a semantic knob; hitting it throws rather than silently
     * returning partial components.
     *
-    * Execution shape: the rounds run as RDD joins that all share one
-    * `HashPartitioner(spark.sql.shuffle.partitions)`, outside AQE. The
-    * symmetric edges, keyed by their message source, are partitioned once
-    * and persisted, and the labels (doc -> (winner, prev, n_msgs)) stay
-    * co-partitioned with them, so round 0 and the edges-delta and
-    * labels-messages joins are narrow. A round is ONE job with 3 shuffles:
-    * the message reduce, the jump requests to their targets, and the jump
-    * answers back; its single aggregate yields (changed, processedEdges)
-    * and the labels' row count and id bytes. The returned frame carries
-    * those two as its plan statistics (sizeInBytes, rowCount), so joins
-    * against it are planned from a measured size, not from the 8 EiB
-    * default of a frame over an RDD.
+    * Execution shape: the rounds run on RDDs that all share one
+    * `HashPartitioner(spark.sql.shuffle.partitions)`, outside AQE. Each
+    * partition holds ONE adjacency block (a hash map from message source to
+    * its receivers, duplicate edges kept) and ONE label block (doc ->
+    * (winner, prev, n_msgs)); the symmetric edges are partitioned once and
+    * folded into their blocks, which stay persisted, and round 0 is computed
+    * from the adjacency block inside its task. Every co-partitioned join is
+    * a `zipPartitions` that looks rows up in the local block: the message
+    * step walks the changed labels' edges and combines (min, count) per
+    * receiver inside the sending task, and the update, jump-answer and
+    * final-merge steps are lookups. Messages, jump requests and jump answers
+    * cross partitions through `partitionBy` shuffles without an aggregator.
+    * So no round builds one of Spark's size-tracked collections (the maps
+    * behind a keyed RDD join or reduce, or a persisted partition of
+    * records), whose size sampling re-walks the records each time the
+    * collection grows by 10%: on small graphs that cost more than the
+    * rounds' own work.
+    * A round is ONE job with 3 shuffles (messages, jump requests, jump
+    * answers); its single aggregate yields (changed, processedEdges) and
+    * the labels' row count and id bytes. The returned frame carries those
+    * two as its plan statistics (sizeInBytes, rowCount), so joins against
+    * it are planned from a measured size, not from the 8 EiB default of a
+    * frame over an RDD.
     * RDDs are forced here, against the "no RDD unless forced" default: a
     * DataFrame join cannot be told that both sides already share a
     * partitioner across loop iterations, so every round would re-shuffle
     * the full edge and label sets (and AQE may re-coalesce each side
-    * differently); co-partitioned RDD joins keep those joins narrow.
+    * differently).
     *
-    * Durability: by default each round's labels are persisted
+    * Memory: a task holds its partition's adjacency and label blocks in
+    * hash maps, which do not spill (a keyed RDD join's maps could), so
+    * `spark.sql.shuffle.partitions` must be large enough for one
+    * partition's edges and labels to fit in a task's memory. Persisted
+    * blocks are held deserialized, as persisted records are.
+    *
+    * Durability: by default each round's label blocks are persisted
     * (MEMORY_AND_DISK) with their lineage and the previous round's are
     * released once the new ones are filled, so one round is stored per
     * call and a lost executor costs a recompute from lineage. Passing
@@ -254,32 +272,39 @@ object LshDedup {
         Seq("doc_id", "winner", "prev").map(StructField(_, idType, nullable = false)) :+
           StructField("n_msgs", LongType, nullable = false))
       def rows(df: DataFrame): RDD[InternalRow] = df.queryExecution.toRdd
-      // doc -> (winner, prev, n_msgs), partitioned by `part`
-      type Labels = RDD[(K, (K, K, Long))]
+      // one label block per partition of `part`
+      type Labels = RDD[mutable.HashMap[K, Label[K]]]
+      // folds a message (w, n) into the receiver's (min, count)
+      def combine(into: mutable.HashMap[K, (K, Long)], x: K, w: K, n: Long): Unit =
+        into(x) = into.get(x).fold((w, n)) { case (mw, mn) => (least(mw, w), mn + n) }
       def ckpt(labels: Labels, round: Int): Labels = ckptDir match {
         case Some(d) =>
           val path = s"$d/labels_r$round"
-          Bridge.internalRowFrame(spark, labelSchema,
-              labels.map { case (x, (w, p, n)) => InternalRow(x, w, p, n) })
+          Bridge.internalRowFrame(spark, labelSchema, labels.flatMap(_.iterator.map {
+              case (x, Label(w, p, n)) => InternalRow(x, w, p, n) }))
             .write.mode(SaveMode.Overwrite).parquet(path)
           if (round >= 2) deletePath(spark, s"$d/labels_r${round - 2}")
           rows(spark.read.parquet(path))
-            .map(r => id(r, 0) -> ((id(r, 1), id(r, 2), r.getLong(3)))).partitionBy(part)
+            .map(r => id(r, 0) -> Label(id(r, 1), id(r, 2), r.getLong(3))).partitionBy(part)
+            .mapPartitions(it => Iterator.single(mutable.HashMap.from(it)))
         case None => labels.persist(StorageLevel.MEMORY_AND_DISK)
       }
-      // symmetric edges keyed by their message source y (value: receiver x)
-      val edges = rows(pairs.select(col("doc_a"), col("doc_b"))).flatMap { r =>
+      // symmetric edges: one block per partition from message source y to
+      // its receivers x
+      val adj = rows(pairs.select(col("doc_a"), col("doc_b"))).flatMap { r =>
         def show(i: Int) = if (r.isNullAt(i)) "null" else id(r, i).toString
         require(!r.isNullAt(0) && !r.isNullAt(1),
           s"clusterWinners: null doc id in pair (${show(0)}, ${show(1)})")
         val (a, b) = (id(r, 0), id(r, 1))
         if (a == b) Nil else Seq(a -> b, b -> a)
-      }.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-      // round 0 = one full edge step, least(self, min neighbor); edges are
-      // already partitioned by key, so this reduce does not shuffle
-      var labels = ckpt(edges.reduceByKey(part, least).mapPartitions(
-        _.map { case (x, m) => x -> ((least(x, m), x, 0L)) }, preservesPartitioning = true), 0)
-      var delta = labels.mapValues(_._1) // everyone "changed"
+      }.partitionBy(part).mapPartitions { it =>
+        val ys = mutable.HashMap.empty[K, List[K]]
+        it.foreach { case (y, x) => ys(y) = x :: ys.getOrElse(y, Nil) }
+        Iterator.single(ys)
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+      // round 0 = one full edge step, least(self, min neighbor)
+      var labels = ckpt(adj.map(_.map { case (x, ys) =>
+        x -> Label(ys.foldLeft(x)(least), x, 0L) }), 0)
       var round = 0
       var changed = -1L
       var (nRows, nBytes) = (0L, 0L)
@@ -287,39 +312,52 @@ object LshDedup {
         round += 1
         require(round <= maxRounds,
           s"clusterWinners did not converge within $maxRounds rounds (component diameter > 2^$maxRounds?)")
-        // (1) messages from last round's changed labels only, along edges
-        val msgs = edges.join(delta, part).values.mapValues(w => (w, 1L))
-          .reduceByKey(part, (a, b) => (least(a._1, b._1), a._2 + b._2))
-        val upd = labels.leftOuterJoin(msgs, part).mapValues { case ((w, _, _), m) =>
-          m.fold((w, w, 0L)) { case (mw, n) => (least(w, mw), w, n) }
+        val all = round == 1 // everyone "changed" in round 0
+        // (1) messages from last round's changed labels only, along edges,
+        //     combined per receiver in the sending task and again on arrival
+        val msgs = adj.zipPartitions(labels) { (a, l) =>
+          val (ys, out) = (a.next(), mutable.HashMap.empty[K, (K, Long)])
+          l.next().foreach { case (y, Label(w, p, _)) =>
+            if (all || w != p) ys(y).foreach(combine(out, _, w, 1L))
+          }
+          out.iterator
+        }
+        val upd = labels.zipPartitions(msgs.partitionBy(part)) { (l, m) =>
+          val got = mutable.HashMap.empty[K, (K, Long)]
+          m.foreach { case (x, (w, n)) => combine(got, x, w, n) }
+          Iterator.single(l.next().map { case (x, Label(w, _, _)) =>
+            x -> got.get(x).fold(Label(w, w, 0L)) { case (mw, n) => Label(least(w, mw), w, n) }
+          })
         }
         // (2) pointer jump: each non-root x asks its target t = w1(x) for
         //     w1(t), and the answer is shuffled back to x
-        val requests = upd.flatMap { case (x, (w1, _, _)) =>
-          if (w1 == x) None else Some(w1 -> x)
+        val requests = upd.flatMap(_.iterator.collect { case (x, Label(w1, _, _)) if w1 != x => w1 -> x })
+        val answers = upd.zipPartitions(requests.partitionBy(part)) { (u, r) =>
+          val ws = u.next()
+          r.flatMap { case (t, x) => ws.get(t).map(l => x -> l.w) }
         }
-        val answers = upd.join(requests, part).values.map { case ((tw, _, _), x) => x -> tw }
-        val next = ckpt(upd.leftOuterJoin(answers, part).mapValues { case ((w1, p, n), j) =>
-          (j.fold(w1)(least(w1, _)), p, n)
+        val next = ckpt(upd.zipPartitions(answers.partitionBy(part)) { (u, a) =>
+          val ws = u.next() // this task's own block: `upd` is never stored
+          a.foreach { case (x, j) => ws(x) = ws(x).copy(w = least(ws(x).w, j)) }
+          Iterator.single(ws)
         }, round)
         // ONE action for the round statistics and the result's size, by
         // Spark's row-size formula (8 bytes of row overhead plus the column
         // widths) with string ids at their measured UTF-8 length
         val (c, processed, k, b) = next.aggregate((0L, 0L, 0L, 0L))(
-          { case ((c, e, k, b), (x, (w, p, n))) =>
+          (acc, ws) => ws.foldLeft(acc) { case ((c, e, k, b), (x, Label(w, p, n))) =>
             (if (w == p) c else c + 1, e + n, k + 1, b + 8 + width(x) + width(w)) },
           { case ((c1, e1, k1, b1), (c2, e2, k2, b2)) => (c1 + c2, e1 + e2, k1 + k2, b1 + b2) })
         stats.foreach(_ += CcRoundStat(round, c, processed))
         labels.unpersist(blocking = false) // `next` is filled: one round stays stored
-        delta = next.filter { case (_, (w, p, _)) => w != p }.mapValues(_._1)
         labels = next
         changed = c
         nRows = k
         nBytes = b
       }
-      edges.unpersist(blocking = false)
+      adj.unpersist(blocking = false)
       Bridge.internalRowFrame(spark, StructType(labelSchema.fields.take(2)),
-        labels.map { case (x, (w, _, _)) => InternalRow(x, w) },
+        labels.flatMap(_.iterator.map { case (x, l) => InternalRow(x, l.w) }),
         Some((BigInt(nBytes), BigInt(nRows))))
     }
     idType match {
@@ -331,6 +369,11 @@ object LshDedup {
         s"clusterWinners: doc ids must be string (UTF8_BINARY), long or int, got ${t.sql}")
     }
   }
+
+  /** A doc's label in a [[clusterWinners]] round: its winner, its winner
+    * when the round began, and the messages it received in the round.
+    */
+  private final case class Label[K](w: K, p: K, n: Long)
 
   /** Recursive delete through the Hadoop FileSystem of the path's scheme —
     * the checkpoint dir is documented as HDFS/S3-backed on a real cluster,

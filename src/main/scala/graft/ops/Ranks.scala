@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Scale-safe GLOBAL rank (O1 natural-sort ranking, reference
   * internal/text/text.go:34-67 ordering semantics via Exprs.naturalKey).
@@ -12,11 +13,13 @@ import org.apache.spark.sql.types.LongType
   * table through ONE task (Exchange SinglePartition) — the textbook
   * single-partition-window scale killer; it hides at sf0.1 (0.2 s) and dies
   * at 10^12 rows. The distributed shape here: range-repartition on the key,
-  * sort within partitions, then `zipWithIndex` — whose internal count job
-  * computes exactly the per-partition offsets and whose result job REUSES
+  * sort within partitions, then `zipWithIndex`'s construction: a count job
+  * computes exactly the per-partition offsets and the result job REUSES
   * the same shuffle output (same RDD, same shuffle id), so every partition
   * holds a contiguous key range and offset + local position reproduces the
-  * global row_number exactly.
+  * global row_number exactly. The count job counts every partition, so the
+  * result reports its measured row count as plan statistics (and a size
+  * from Spark's row-size formula), not the 8 EiB default of an RDD frame.
   *
   * Why the RDD hop instead of a second DataFrame aggregation for the
   * offsets (trap worth recording): a pure-DataFrame twin that consumed the
@@ -27,8 +30,8 @@ import org.apache.spark.sql.types.LongType
   * exchange so ReuseExchange sees two different exchanges and runs BOTH:
   * the two executions can draw different boundaries, skewing every
   * offset (observed at sf0.01: ranks drifted by +28 after bucket 0).
-  * zipWithIndex is the per-partition-offset construction with shuffle
-  * reuse guaranteed by lineage, not by optimizer pattern-matching.
+  * Both jobs here run over ONE RDD, so the shuffle reuse is guaranteed by
+  * lineage, not by optimizer pattern-matching.
   *
   * Ties: rows with EQUAL keys stay in one range bucket, but their relative
   * order is as nondeterministic as the global window's — callers wanting
@@ -51,13 +54,23 @@ object Ranks {
       .repartitionByRange(n, col("__gr_key"))
       .sortWithinPartitions("__gr_key")
     val keyIdx = sorted.schema.fieldIndex("__gr_key")
-    val ranked = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      val vals = r.toSeq.patch(keyIdx, Nil, 1) :+ (i + 1L)
-      Row.fromSeq(vals)
+    val types = sorted.schema.fields.map(_.dataType)
+    val rows = sorted.queryExecution.toRdd // ONE lineage: both jobs reuse its shuffle
+    // exclusive prefix sums of the rows per partition; the last is the row count
+    val offsets = rows.mapPartitions(it => Iterator.single(it.size.toLong)).collect()
+      .scanLeft(0L)(_ + _)
+    val ranked = rows.mapPartitionsWithIndex { (p, it) =>
+      var rank = offsets(p)
+      it.map { r =>
+        rank += 1
+        // copied: the sort's output rows point into buffers it reuses
+        InternalRow.fromSeq(r.copy().toSeq(types).patch(keyIdx, Nil, 1) :+ rank)
+      }
     }
-    val outSchema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields.patch(keyIdx, Nil, 1) :+
-        org.apache.spark.sql.types.StructField(rankCol, LongType, nullable = false))
-    spark.createDataFrame(ranked, outSchema)
+    val outSchema = StructType(sorted.schema.fields.patch(keyIdx, Nil, 1) :+
+      StructField(rankCol, LongType, nullable = false))
+    // size by Spark's row-size formula with each column at its type's default size
+    Bridge.internalRowFrame(spark, outSchema, ranked,
+      Some((BigInt(offsets.last) * (8 + outSchema.defaultSize), BigInt(offsets.last))))
   }
 }

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * reads the process environment (only the mains — Bench, BenchExtra,
   * tools, jobs — may), an intermediate is materialized one way, through
   * `Bridge.reused`, concurrent Spark jobs are run one way, through
-  * `Bridge.concurrently`, Markdown is rendered one way, by the kernel, and
-  * the snapshot table does its IO through the Hadoop `FileSystem`.
+  * `Bridge.concurrently`, Markdown is rendered one way, by the kernel, the
+  * snapshot table does its IO through the Hadoop `FileSystem`, and the
+  * connected components build no keyed RDD aggregate or join.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -79,6 +80,21 @@ class SourceRulesSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty,
       hits.mkString("table IO outside FileSystem or a partitioned write:\n", "\n", ""))
+  }
+
+  test("LshDedup calls no keyed RDD aggregate or join") {
+    // each builds a size-tracked map per task whose size sampling re-walks
+    // its records as it grows; clusterWinners joins by zipPartitions over
+    // hash blocks instead. DataFrame joins (a Seq of columns) stay allowed.
+    val rule = ("""\b(reduceByKey|aggregateByKey|combineByKey|foldByKey|groupByKey|cogroup|""" +
+      """leftOuterJoin|rightOuterJoin|fullOuterJoin|subtractByKey)\b|""" +
+      """\.join\(\s*[\w.]+\s*,\s*[\w.]+\s*\)""").r
+    val f = Paths.get("src/main/scala/graft/ops/LshDedup.scala")
+    val hits = for {
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if rule.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("keyed RDD aggregates or joins:\n", "\n", ""))
   }
 
   private def scalaFiles(dir: Path): Seq[Path] = {

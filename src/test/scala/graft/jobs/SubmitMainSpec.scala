@@ -70,7 +70,25 @@ class SubmitMainSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("every sink equals its per-row twin with a file: URI root") {
-    sinkParity(commit(Files.createTempDirectory("subsinksuri").toUri.toString.stripSuffix("/")))
+    val root = Files.createTempDirectory("subsinksuri")
+    val (args, docs) = commit(root.toUri.toString.stripSuffix("/"))
+    assert(args.out.startsWith("file:/"), args.out)
+    sinkParity((args, docs))
+    // the artifacts land under the root too, not in a relative ./file: dir
+    SubmitMain.writeArtifacts(args)
+    val artifacts = root.resolve("artifacts")
+    for (f <- Seq("result_md", "chunks_raw.jsonl", "dedupe_report.json"))
+      assert(Files.exists(artifacts.resolve(f)), s"no $f under $artifacts")
+    assert(!Files.exists(Paths.get("file:")), "the artifacts went to a relative ./file: dir")
+  }
+
+  test("an out root of another scheme fails before any Spark job, naming the scheme") {
+    // nothing listens on localhost:1, so a read of the table before the
+    // check would fail with a connection error, not this one
+    val args = SubmitMain.Args(sfDir = sfDir, out = "hdfs://localhost:1/graft-out")
+    val e = intercept[IllegalArgumentException](SubmitMain.writeArtifacts(args))
+    assert(e.getMessage.contains("hdfs:"), e.getMessage)
+    assert(!Files.exists(Paths.get("hdfs:")), "a relative ./hdfs: dir was created")
   }
 
   test("SubmitMain's default buckets commit at most 8 files, and read lists no files in a job") {

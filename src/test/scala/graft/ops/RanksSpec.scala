@@ -20,6 +20,17 @@ class RanksSpec extends AnyFunSuite with SparkSpec {
       "distributed rank diverged from the single-partition window rank")
   }
 
+  test("globalRank reports its measured row count to the planner") {
+    import spark.implicits._
+    val df = (1 to 997).map(i => s"IMG_${(i * 7919) % 1009}.png").distinct.toDF("name").repartition(7)
+    val got = Ranks.globalRank(df, Exprs.naturalKey(col("name")))
+    val st = got.queryExecution.optimizedPlan.stats
+    val n = df.count()
+    assert(st.rowCount.contains(BigInt(n)), st.toString)
+    assert(st.sizeInBytes < BigInt(Long.MaxValue), st.toString)
+    assert(got.count() == n)
+  }
+
   test("q11 executed plan has no single-partition exchange") {
     val df = graft.Queries.queries("q11_o1_natural_rank")(spark, "/root/testdata/sf0.001")
     df.collect() // force AQE finalization

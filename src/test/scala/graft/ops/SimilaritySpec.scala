@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernel.Hashing
 import graft.SparkSpec
@@ -526,6 +528,62 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val got = LshDedup.clusterWinners(pairs)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got == Map("b" -> "b", "c" -> "b", "d" -> "b"), got.toString)
+  }
+
+  test("clusterWinners: random graphs give a driver-side union-find's components") {
+    import spark.implicits._
+    // a shuffled path (deep chain), a star, a few random edges, duplicates
+    // in both directions and self-pairs, over distinct ids from `ids`
+    def graph[T](ids: Gen[T]): Gen[Seq[(T, T)]] = for {
+      nodes <- Gen.nonEmptyListOf(ids).map(_.distinct.toVector)
+      order <- Gen.listOfN(nodes.size, Gen.long)
+      k <- Gen.choose(0, nodes.size)
+      path = nodes.zip(order).sortBy(_._2).map(_._1).take(k)
+      hub <- Gen.oneOf(nodes)
+      star <- Gen.someOf(nodes)
+      random <- Gen.choose(0, 8).flatMap(Gen.listOfN(_, Gen.zip(Gen.oneOf(nodes), Gen.oneOf(nodes))))
+      edges = path.zip(path.drop(1)) ++ star.map(hub -> _) ++ random
+      swapped <- Gen.someOf(edges)
+      repeated <- Gen.someOf(edges)
+      selfs <- Gen.someOf(nodes)
+    } yield edges ++ swapped.map(_.swap) ++ repeated ++ selfs.map(x => x -> x)
+    // union-find, each root the minimum of its component
+    def components[T](pairs: Seq[(T, T)], ord: Ordering[T]): Map[T, T] = {
+      val parent = scala.collection.mutable.Map.empty[T, T]
+      def find(x: T): T = parent.getOrElseUpdate(x, x) match {
+        case p if p == x => x
+        case p => val r = find(p); parent(x) = r; r
+      }
+      for ((a, b) <- pairs if a != b) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
+      }
+      parent.keys.map(x => x -> find(x)).toMap
+    }
+    def check[T](name: String, ids: Gen[T], ord: Ordering[T], df: Seq[(T, T)] => DataFrame,
+        get: (org.apache.spark.sql.Row, Int) => T): Unit = for (seed <- 1L to 4L) {
+      val pairs = graph(ids).pureApply(Gen.Parameters.default, Seed(seed))
+      val st = scala.collection.mutable.Buffer.empty[LshDedup.CcRoundStat]
+      val got = LshDedup.clusterWinners(df(pairs), stats = Some(st))
+        .collect().map(r => get(r, 0) -> get(r, 1)).toMap
+      val want = components(pairs, ord)
+      assert(got == want, s"$name seed $seed: ${pairs.size} pairs")
+      val edges = pairs.count { case (a, b) => a != b }
+      if (edges > 0) {
+        assert(st.head.processedEdges == 2L * edges, s"$name seed $seed round 1: $st")
+        assert(st.last.changed == 0L, s"$name seed $seed did not end on a fixpoint: $st")
+      }
+    }
+    // Spark SQL orders strings by their UTF-8 bytes
+    val utf8: Ordering[String] = (a, b) =>
+      java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+    val chars = Gen.oneOf("a", "b", "z", "é", "ß", "日", "\uFFFD", "\uD83D\uDE00", "\uD83E\uDD84")
+    check[String]("strings", Gen.choose(1, 3).flatMap(Gen.listOfN(_, chars)).map(_.mkString),
+      utf8, _.toDF("doc_a", "doc_b"), _.getString(_))
+    check[Long]("longs", Gen.oneOf(Gen.choose(-60L, 60L), Gen.long), Ordering.Long,
+      _.toDF("doc_a", "doc_b"), _.getLong(_))
+    check[Int]("ints", Gen.oneOf(Gen.choose(-60, 60), Gen.choose(Int.MinValue, Int.MaxValue)),
+      Ordering.Int, _.toDF("doc_a", "doc_b"), _.getInt(_))
   }
 
   test("commonParagraphFilter: drops every occurrence of cross-doc boilerplate, keeps unique and lightly-shared") {
