@@ -170,12 +170,6 @@ object SubmitMain {
     val table = SnapshotTable.read(args.out)
     val kept = table.filter(col("kept"))
 
-    def jesc(s: String): String = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
-
     // result.md (reference result.md, main.go:276; WriteMarkdown text.go:249-279)
     val nDocs = table.select("doc_id").distinct().count()
     val md = Render.markdown(kept.withColumn("idx", col("kept_order")),
@@ -243,6 +237,9 @@ object SubmitMain {
       .select(col("id"), col("reason"), col("matched_id"),
         col("distance").cast("long").as("distance"), col("preview"))
       .toLocalIterator().asScala
+    // a JSON string literal; null is written as "", Go's zero value
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    def str(s: String): String = json.writeValueAsString(Option(s).getOrElse(""))
     val w = Files.newBufferedWriter(dir.resolve("dedupe_report.json"), UTF_8)
     try {
       w.write("{\n")
@@ -252,16 +249,16 @@ object SubmitMain {
       w.write(s"""  "dropped_chunks": ${st.getLong(2)},\n""")
       w.write(s"""  "exact_duplicates": ${st.getLong(3)},\n""")
       w.write(s"""  "near_duplicates": ${st.getLong(4)},\n""")
-      w.write(s"""  "config": {"method": "${jesc(dd.method)}", "simhash_k": ${dd.simHashK}, """ +
+      w.write(s"""  "config": {"method": ${str(dd.method)}, "simhash_k": ${dd.simHashK}, """ +
         s""""simhash_threshold": ${dd.simHashThreshold}, "window": ${dd.window}},\n""")
       w.write("  \"dropped\": [")
       var first = true
       droppedIt.foreach { r =>
         if (!first) w.write(",")
         first = false
-        w.write(s"""\n    {"ChunkID": "${jesc(r.getString(0))}", "Reason": "${jesc(r.getString(1))}", """ +
-          s""""MatchedChunkID": "${jesc(Option(r.getString(2)).getOrElse(""))}", """ +
-          s""""Distance": ${r.getLong(3)}, "Preview": "${jesc(Option(r.getString(4)).getOrElse(""))}"}""")
+        w.write(s"""\n    {"ChunkID": ${str(r.getString(0))}, "Reason": ${str(r.getString(1))}, """ +
+          s""""MatchedChunkID": ${str(r.getString(2))}, """ +
+          s""""Distance": ${r.getLong(3)}, "Preview": ${str(r.getString(4))}}""")
       }
       w.write(if (first) "],\n" else "\n  ],\n")
       w.write(s"""  "timestamp": "${java.time.ZonedDateTime.now().format(java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)}"\n""")
@@ -319,10 +316,10 @@ object SubmitMain {
           col("distance").cast("string")))
       table.groupBy(col("doc_id")).agg(
           count(lit(1)).as("input_chunks"),
-          sum(when(col("kept"), 1L).otherwise(0L)).as("kept"),
-          sum(when(!col("kept"), 1L).otherwise(0L)).as("dropped"),
-          sum(when(col("reason") === "exact_duplicate", 1L).otherwise(0L)).as("exact_dups"),
-          sum(when(col("reason") === "near_duplicate", 1L).otherwise(0L)).as("near_dups"),
+          count_if(col("kept")).as("kept"),
+          count_if(!col("kept")).as("dropped"),
+          count_if(col("reason") === "exact_duplicate").as("exact_dups"),
+          count_if(col("reason") === "near_duplicate").as("near_dups"),
           md5(concat_ws(";", sort_array(collect_list(droppedEntry)))).as("dropped_digest"))
         .withColumn("method", lit(dd.method))
         .withColumn("simhash_k", lit(dd.simHashK))

@@ -59,14 +59,7 @@ object Curation {
     */
   val EvalMod = 97L
 
-  /** `checkpointDir`: when given, the post-dedup (doc_id, split, n_tokens)
-    * frame is written as parquet under a fresh `<dir>/curation-<uuid>/`
-    * subdirectory per call instead of kept in executor storage, so a lost
-    * executor costs no recompute of the gates, gram join and dedup window;
-    * a later call on the same dir leaves this call's files alone.
-    */
-  def manifest(docs: DataFrame, budget: Long = Pack.DefaultBudget,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def manifest(docs: DataFrame, budget: Long = Pack.DefaultBudget): DataFrame = {
     // 1. structural gates + eval-doc exclusion: map-only, fused into the scan
     val passed = docs
       .filter(col("doc_id") % EvalMod =!= 0)
@@ -113,14 +106,7 @@ object Curation {
     // each would re-execute the gates + gram join + dedup window from the
     // scan (measured 13.3 s vs ~1 s at sf0.1). The frame is (long, string,
     // long) per surviving doc — tiny at any scale.
-    val splitDone = winners.withColumn("split", Splits.splitOf(col("doc_id")))
-    val withSplit = checkpointDir match {
-      case Some(d) =>
-        val path = s"$d/curation-${java.util.UUID.randomUUID()}/curation_split"
-        splitDone.write.mode("overwrite").parquet(path)
-        docs.sparkSession.read.parquet(path)
-      case None => Bridge.reused(splitDone)
-    }
+    val withSplit = Bridge.reused(winners.withColumn("split", Splits.splitOf(col("doc_id"))))
 
     // 5. pack the train stream (q57 shape); manifest join back on doc_id
     val packed = Pack

@@ -4,8 +4,7 @@ import scala.collection.mutable
 import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -237,61 +236,30 @@ object LshDedup {
     * partition's edges and labels to fit in a task's memory. Persisted
     * blocks are held deserialized, as persisted records are.
     *
-    * Durability: by default each round's label blocks are persisted
-    * (MEMORY_AND_DISK) with their lineage and the previous round's are
-    * released once the new ones are filled, so one round is stored per
-    * call and a lost executor costs a recompute from lineage. Passing
-    * `checkpointDir` makes each round durable as
-    * `<dir>/cc-<uuid>/labels_r<N>` parquet (HDFS/S3-backed on a real
-    * cluster), one fresh `cc-<uuid>` subdirectory per call so that calls
-    * sharing a dir never overwrite each other's rounds: an executor loss
-    * then costs a recompute from the last durable round only.
-    * Round N's file is deleted as soon as round N+1 is committed, so the
-    * subdirectory holds at most two rounds; the final round's file backs
-    * the RETURNED DataFrame and stays for the caller to clean up with the
-    * job output. The SparkContext-global checkpoint dir is never touched.
+    * Durability: each round's label blocks are persisted (MEMORY_AND_DISK)
+    * with their lineage and the previous round's are released once the new
+    * ones are filled, so one round is stored per call and a lost executor
+    * costs a recompute from lineage.
     */
   def clusterWinners(pairs: DataFrame, maxRounds: Int = 20,
-      checkpointDir: Option[String] = None,
       stats: Option[scala.collection.mutable.Buffer[CcRoundStat]] = None): DataFrame = {
     val (idType, tb) = (pairs.schema("doc_a").dataType, pairs.schema("doc_b").dataType)
     require(idType == tb,
       s"clusterWinners: doc_a and doc_b must share one id type, got $idType and $tb")
     val spark = pairs.sparkSession
-    // one fresh subdirectory per call: a later call on the same dir must not
-    // overwrite or delete the rounds behind this call's lazy result
-    val ckptDir = checkpointDir.map(d => s"$d/cc-${java.util.UUID.randomUUID()}")
     // ids read as K straight from InternalRows; K's Ordering is Spark SQL's
     // for the id type (UTF8String compares UTF-8 bytes), and K is also the
-    // InternalRow value the result frame and the round parquet carry.
+    // InternalRow value the result frame carries.
     // `width` is the id's byte size in the plan-statistics estimate.
     def run[K: ClassTag: Ordering](id: (InternalRow, Int) => K, width: K => Int): DataFrame = {
       val least = implicitly[Ordering[K]].min(_: K, _: K)
       val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      val labelSchema = StructType(
-        Seq("doc_id", "winner", "prev").map(StructField(_, idType, nullable = false)) :+
-          StructField("n_msgs", LongType, nullable = false))
-      def rows(df: DataFrame): RDD[InternalRow] = df.queryExecution.toRdd
-      // one label block per partition of `part`
-      type Labels = RDD[mutable.HashMap[K, Label[K]]]
       // folds a message (w, n) into the receiver's (min, count)
       def combine(into: mutable.HashMap[K, (K, Long)], x: K, w: K, n: Long): Unit =
         into(x) = into.get(x).fold((w, n)) { case (mw, mn) => (least(mw, w), mn + n) }
-      def ckpt(labels: Labels, round: Int): Labels = ckptDir match {
-        case Some(d) =>
-          val path = s"$d/labels_r$round"
-          Bridge.internalRowFrame(spark, labelSchema, labels.flatMap(_.iterator.map {
-              case (x, Label(w, p, n)) => InternalRow(x, w, p, n) }))
-            .write.mode(SaveMode.Overwrite).parquet(path)
-          if (round >= 2) deletePath(spark, s"$d/labels_r${round - 2}")
-          rows(spark.read.parquet(path))
-            .map(r => id(r, 0) -> Label(id(r, 1), id(r, 2), r.getLong(3))).partitionBy(part)
-            .mapPartitions(it => Iterator.single(mutable.HashMap.from(it)))
-        case None => labels.persist(StorageLevel.MEMORY_AND_DISK)
-      }
       // symmetric edges: one block per partition from message source y to
       // its receivers x
-      val adj = rows(pairs.select(col("doc_a"), col("doc_b"))).flatMap { r =>
+      val adj = pairs.select(col("doc_a"), col("doc_b")).queryExecution.toRdd.flatMap { r =>
         def show(i: Int) = if (r.isNullAt(i)) "null" else id(r, i).toString
         require(!r.isNullAt(0) && !r.isNullAt(1),
           s"clusterWinners: null doc id in pair (${show(0)}, ${show(1)})")
@@ -302,9 +270,10 @@ object LshDedup {
         it.foreach { case (y, x) => ys(y) = x :: ys.getOrElse(y, Nil) }
         Iterator.single(ys)
       }.persist(StorageLevel.MEMORY_AND_DISK)
-      // round 0 = one full edge step, least(self, min neighbor)
-      var labels = ckpt(adj.map(_.map { case (x, ys) =>
-        x -> Label(ys.foldLeft(x)(least), x, 0L) }), 0)
+      // round 0 = one full edge step, least(self, min neighbor); one label
+      // block per partition of `part`
+      var labels = adj.map(_.map { case (x, ys) =>
+        x -> Label(ys.foldLeft(x)(least), x, 0L) }).persist(StorageLevel.MEMORY_AND_DISK)
       var round = 0
       var changed = -1L
       var (nRows, nBytes) = (0L, 0L)
@@ -336,11 +305,11 @@ object LshDedup {
           val ws = u.next()
           r.flatMap { case (t, x) => ws.get(t).map(l => x -> l.w) }
         }
-        val next = ckpt(upd.zipPartitions(answers.partitionBy(part)) { (u, a) =>
+        val next = upd.zipPartitions(answers.partitionBy(part)) { (u, a) =>
           val ws = u.next() // this task's own block: `upd` is never stored
           a.foreach { case (x, j) => ws(x) = ws(x).copy(w = least(ws(x).w, j)) }
           Iterator.single(ws)
-        }, round)
+        }.persist(StorageLevel.MEMORY_AND_DISK)
         // ONE action for the round statistics and the result's size, by
         // Spark's row-size formula (8 bytes of row overhead plus the column
         // widths) with string ids at their measured UTF-8 length
@@ -356,7 +325,8 @@ object LshDedup {
         nBytes = b
       }
       adj.unpersist(blocking = false)
-      Bridge.internalRowFrame(spark, StructType(labelSchema.fields.take(2)),
+      Bridge.internalRowFrame(spark,
+        StructType(Seq("doc_id", "winner").map(StructField(_, idType, nullable = false))),
         labels.flatMap(_.iterator.map { case (x, l) => InternalRow(x, l.w) }),
         Some((BigInt(nBytes), BigInt(nRows))))
     }
@@ -374,17 +344,4 @@ object LshDedup {
     * when the round began, and the messages it received in the round.
     */
   private final case class Label[K](w: K, p: K, n: Long)
-
-  /** Recursive delete through the Hadoop FileSystem of the path's scheme —
-    * the checkpoint dir is documented as HDFS/S3-backed on a real cluster,
-    * where java.io.File would be a silent no-op (delete() returning false)
-    * and every round's parquet would accumulate instead of the promised
-    * at-most-two.
-    */
-  private def deletePath(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true): Unit
-  }
 }

@@ -28,7 +28,9 @@ import scala.jdk.CollectionConverters._
   * another's dir. The rename is atomic on HDFS; a local file system checks
   * and then renames, so there two commits in the same instant can both
   * pass the check. After its commit a run deletes the other `v<k>-*` dirs
-  * (killed attempts at the same id), which no manifest can list any more.
+  * (killed attempts at the same id), which no manifest can list any more,
+  * and the `v<k-1>-*` dirs that manifest k-1 does not list (attempts at the
+  * parent id killed after its commit, before their own cleanup).
   * All table IO goes through the Hadoop `FileSystem` of `root`, the one
   * Spark writes the data with, so a URI root such as `file:///…` holds the
   * manifests next to the data, as a plain path does.
@@ -155,10 +157,11 @@ object SnapshotTable {
     * snapshot `id` under a temporary name and rename it to `v<id>.json`.
     * If that exists, another run committed `id` first: the temporary
     * manifest and `attempt` are deleted, `v<id>.json` is left as it was,
-    * and [[FileAlreadyExistsException]] is thrown.
+    * and [[FileAlreadyExistsException]] is thrown. `parentDirs` are the
+    * data dirs that manifest `id - 1` lists.
     */
   private def commitSnapshot(fs: FileSystem, root: String, id: Int, attempt: Path,
-      completed: Set[Int], ddl: String, lineage: Seq[BucketLineage],
+      parentDirs: Set[String], completed: Set[Int], ddl: String, lineage: Seq[BucketLineage],
       files: Seq[(String, Long)]): Unit = {
     val m = Json.createObjectNode()
       .put("snapshot_id", id).put("parent_id", id - 1)
@@ -192,10 +195,12 @@ object SnapshotTable {
         fs.delete(attempt, true)
         throw e
     }
-    // v<id> is taken, so no manifest can list another attempt's dir at id:
-    // those are killed attempts' files
-    fs.globStatus(new Path(root, s"data/v$id-*")).map(_.getPath)
-      .filter(_.getName != attempt.getName).foreach(fs.delete(_, true))
+    // v<id> is taken, so no manifest can list another attempt's dir at id,
+    // and v<id-1> is committed, so none can list a dir at id-1 that it does
+    // not: those are killed attempts' files
+    fs.globStatus(new Path(root, s"data/v{${id - 1},$id}-*")).map(_.getPath)
+      .filterNot(p => p.getName == attempt.getName || parentDirs(p.getName))
+      .foreach(fs.delete(_, true))
   }
 
   /** Resumable bucketed materialization of `pipeline(docs)`:
@@ -258,7 +263,9 @@ object SnapshotTable {
         !s.getPath.getName.startsWith("_"))
       .map(s => s"${dataDir.getName}/${s.getPath.getName}" -> s.getLen)
       .sortBy(_._1)
-    commitSnapshot(fs, root, id, dataDir, done ++ missing, ddl, lineage, files)
+    val parentDirs = head.toSet[JsonNode].flatMap(_.path("files").elements().asScala
+      .map(_.get("path").asText.takeWhile(_ != '/')))
+    commitSnapshot(fs, root, id, dataDir, parentDirs, done ++ missing, ddl, lineage, files)
     missing.toSet
   }
 

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * session conf, so no operator, kernel, function, table or streaming code
   * reads the process environment (only the mains — Bench, BenchExtra,
   * tools, jobs — may), an intermediate is materialized one way, through
-  * `Bridge.reused`, concurrent Spark jobs are run one way, through
+  * `Bridge.reused` (the connected components' RDD blocks and the two
+  * streaming micro-batch scopes keep their own persists, each released by
+  * its owner), concurrent Spark jobs are run one way, through
   * `Bridge.concurrently`, Markdown is rendered one way, by the kernel, the
   * snapshot table does its IO through the Hadoop `FileSystem`, and the
   * connected components build no keyed RDD aggregate or join.
@@ -38,6 +40,24 @@ class SourceRulesSpec extends AnyFunSuite {
       if rule.findFirstIn(line).isDefined
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("local checkpoints:\n", "\n", ""))
+  }
+
+  test("an intermediate is kept one way: no checkpoint dir or call, and persist only in its owners") {
+    // Bridge.reused keeps lineage and is freed with its frame; the CC
+    // blocks are released round by round, and each streaming micro-batch
+    // releases its persist in a finally, where a frame left to the
+    // ContextCleaner would hold storage until the driver's next GC. A
+    // checkpoint dir option or a reliable checkpoint is a second way.
+    val checkpoint = """\bcheckpoint(Dir|\()""".r
+    val owners = Set("Bridge.scala", "LshDedup.scala", "StreamingBoilerplate.scala",
+      "StreamingScreen.scala")
+    val hits = for {
+      f <- scalaFiles(Paths.get("src/main"))
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if checkpoint.findFirstIn(line).isDefined ||
+        (line.contains(".persist(") && !owners(f.getFileName.toString))
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("a second way to keep an intermediate:\n", "\n", ""))
   }
 
   test("no thread pool, Future or parallel collection under src/main outside Bridge") {

@@ -286,4 +286,63 @@ class SubmitMainSpec extends AnyFunSuite with SparkSpec {
       assert(dist == driver, s"doc $docId: distributed tree diverges from driver tree")
     }
   }
+
+  /** An sf dir whose documents.parquet holds `rows` of (doc_id, text),
+    * committed as a table under a fresh out dir.
+    */
+  private def committedOf(rows: (String, String)*): SubmitMain.Args = {
+    import spark.implicits._
+    val sfDir = Files.createTempDirectory("sfrows").toString
+    rows.toDF("doc_id", "text").coalesce(1).write.parquet(s"$sfDir/documents.parquet")
+    val args = SubmitMain.Args(sfDir = sfDir, out = Files.createTempDirectory("subrows").toString,
+      buckets = 2, emitReport = true)
+    SnapshotTable.runResumable(Corpus.docsTable(spark, sfDir),
+      d => ExtractionJob.dedupWith(d, args.pipeline), args.out, args.buckets)
+    args
+  }
+
+  test("two input rows with one doc_id fail the Markdown sink, naming the doc_id") {
+    // both rows keep chunks from kept_order 0, so one doc_id group would
+    // interleave two documents into one Markdown file
+    val args = committedOf(
+      "7" -> "The first document has one paragraph long enough to survive the chunker.",
+      "7" -> "A second, unrelated document body that is also beyond the minimum length.")
+    val e = intercept[Exception](SubmitMain.writeSinks(args))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("doc_id 7")), messages.mkString("\n"))
+  }
+
+  test("dedupe_report.json parses as JSON and equals the committed table") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    // the repeated paragraph is dropped as an exact duplicate, so its
+    // preview carries a quote, a backslash, a tab and U+0001 into the report
+    val odd = "A paragraph with a \"quote\", a reverse\\solidus, a\ttab and \u0001 a control char."
+    val args = committedOf(
+      "1" -> s"$odd\n\nAn ordinary paragraph that keeps the document above the minimum.\n\n$odd",
+      "2" -> "Another document with a paragraph long enough to survive the chunker.")
+    SubmitMain.writeArtifacts(args)
+    val rep = new ObjectMapper().readTree(
+      Paths.get(args.out, "artifacts", "dedupe_report.json").toFile)
+
+    val table = SnapshotTable.read(args.out)
+    val st = table.agg(count(lit(1)), count_if(col("kept")), count_if(!col("kept")),
+      count_if(col("reason") === "exact_duplicate"),
+      count_if(col("reason") === "near_duplicate")).head
+    val counts = Seq("input_chunks", "kept_chunks", "dropped_chunks", "exact_duplicates",
+      "near_duplicates").map(rep.get(_).asLong)
+    assert(counts == (0 to 4).map(st.getLong), s"report $counts, table $st")
+    assert(rep.get("config").get("simhash_k").asInt == args.pipeline.dedupe.simHashK)
+
+    def orEmpty(s: String) = Option(s).getOrElse("")
+    val dropped = rep.get("dropped").elements().asScala.map(d =>
+      (d.get("ChunkID").asText, d.get("Reason").asText, d.get("MatchedChunkID").asText,
+        d.get("Distance").asLong, d.get("Preview").asText)).toSeq
+    val twin = table.filter(!col("kept")).orderBy("doc_id", "idx")
+      .select("id", "reason", "matched_id", "distance", "preview").collect().toSeq
+      .map(r => (r.getString(0), r.getString(1), orEmpty(r.getString(2)),
+        r.getInt(3).toLong, orEmpty(r.getString(4))))
+    assert(dropped == twin)
+    assert(dropped.exists(_._5 == odd), s"no dropped preview carries the odd chars: $dropped")
+  }
 }

@@ -76,17 +76,6 @@ class CurationSpec extends AnyFunSuite with SparkSpec {
     assert(ids == Set(1L, 5L, 6L, 7L, 8L))
   }
 
-  test("a second call on the same checkpointDir leaves the first call's result intact") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-curation").toString
-    val a = Curation.manifest(corpus(), checkpointDir = Some(dir))
-    val other = (1 to 30).map(i => s"other$i").mkString(" ")
-    val b = Curation.manifest(Seq((40L, other), (41L, other + " x")).toDF("doc_id", "text"),
-      checkpointDir = Some(dir))
-    assert(a.collect().map(_.getLong(0)).toSet == Set(1L, 5L, 6L, 7L, 8L))
-    assert(b.collect().map(_.getLong(0)).toSet == Set(40L, 41L))
-  }
-
   test("q76: the packed side is broadcast, so no exchange moves split rows by doc_id") {
     // the packing frame reports its measured size, so the final manifest
     // join broadcasts it at plan time instead of shuffling both sides

@@ -299,51 +299,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(absorbed >= 45, s"only $absorbed/50 planted copies collapsed into their base")
   }
 
-  test("clusterWinners: reliable-checkpoint path computes identical components") {
-    import spark.implicits._
-    // same fixture as the basic CC test, run through Dataset.checkpoint()
-    // into a directory (the executor-loss-durable path a real cluster uses)
-    // instead of localCheckpoint — results must be identical and the
-    // checkpoint dir must actually be written
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val pairs = Seq(("a", "b"), ("b", "c"), ("x", "y")).toDF("doc_a", "doc_b")
-    val globalBefore = spark.sparkContext.getCheckpointDir
-    val got = LshDedup.clusterWinners(pairs, checkpointDir = Some(dir))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"), got.toString)
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(java.nio.file.Files.isRegularFile(_)).count()
-    assert(wrote > 0, s"no reliable checkpoint files written under $dir")
-    // the per-round parquet rounds must NOT hijack the application's global
-    // checkpoint dir (the old Dataset.checkpoint path silently re-pointed it
-    // to <dir>/<UUID> on every call)
-    assert(spark.sparkContext.getCheckpointDir == globalBefore,
-      s"clusterWinners clobbered the global checkpoint dir: ${spark.sparkContext.getCheckpointDir}")
-    // and old rounds are cleaned as newer rounds become durable: the call
-    // wrote into its own subdirectory, where at most the last two
-    // labels_r<N> round dirs remain
-    val callDirs = new java.io.File(dir).listFiles()
-    assert(callDirs.length == 1 && callDirs.head.getName.startsWith("cc-"),
-      s"expected one per-call subdirectory: ${callDirs.mkString(", ")}")
-    val roundDirs = callDirs.head.listFiles().filter(_.getName.startsWith("labels_r"))
-    assert(roundDirs.nonEmpty, s"no labels_r<N> round dirs under ${callDirs.head}")
-    assert(roundDirs.length <= 2, s"stale checkpoint rounds not cleaned: ${roundDirs.mkString(", ")}")
-  }
-
-  test("clusterWinners: a second call on the same checkpointDir leaves the first call's result intact") {
-    import spark.implicits._
-    // same graph shape, disjoint ids: both calls run the same rounds, so
-    // shared round paths would let B overwrite the files behind A's result
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val a = LshDedup.clusterWinners(Seq(("a", "b"), ("b", "c")).toDF("doc_a", "doc_b"),
-      checkpointDir = Some(dir))
-    val b = LshDedup.clusterWinners(Seq(("p", "q"), ("q", "r")).toDF("doc_a", "doc_b"),
-      checkpointDir = Some(dir))
-    def labels(w: DataFrame) = w.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(labels(a) == Map("a" -> "a", "b" -> "a", "c" -> "a"))
-    assert(labels(b) == Map("p" -> "p", "q" -> "p", "r" -> "p"))
-  }
-
   test("clusterWinners: the result plan reports its measured row count and size") {
     import spark.implicits._
     // size = Spark's row-size formula (8 bytes of row overhead + column
@@ -359,8 +314,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val utf8 = (r: org.apache.spark.sql.Row) =>
       (0 to 1).map(i => r.getString(i).getBytes("UTF-8").length.toLong).sum
     check(LshDedup.clusterWinners(strings), utf8)
-    check(LshDedup.clusterWinners(strings,
-      checkpointDir = Some(java.nio.file.Files.createTempDirectory("graft-ckpt").toString)), utf8)
     check(LshDedup.clusterWinners(Seq((5L, 3L), (3L, 9L)).toDF("doc_a", "doc_b")), _ => 16L)
     check(LshDedup.clusterWinners(Seq((2, 1), (4, 3)).toDF("doc_a", "doc_b")), _ => 8L)
   }

@@ -300,6 +300,21 @@ class SnapshotTableSpec extends AnyFunSuite with SparkSpec {
     assert(!partial.exists(), "the commit of v2 deletes the killed attempt's dir")
   }
 
+  test("the next commit deletes a killed attempt's dir at the parent id") {
+    val root = Files.createTempDirectory("snap7").toString
+    val docs = Corpus.docsTable(spark, sfDir)
+    SnapshotTable.runResumable(docs, pipeline, root, 4, maxBucketsPerRun = 2)
+    val committed = attemptDir(root, 1)
+    // an attempt at v1 killed after v1's commit, before its own cleanup
+    val killed = new java.io.File(s"$root/data/v1-killed")
+    pipeline(docs.limit(5)).write.parquet(killed.toString)
+
+    SnapshotTable.runResumable(docs, pipeline, root, 4)
+    assert(!killed.exists(), "the commit of v2 deletes the unlisted dir at v1")
+    assert(attemptDir(root, 1) == committed, "v1's own dir stays")
+    assert(rowsOf(SnapshotTable.read(root).drop("bucket")) == rowsOf(pipeline(docs)))
+  }
+
   test("mixed manifest chain: buckets committed by a pre-file-level build stay visible") {
     import com.fasterxml.jackson.databind.ObjectMapper
     val root = Files.createTempDirectory("snap3").toString
