@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -18,8 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Pipeline: project ONLY (doc_id, sig) — column pruning keeps payloads out
   * of the exchange — explode the signature into `bands` fixed-width band
-  * keys, self-join on (band, band_bits), post-filter on true Hamming
-  * distance, emit distinct candidate pairs (a < b).
+  * keys, self-join on (band, band_key), post-filter on true Hamming
+  * distance, and keep a pair only in the lowest band it shares, so each
+  * pair (a < b) is emitted once without a distinct ([[bandPairs]]).
   *
   * Why it scales: two docs within Hamming distance d share at least one of
   * b bands untouched when d < b (pigeonhole), so recall is exact for
@@ -42,8 +43,12 @@ object LshDedup {
   val Bands = 8
   val BandBits = 8
 
-  /** (doc_id, sig) -> distinct near-duplicate candidate pairs
-    * (doc_a, doc_b, distance) with distance <= threshold and doc_a < doc_b.
+  /** (doc_id, sig) -> near-duplicate pairs (doc_a, doc_b, distance), each
+    * pair of rows with distance <= threshold exactly once, doc_a < doc_b.
+    *
+    * A null `doc_id` fails the first action with "null doc_id" (checked in
+    * the projection that materializes `sigs`, so it costs no extra job); a
+    * null `sig` pairs with nothing.
     *
     * Precondition, NOT checked (checking costs an aggregate over the whole
     * corpus): `sigs` holds one row per doc_id. A doc_id on several rows
@@ -61,8 +66,14 @@ object LshDedup {
     // + simhash, the dominant per-row cost), and the join-key null filter
     // the planner pushes into each side's scan evaluated it a second time
     // per side (filter + project, no cross-operator CSE). It holds 16
-    // bytes/doc (doc_id, sig) — scale-safe metadata.
-    val snap = Bridge.reused(sigs.select(col("doc_id"), col("sig")))
+    // bytes/doc (doc_id, sig) — scale-safe metadata. A null doc_id is
+    // rejected here: least/greatest below would skip it and turn its pair
+    // into a self-pair of the other doc.
+    val snap = Bridge.reused(sigs.select(
+      when(col("doc_id").isNull, raise_error(concat(
+        lit("nearDupPairs: null doc_id (sig "), col("sig").cast("string"), lit(")"))))
+        .otherwise(col("doc_id")).as("doc_id"),
+      col("sig")))
     // The band self-join runs over DISTINCT signatures, and doc pairs are
     // expanded afterwards (guide §8: decide on small rows, expand to the
     // output). With per-doc-unique sigs this is the same join one exchange
@@ -73,17 +84,12 @@ object LshDedup {
     // once, in the output-sized expansion join (measured on the 10x
     // identical-replica probe: the doc-level band join was the dominant
     // cost at 58 s; see OPTIMIZATION_r06.md).
-    val banded = bandedSigs(snap.select(col("sig")).distinct(), "sig")
-    val a = banded.select(col("band"), col("band_key"), col("sig").as("sig_a"))
-    val b = banded.select(col("band"), col("band_key"), col("sig").as("sig_b"))
-    // distinct unordered sig pairs within Hamming range (a pair is found
-    // once per shared band — distinct BEFORE the doc expansion)
-    val sigPairs = a.join(b, Seq("band", "band_key"))
-      .filter(col("sig_a") < col("sig_b"))
-      .filter(Exprs.hamming(col("sig_a"), col("sig_b")) <= threshold)
-      .select(col("sig_a"), col("sig_b"),
-        Exprs.hamming(col("sig_a"), col("sig_b")).as("distance"))
-      .distinct()
+    val distinctSigs = snap.select(col("sig")).distinct()
+    // unordered sig pairs within Hamming range, each once (in its lowest
+    // shared band), so the join streams into the doc expansion
+    val sigPairs = bandPairs(distinctSigs.select(col("sig").as("sig_a")), "sig_a",
+      distinctSigs.select(col("sig").as("sig_b")), "sig_b", threshold,
+      where = col("sig_a") < col("sig_b"))
     // cross-group doc pairs: every (x in sig_a's docs, y in sig_b's docs),
     // ordered by doc id; each {x, y} appears exactly once (one sig per doc,
     // one row per unordered sig pair)
@@ -102,16 +108,46 @@ object LshDedup {
     cross.unionByName(within)
   }
 
-  /** The band layout: one row per (input row, band) carrying `band` and
-    * `band_key`, the band's [[BandBits]]-bit slice of the 64-bit signature
-    * in `sigCol`. The single owner of the banding that [[nearDupPairs]],
-    * [[Splits.incrementalNearDups]] and `StreamingScreen` join on.
+  /** The band join: every (left row, right row) pair whose signatures in
+    * `leftSig` and `rightSig` are within Hamming distance `threshold`, with
+    * both rows' columns and the pair's `distance`. The one owner of the
+    * (band, band_key) join behind [[nearDupPairs]],
+    * [[Splits.incrementalNearDups]] and `StreamingScreen`.
+    *
+    * Recall is exact for threshold < [[Bands]]: such a pair agrees in at
+    * least one band (pigeonhole). A pair that agrees in several bands is
+    * kept only in the lowest of them, so each pair is returned once and no
+    * caller needs a distinct; that test runs after the Hamming filter, on
+    * the rows that survive it. `where` is a cheap pair condition checked
+    * before the distance. A null signature joins nothing.
     */
-  private[graft] def bandedSigs(df: DataFrame, sigCol: String): DataFrame =
+  private[graft] def bandPairs(left: DataFrame, leftSig: String,
+      right: DataFrame, rightSig: String, threshold: Int,
+      where: Column = lit(true)): DataFrame = {
+    val (a, b) = (col(leftSig), col(rightSig))
+    bandedSigs(left, leftSig).join(bandedSigs(right, rightSig), Seq("band", "band_key"))
+      .filter(where)
+      .filter(Exprs.hamming(a, b) <= threshold)
+      .filter(col("band") === lowestSharedBand(a, b))
+      .drop("band", "band_key")
+      .withColumn("distance", Exprs.hamming(a, b))
+  }
+
+  /** One row per (input row, band) carrying `band` and `band_key`, the
+    * band's [[BandBits]]-bit slice of the 64-bit signature in `sigCol`.
+    */
+  private def bandedSigs(df: DataFrame, sigCol: String): DataFrame =
     df.withColumn("band", explode(sequence(lit(0), lit(Bands - 1))))
-      .withColumn("band_key",
-        expr(s"shiftrightunsigned($sigCol, band * $BandBits)")
-          .bitwiseAND(lit((1L << BandBits) - 1)))
+      .withColumn("band_key", bandSlice(col(sigCol), col("band")))
+
+  /** The [[BandBits]]-bit slice of `sig` in band `band`. */
+  private def bandSlice(sig: Column, band: Column): Column =
+    call_function("shiftrightunsigned", sig, band * BandBits).bitwiseAND(lit((1L << BandBits) - 1))
+
+  /** The lowest band in which signatures `a` and `b` agree; null if none. */
+  private def lowestSharedBand(a: Column, b: Column): Column =
+    coalesce((0 until Bands).map(band =>
+      when(bandSlice(a.bitwiseXOR(b), lit(band)) === 0, band)): _*)
 
   /** Per-doc whole-document signatures from assembled raw text. */
   def docSignatures(assembled: DataFrame, k: Int): DataFrame =

@@ -229,12 +229,8 @@ object Splits {
     val exactC = in.join(bs, col("xhash") === col("base_xhash"))
       .select(col("doc_id"), lit(0).as("not_exact"),
         lit(0).cast("int").as("distance"), col("base_id"))
-    val nearC = LshDedup.bandedSigs(in, "sig")
-      .join(LshDedup.bandedSigs(bs, "base_sig"), Seq("band", "band_key"))
-      .filter(Exprs.hamming(col("sig"), col("base_sig")) <= threshold)
-      .select(col("doc_id"), lit(1).as("not_exact"),
-        Exprs.hamming(col("sig"), col("base_sig")).cast("int").as("distance"),
-        col("base_id"))
+    val nearC = LshDedup.bandPairs(in, "sig", bs, "base_sig", threshold)
+      .select(col("doc_id"), lit(1).as("not_exact"), col("distance"), col("base_id"))
     val best = exactC.unionByName(nearC)
       .groupBy(col("doc_id"))
       .agg(min(struct(col("not_exact"), col("distance"), col("base_id"))).as("m"))

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
-import graft.ops.{Exprs, LshDedup, Splits}
+import graft.ops.{LshDedup, Splits}
 
 /** Streaming NEAR-dup ingestion screen — the streaming twin of the q52
   * batch screen ([[graft.ops.Splits.incrementalNearDups]]), completing the
@@ -62,12 +62,9 @@ object StreamingScreen {
         lit(if (fromBatch) 1 else 0).as("from_batch"), col("m_id"))
     }
     def nearC(base: DataFrame, fromBatch: Boolean): DataFrame =
-      LshDedup.bandedSigs(sigs, "sig")
-        .join(LshDedup.bandedSigs(base, "m_sig"), Seq("band", "band_key"))
-        .filter(Exprs.hamming(col("sig"), col("m_sig")) <= threshold &&
-          (if (fromBatch) col("m_id") < col("doc_id") else lit(true)))
-        .select(col("doc_id"), lit(1).as("not_exact"),
-          Exprs.hamming(col("sig"), col("m_sig")).cast("int").as("distance"),
+      LshDedup.bandPairs(sigs, "sig", base, "m_sig", threshold,
+        where = if (fromBatch) col("m_id") < col("doc_id") else lit(true))
+        .select(col("doc_id"), lit(1).as("not_exact"), col("distance"),
           lit(if (fromBatch) 1 else 0).as("from_batch"), col("m_id"))
 
     val batchBase = mCols(sigs)

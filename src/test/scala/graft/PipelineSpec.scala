@@ -137,6 +137,72 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains(">= 0"))
   }
 
+  test("nearDupPairs == brute-force hamming as multisets: each pair exactly once (thresholds 0-7)") {
+    import spark.implicits._
+    import org.apache.spark.unsafe.types.UTF8String
+    // Spark orders string ids by their UTF-8 bytes; least/greatest follow it
+    def below(x: String, y: String) =
+      UTF8String.fromString(x).compareTo(UTF8String.fromString(y)) < 0
+    def sharedBands(x: Long, y: Long) =
+      (0 until LshDedup.Bands).count(b => ((x ^ y) >>> (b * LshDedup.BandBits) & 0xFF) == 0)
+    val names = Vector("doc", "café", "日本語", "𝔘𝔫𝔦", "naïve", "z")
+    for (threshold <- 0 to 7) {
+      val rnd = new scala.util.Random(threshold)
+      // variants of a few seeds, each with one bit flipped in 0-7 of its
+      // bytes: two variants of a seed share every band neither flipped (1
+      // to 8 bands when within range), and every seed appears three times
+      val sigList = Seq.fill(3)(rnd.nextLong()).flatMap { s =>
+        Seq(s, s, s) ++ Seq.fill(12)(rnd.shuffle((0 until 8).toList).take(rnd.nextInt(8))
+          .foldLeft(s)((x, byte) => x ^ (1L << (byte * 8 + rnd.nextInt(8)))))
+      }
+      val rows = sigList.zipWithIndex.map { case (s, i) => (s"${names(i % names.size)}$i", s) }
+      val want = (for {
+        i <- rows.indices
+        j <- rows.indices if i < j
+        ((x, sx), (y, sy)) = (rows(i), rows(j))
+        d = Hashing.hammingDistance(sx, sy) if d <= threshold
+      } yield if (below(x, y)) (x, y, d) else (y, x, d)).sorted
+      if (threshold > 0) assert(rows.exists { case (_, sx) => rows.exists { case (_, sy) =>
+        sx != sy && Hashing.hammingDistance(sx, sy) <= threshold && sharedBands(sx, sy) > 1 } },
+        s"fixture at threshold $threshold has no pair of distinct sigs sharing two bands")
+      val got = LshDedup.nearDupPairs(rows.toDF("doc_id", "sig"), threshold).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq.sorted
+      assert(got.length == got.distinct.length, s"threshold $threshold: a pair is emitted twice")
+      assert(got == want, s"threshold $threshold: got ${got.size} pairs, want ${want.size}")
+    }
+  }
+
+  test("nearDupPairs fails on a null doc_id; a null sig pairs with nothing") {
+    import spark.implicits._
+    // least/greatest skip nulls: unchecked, (null, b) came out as (b, b)
+    val nullId = Seq((null: String, 0L), ("b", 1L)).toDF("doc_id", "sig")
+    val e = intercept[Exception](LshDedup.nearDupPairs(nullId, 6).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("null doc_id")), e.toString)
+    val nullSig = Seq(("a", Some(0L)), ("b", None), ("c", Some(1L)), ("d", None))
+      .toDF("doc_id", "sig")
+    assert(LshDedup.nearDupPairs(nullSig, 6).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq == Seq(("a", "c", 1)))
+  }
+
+  test("nearDupPairs plans one aggregate, the distinct over sig, and no more exchanges") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val helper = new AdaptiveSparkPlanHelper {}
+    val sigs = Seq(("a", 0L), ("b", 1L), ("c", 1L), ("d", 3L << 20), ("e", -1L)).toDF("doc_id", "sig")
+    val df = LshDedup.nearDupPairs(sigs, 6)
+    assert(df.collect().length == 6)
+    val plan = df.queryExecution.executedPlan
+    val groupings = helper.collect(plan) { case a: BaseAggregateExec => a.groupingExpressions.map(_.name) }
+    val exchanges = helper.collect(plan) { case e: Exchange => e }
+    // the band join's output is already hash-partitioned by sig_a, so the
+    // pair distinct it replaces ran in the join's stage: no exchange goes
+    assert(groupings.nonEmpty && groupings.forall(_ == Seq("sig")), s"$groupings\n$plan")
+    assert(exchanges.size == 4, plan.toString)
+  }
+
   test("natural-sort key column reproduces kernel naturalSort ordering") {
     import spark.implicits._
     val names = Seq(

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * its owner), concurrent Spark jobs are run one way, through
   * `Bridge.concurrently`, Markdown is rendered one way, by the kernel, the
   * snapshot table does its IO through the Hadoop `FileSystem`, and the
-  * connected components build no keyed RDD aggregate or join.
+  * connected components build no keyed RDD aggregate or join, and the
+  * band join of the near-duplicate search has one owner.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -115,6 +116,19 @@ class SourceRulesSpec extends AnyFunSuite {
       if rule.findFirstIn(line).isDefined
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("keyed RDD aggregates or joins:\n", "\n", ""))
+  }
+
+  test("the (band, band_key) join is written once, in LshDedup.bandPairs") {
+    // one owner keeps one band layout, one Hamming filter and one
+    // lowest-shared-band rule, so no caller sees a pair once per band
+    val rule = """Seq\(\s*"band"\s*,\s*"band_key"\s*\)""".r
+    val hits = for {
+      f <- scalaFiles(Paths.get("src/main"))
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if rule.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.size == 1 && hits.head.startsWith("src/main/scala/graft/ops/LshDedup.scala:"),
+      hits.mkString("band joins:\n", "\n", ""))
   }
 
   private def scalaFiles(dir: Path): Seq[Path] = {
