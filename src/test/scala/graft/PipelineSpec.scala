@@ -197,8 +197,9 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     val plan = df.queryExecution.executedPlan
     val groupings = helper.collect(plan) { case a: BaseAggregateExec => a.groupingExpressions.map(_.name) }
     val exchanges = helper.collect(plan) { case e: Exchange => e }
-    // the band join's output is already hash-partitioned by sig_a, so the
-    // pair distinct it replaces ran in the join's stage: no exchange goes
+    // the band join's output is already hash-partitioned by sig_a, so a
+    // distinct over the pairs adds an aggregate but no exchange: the
+    // exchange count alone cannot catch one
     assert(groupings.nonEmpty && groupings.forall(_ == Seq("sig")), s"$groupings\n$plan")
     assert(exchanges.size == 4, plan.toString)
   }
